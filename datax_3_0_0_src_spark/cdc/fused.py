@@ -1,7 +1,7 @@
 """Single-pass micro-batch stage: validate + quarantine + stats + extract in
 ONE Arrow python stage riding the WAL scan.
 
-The classic pipeline runs TWO full scans of every micro-batch — one job for
+A two-job batch pipeline runs TWO full scans of every micro-batch — one job for
 the dirty-record quarantine (reads the whole ``html`` column to tag validity
 and carry raw payloads) and one for the extract→merge write. At 10^10 events
 the WAL is read twice and the driver plans/dispatches two jobs per batch. This
@@ -11,8 +11,8 @@ materialization; the round-7 upgrade of the previous pandas_udf, which built
 ~8M Python objects per 2M-row batch across its four string/binary input
 columns) rides the single scan and
 
-- extracts ``text`` for valid non-delete rows (the byte-identical invariant —
-  same ``extract_text_pd`` as the two-job path); validation itself stays
+- extracts ``text`` for valid non-delete rows (the byte-identical
+  invariant, checked against ``cdc.oracle``); validation itself stays
   JVM-side (``quarantine.reason_col``, codegen'd byte checks) and arrives as
   a precomputed ``_reason`` input column — the Python workers are the batch's
   critical resource and do ONLY the extraction plus cheap masking,
@@ -39,9 +39,9 @@ two-job variant was an artifact of Spark's one-sink-per-job model.
 
 DIRTY-FILE GRANULARITY (scale note): each task with >=1 dirty row writes one
 quarantine file per slice. At ~1% dirty that is one small file per task —
-same order as the classic path's (buckets+1) shuffled files for sandbox task
-counts, but at 10^5 tasks/slice it is more, smaller files; quarantine is an
-audit table, so fold it offline if it ever matters. Stats rows are a few
+same order as a bucket-partitioned write's (buckets+1) shuffled files at
+sandbox task counts, but at 10^5 tasks/slice it is more, smaller files;
+quarantine is an audit table, so fold it offline if it ever matters. Stats rows are a few
 hundred bytes each and are read driver-side once per batch.
 """
 
@@ -158,8 +158,8 @@ def fused_result_col(
                     },
                     schema=_dirty_schema(),
                 ))
-            # tombstones carry no payload: null html => null text, exactly as
-            # the classic path's when(is_del, NULL) before extraction; dirty
+            # tombstones carry no payload: null html => null text, as the
+            # streaming replay's when(is_del, NULL) before extraction; dirty
             # rows are filtered downstream, their text is never read
             drop = pc.or_(pc.fill_null(pc.equal(op, delete_op), False), dirty)
             masked = pc.if_else(drop, pa.scalar(None, html.type), html)

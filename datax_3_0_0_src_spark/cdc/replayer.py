@@ -17,6 +17,11 @@ core/src/main/java/com/alibaba/datax/core/job/JobContainer.java:100-202):
                          any batch is a no-op (TaskGroupContainer failover,
                          core/.../taskgroup/TaskGroupContainer.java:402-429)
 
+Every micro-batch runs one pipeline: ONE scan of its WAL slice carries
+validation + quarantine side-write, Arrow text extraction, and the MOR delta
+MERGE (cdc.fused); LWW resolves at read/compact time unless
+``dedup_per_batch`` asks for it per batch.
+
 Exactly-once protocol (the hard part, SURVEY §7.3):
   1. MERGE commits a lake snapshot whose properties embed (batch_id, end_offset).
   2. A checkpoint JSON for batch_id is then written atomically.
@@ -34,7 +39,7 @@ import re
 import threading
 import uuid
 import time
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -42,35 +47,9 @@ from pyspark.sql.types import StructType
 from ..lake.manifest import _atomic_write
 from ..lake.table import SYS_BUCKET, LakeTable
 from .dedup import dedup_lww
-from .extract import with_extracted_text
 from .quarantine import check_error_limits
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-# The measured high-throughput profile (BENCH.md): pipelined MOR micro-batches
-# with optimistic-CAS commits, Dataset.observe-folded lineage (one fewer Spark
-# job per batch), and deferred LWW dedup (the per-batch wide-row shuffle +
-# aggregation drops out; the SAME (ts, offset) winner rule applies at
-# read/compact). Soak-tested: the whole e2e suite runs under this profile via
-# ``CDC_PROFILE=throughput`` (see tests/test_replayer_e2e.py) and it is the
-# bench default. Use as ``ReplayConfig(..., **THROUGHPUT_PROFILE)``.
-THROUGHPUT_PROFILE: dict = {
-    "merge_mode": "mor",
-    "dedup_per_batch": False,
-    "lineage_level": "global",
-    # rate-capped micro-batches + pipeline depth 4: measured best 32-core
-    # apply among {whole-epoch×2, 2M×3, 1M×3, 1M×4, 500k×6, 2M×4} (BENCH.md
-    # round-3 continued — more, smaller batches keep a steady pipeline of
-    # scan/extract/write/commit phases overlapping; 500k is past the knee
-    # where per-batch fixed costs win). The cap is the sandbox-scale stand-in
-    # for the reference's channel speed limit; production batches at 10^10
-    # events would be ~10^8 with the same pipeline shape.
-    "max_events_per_batch": 1_000_000,
-    "max_concurrent_batches": 4,
-    "compact_concurrency": 4,
-    "compact_strategy": "local",
-    "single_pass": True,
-}
 
 
 @dataclass
@@ -79,39 +58,41 @@ class ReplayConfig:
     table_path: str                   # target LakeTable (created if missing)
     work_dir: str                     # checkpoints/, quarantine/, metrics/
     num_buckets: int = 16             # used at table CREATION; existing tables keep theirs
-    max_events_per_batch: int | None = None  # rate cap: split epochs into sub-batches
-    salt_partitions: int | None = None       # two-phase dedup for hot keys
+    # rate cap: split epochs into sub-batches of at most this many events
+    # (None = whole-epoch batches). 1M with pipeline depth 4 measured best
+    # 32-core apply among {whole-epoch x2, 2M x3, 1M x3, 1M x4, 500k x6,
+    # 2M x4} (BENCH.md round 3): more, smaller batches keep scan, extract,
+    # write and commit phases overlapping; at 500k per-batch fixed costs win.
+    max_events_per_batch: int | None = 1_000_000
+    # two-phase dedup for hot keys; needs dedup_per_batch=True
+    salt_partitions: int | None = None
     error_record_limit: int | None = None
     error_percentage_limit: float | None = 0.05
-    verbose: bool = False  # print per-phase wall times per micro-batch
     key: str = "url"
     ts_col: str = "warc_ts"
     seq_col: str = "log_offset"
     op_col: str = "op"
     extra_table_props: dict = field(default_factory=dict)
-    # merge strategy: "mor" (delta files, O(batch) writes — the scale default)
-    # or "cow" (rewrite touched buckets per batch)
-    merge_mode: str = "mor"
-    # MOR only: skip the per-batch LWW dedup aggregation and write all valid
-    # events as delta rows — the SAME last-writer-wins (ts, offset) rule is
-    # applied at read/compact-time resolution, so the final state is
-    # identical (tested), but the batch pipeline drops a whole-batch shuffle
-    # + aggregation of wide binary rows. Keep True when batches carry high
-    # duplicate ratios (delta size) or when feeding a COW table.
-    dedup_per_batch: bool = True
-    # MOR only: pipeline N micro-batches concurrently (driver thread pool;
-    # Spark schedules their jobs side by side). Safe because MOR delta
-    # layering is commit-order-free (LWW comes from (ts, offset) in the data)
-    # and the manifest commit is an optimistic-retry CAS. Amortizes per-batch
-    # fixed costs (job scheduling, commit, Python dispatch) across batches.
-    max_concurrent_batches: int = 1
+    # False: write all valid events as delta rows — the SAME last-writer-wins
+    # (ts, offset) rule is applied at read/compact-time resolution, so the
+    # final state is identical (tested), and the batch's one exchange moves
+    # below the Arrow extraction (see _run_batch_fused). True adds a
+    # whole-batch LWW aggregation; worth it only when batches carry high
+    # duplicate ratios (delta size).
+    dedup_per_batch: bool = False
+    # pipeline N micro-batches concurrently (driver thread pool; Spark
+    # schedules their jobs side by side). Safe because MOR delta layering is
+    # commit-order-free (LWW comes from (ts, offset) in the data) and the
+    # manifest commit is an optimistic-retry CAS. Amortizes per-batch fixed
+    # costs (job scheduling, commit, Python dispatch) across batches.
+    max_concurrent_batches: int = 4
     compact_every: int | None = None   # fold MOR deltas every N batches
     compact_target_files: int = 2      # files/bucket after a fold
-    compact_concurrency: int = 1       # parallel bucket-group folds (lake.compact)
+    compact_concurrency: int = 4       # parallel bucket-group folds (lake.compact)
     # "shuffle" | "local" (zero-exchange pyarrow rewrite fold) | "dv"
     # (delete-vector minor fold: LWW resolved via positional-delete sidecars,
     # no data rewrite — see LakeTable._fold_dv)
-    compact_strategy: str = "shuffle"
+    compact_strategy: str = "local"
     # pipelined mode only: run the compact_every folds in a BACKGROUND thread
     # overlapped with the still-running batches instead of serializing them
     # after the last commit. Safe by construction: _commit_fold re-layers
@@ -136,24 +117,6 @@ class ReplayConfig:
     batch_timeout_s: float | None = None   # F13: cancel a wedged batch (watchdog)
     report_interval_s: float | None = None  # F11: periodic counter reporting
     report_sink: object = None              # callable(str); default print
-    # lineage granularity: "bucket" = exact per-bucket read/dedup counts via a
-    # dedicated aggregation pass (CommunicationTool per-task parity);
-    # "global" = Dataset.observe piggybacked on the quarantine write — one
-    # fewer Spark job per batch; per-bucket applied/quarantined still exact
-    # (parquet footers), read/deduped kept as batch-global rows.
-    # NOTE: single_pass=True implies "global" — the fused stage has no
-    # separate aggregation pass to produce per-bucket read/dedup counts, so
-    # Replayer.__init__ normalizes this field to "global" (with a warning if
-    # "bucket" was requested explicitly alongside single_pass).
-    lineage_level: str = "bucket"
-    # single-pass micro-batches (cdc.fused): validation, quarantine side-write,
-    # stats, and Arrow extraction all ride ONE scan of the batch — the classic
-    # pipeline's separate quarantine job (a second full scan of the html
-    # column, plus a driver job dispatch) drops out. Requires merge_mode="mor";
-    # the error-limit check moves to a pre-commit hook (abort still commits
-    # nothing). Lineage granularity matches "global" (exact per-bucket
-    # applied/quarantined counts, batch-global read/dedup/bytes).
-    single_pass: bool = False
     # validation rule: callable (op_col, delete_op) -> Column returning NULL
     # for valid rows / a reason string for dirty ones (quarantine.reason_col
     # signature). Swappable so a rule FIX can be followed by
@@ -174,6 +137,12 @@ class ReplayConfig:
         return os.path.join(self.work_dir, "metrics")
 
 
+# bench.py is frozen and still reads these two keys; nothing else uses this.
+THROUGHPUT_PROFILE: dict = {
+    k: getattr(ReplayConfig, k) for k in ("compact_concurrency", "compact_strategy")
+}
+
+
 @dataclass
 class BatchResult:
     batch_id: int
@@ -191,8 +160,8 @@ class Replayer:
     def __init__(self, spark: SparkSession, cfg: ReplayConfig):
         self.spark = spark
         self.cfg = cfg
-        # per-batch phase timelines (fused path): reviewable serial breakdown,
-        # surfaced by bench.py into the artifact
+        # per-batch phase timelines: reviewable serial breakdown, surfaced by
+        # bench.py into the artifact
         self.batch_timelines: list[dict] = []
         # per-epoch DataFrame memo: WAL epoch dirs are immutable once logged
         # (segments roll to NEW epoch dirs), so the listing + footer schema
@@ -208,33 +177,10 @@ class Replayer:
         # once by plan_batches (single-threaded), read-only under the pool.
         self._epoch_file_stats: dict[int, list[tuple[str, int, int]]] = {}
         self._epoch_cache_lock = threading.Lock()
-        if not cfg.dedup_per_batch and cfg.merge_mode != "mor":
+        if cfg.salt_partitions and not cfg.dedup_per_batch:
             raise ValueError(
-                "dedup_per_batch=False requires merge_mode='mor' (COW's "
-                "full-outer merge join needs at most one row per key)"
-            )
-        if cfg.single_pass and cfg.merge_mode != "mor":
-            raise ValueError(
-                "single_pass=True requires merge_mode='mor' (the COW plan "
-                "pass re-evaluates the batch; fused side-effects must run "
-                "exactly one scan)"
-            )
-        if cfg.single_pass and cfg.lineage_level == "bucket":
-            # the fused stage emits global-granularity lineage only (no
-            # dedicated per-bucket aggregation pass rides the single scan);
-            # normalize so metrics() consumers see the shape that will
-            # actually be produced instead of silently getting it
-            import warnings
-
-            warnings.warn(
-                "single_pass=True forces lineage_level='global' (fused "
-                "batches cannot produce per-bucket read/dedup counts); "
-                "normalizing", stacklevel=2)
-            cfg = self.cfg = replace(cfg, lineage_level="global")
-        if cfg.max_concurrent_batches > 1 and cfg.merge_mode != "mor":
-            raise ValueError(
-                "max_concurrent_batches>1 requires merge_mode='mor' (COW "
-                "rewrites shared bucket files; MOR deltas are disjoint)"
+                "salt_partitions needs dedup_per_batch=True (salting splits "
+                "the per-batch LWW dedup; without that dedup it does nothing)"
             )
         if cfg.compact_overlap and not cfg.compact_every:
             raise ValueError(
@@ -735,16 +681,16 @@ class Replayer:
             from .monitor import HungTaskGuard
 
             with HungTaskGuard(self.spark, cfg.batch_timeout_s, f"cdc-batch-{batch_id}"):
-                return self._run_batch_inner(batch_id, epoch, sub, lo, hi)
-        return self._run_batch_inner(batch_id, epoch, sub, lo, hi)
+                return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
+        return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
 
     def _run_batch_fused(
         self, batch_id: int, epoch: int, sub: int,
         lo: int | None, hi: int | None,
     ) -> BatchResult:
-        """Single-pass batch (cfg.single_pass): ONE scan carries validation,
-        quarantine + stats side-writes, Arrow extraction, and the delta write
-        (cdc.fused). The error-limit gate runs as the merge's pre-commit hook:
+        """One micro-batch, single pass: ONE scan carries validation,
+        quarantine + stats side-writes, Arrow extraction, and the MOR delta
+        write (cdc.fused). The error-limit gate runs as the merge's pre-commit hook:
         counts only exist after the job, but an abort still commits nothing
         (the written delta dir is an unreferenced orphan)."""
         import shutil
@@ -889,270 +835,39 @@ class Replayer:
         os.makedirs(mpath, exist_ok=True)
         pq.write_table(mtable, os.path.join(mpath, "part-0.parquet"))
 
-    def _run_batch_inner(
-        self, batch_id: int, epoch: int, sub: int,
-        lo: int | None, hi: int | None,
-    ) -> BatchResult:
-        cfg = self.cfg
-        if cfg.single_pass:
-            return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
-        t0 = time.monotonic()
-        if lo is not None:
-            # rate cap: offset-range slice — file-pruned scan when footer
-            # stats exist (predicate still applied; file ranges overlap at
-            # boundaries), else the epoch DF with pushdown only
-            sliced = self._slice_df(epoch, lo, hi)
-            ev = (sliced.withColumn("epoch", F.lit(epoch))
-                  if sliced is not None else self.read_epoch(epoch))
-            ev = ev.filter((F.col(cfg.seq_col) >= lo) & (F.col(cfg.seq_col) < hi))
-        else:
-            ev = self.read_epoch(epoch)
-
-        nb = self.table.num_buckets  # the table's persisted count, NOT cfg's
-        bucket = F.when(
-            F.col(cfg.key).isNull(), F.lit(-1)
-        ).otherwise(F.pmod(F.xxhash64(F.col(cfg.key)), F.lit(nb)).cast("int"))
-        # NB: deliberately NOT cached. Caching these wide binary rows in the
-        # columnar in-memory store anti-scales badly at high core counts
-        # (measured 2.4x slowdown at local[32]); the parquet re-scan is cheap
-        # (pushdown + page cache) and scales linearly.
-        ev = ev.withColumn(SYS_BUCKET, bucket)
-        tick = time.monotonic()
-
-        def lap(label: str) -> None:
-            nonlocal tick
-            now = time.monotonic()
-            if cfg.verbose:
-                print(f"[replayer] batch={batch_id} {label}={now - tick:.2f}s", flush=True)
-            tick = now
-
-        try:
-            from .quarantine import reason_col
-
-            rule = cfg.validity_rule or reason_col
-            tagged = ev.withColumn("_reason", rule(cfg.op_col, "D"))
-            clean = tagged.filter(F.col("_reason").isNull()).drop("_reason")
-            dirty_src = tagged
-            obs = None
-            if cfg.lineage_level == "global":
-                # Dataset.observe rides the quarantine write: the observation
-                # node sits ABOVE the dirty filter, so it counts every event
-                # that flows past — the whole stat pass collapses into metrics
-                # of a job we were running anyway (one fewer job per batch)
-                from pyspark.sql import Observation
-
-                obs = Observation(f"batch-{batch_id}-stats")
-                dirty_src = tagged.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("events_read"),
-                    F.sum(F.when(F.col("_reason").isNotNull(), 1).otherwise(0)).alias("n_dirty"),
-                    F.sum(F.octet_length("html")).alias("bytes_in"),
-                )
-            dirty = dirty_src.filter(F.col("_reason").isNotNull()).withColumnRenamed(
-                "_reason", "reason"
-            )
-
-            # ---- quarantine (idempotent: fixed path per SLICE, overwrite;
-            # bucket-partitioned so per-bucket dirty counts are footer reads).
-            # Keyed by (epoch, sub) like the checkpoints — batch ids are
-            # run-relative and shift when an out-of-order epoch arrives
-            # between runs, which would silently clobber an earlier batch's
-            # dirty-record audit trail at the reused id. Overwrite stays
-            # correct: re-running the SAME slice is idempotent. --------------
-            qpath = os.path.join(cfg.quarantine_dir, f"slice={epoch}-{sub}")
-            # repartition on the bucket BEFORE the partitioned write: without
-            # it every scan task spills a file into every bucket dir it saw
-            # (tasks x buckets tiny files — measured 2x slower at local[32]
-            # than local[8]); dirty rows are rare, so this shuffle is tiny
-            # while the observe node above still rides the full scan
-            (dirty.select(
-                F.col(cfg.seq_col).alias("log_offset"),
-                F.lit(epoch).alias("epoch"),
-                F.col(cfg.key).alias("url"),
-                "reason",
-                F.col("html").alias("raw_payload"),
-                F.col(SYS_BUCKET),
-            ).repartition(self.table.num_buckets + 1, F.col(SYS_BUCKET))
-             .write.mode("overwrite").partitionBy(SYS_BUCKET).parquet(qpath))
-            lap("quarantine_write")
-
-            if cfg.lineage_level == "global":
-                got = obs.get
-                events_read = int(got["events_read"])
-                dirty_count = int(got["n_dirty"] or 0)
-                bytes_in = int(got["bytes_in"] or 0)
-                stat = None
-            else:
-                # ---- per-partition read/dirty/bytes (+ plan counts, cow) ---
-                # For COW, count_distinct(valid url) per bucket == exactly the
-                # post-LWW winner count per bucket, so the MERGE can skip its
-                # own planning pass and evaluate the Arrow-UDF pipeline once.
-                # MOR never needs a plan (counts come from written footers).
-                valid = rule(cfg.op_col, "D").isNull()
-                aggs = [
-                    F.count(F.lit(1)).alias("events_read"),
-                    F.sum(F.when(~valid, 1).otherwise(0)).alias("n_dirty"),
-                    F.sum(F.octet_length("html")).alias("bytes_in"),
-                ]
-                if cfg.merge_mode == "cow":
-                    aggs.append(
-                        F.count_distinct(F.when(valid, F.col(cfg.key))).alias("n_winners")
-                    )
-                stat = ev.groupBy(SYS_BUCKET).agg(*aggs).collect()
-                lap("stat_agg")
-                events_read = int(sum(r["events_read"] for r in stat))
-                dirty_count = int(sum(r["n_dirty"] for r in stat))
-            check_error_limits(
-                dirty_count, events_read,
-                record_limit=cfg.error_record_limit,
-                percentage_limit=cfg.error_percentage_limit,
-            )
-
-            # ---- extract text (scan-side) -> LWW dedup -> MERGE ------------
-            # Extraction runs BEFORE the dedup shuffle: Arrow python stages fed
-            # straight from the columnar scan scale near-linearly, while the
-            # same UDF fed from a shuffle read anti-scales at high core counts
-            # (measured 8x). The extra work on soon-to-lose duplicate events
-            # (~15%/batch) is far cheaper than the post-shuffle python penalty.
-            is_del = F.col(cfg.op_col) == F.lit("D")
-            enriched = with_extracted_text(
-                clean.withColumn("html", F.when(is_del, None).otherwise(F.col("html")))
-            )
-            if cfg.dedup_per_batch:
-                winners = dedup_lww(
-                    enriched, key=cfg.key, ts_col=cfg.ts_col, seq_col=cfg.seq_col,
-                    salt_partitions=cfg.salt_partitions,
-                ).drop(SYS_BUCKET, "epoch")
-            else:
-                # MOR fast path: all valid events become delta rows; LWW
-                # resolution happens at read/compact (same winner rule)
-                winners = enriched.drop(SYS_BUCKET, "epoch")
-
-            plan = None
-            if cfg.merge_mode == "cow" and stat is not None:
-                plan = {
-                    int(r[SYS_BUCKET]): int(r["n_winners"])
-                    for r in stat
-                    if r[SYS_BUCKET] is not None and int(r[SYS_BUCKET]) >= 0
-                }
-            stats = self.table.merge(
-                winners,
-                seq_col=cfg.seq_col,
-                op_col=cfg.op_col,
-                plan_rows_per_bucket=plan,
-                mode=cfg.merge_mode,
-                properties={
-                    "last_batch_id": batch_id,
-                    "last_epoch": epoch,
-                    "last_sub": sub,
-                    self._committed_prop_key(epoch, sub): batch_id,
-                    # GC bookkeeping keys whose checkpoints are already durable
-                    **self._committed_prop_prunes(),
-                },
-            )
-            applied = stats.batch_rows
-            lap("merge")
-
-            # ---- lineage/metrics keyed (partition_id, checkpoint_epoch) ---
-            # derived from aggs/observations/footers above — no extra Spark jobs
-            dur_ms = int((time.monotonic() - t0) * 1000)
-            win_per_bucket = stats.rows_per_bucket or {}
-            rows = []
-            if stat is not None:
-                for r in sorted(stat, key=lambda r: r[SYS_BUCKET]):
-                    b = int(r[SYS_BUCKET])
-                    read_n, n_dirty = int(r["events_read"]), int(r["n_dirty"])
-                    wins = int(win_per_bucket.get(b, 0))
-                    rows.append((
-                        b, batch_id, epoch, read_n, wins,
-                        read_n - n_dirty - wins, n_dirty,
-                        int(r["bytes_in"] or 0), dur_ms,
-                    ))
-            else:
-                # global lineage: per-bucket applied from the merge's delta
-                # footers, per-bucket quarantined from the quarantine footers,
-                # read/deduped/bytes as one batch-global row (partition -1)
-                dirty_per_bucket = self._dir_bucket_counts(qpath)
-                buckets = sorted(set(win_per_bucket) | {
-                    b for b in dirty_per_bucket if b >= 0
-                })
-                for b in buckets:
-                    rows.append((
-                        b, batch_id, epoch, 0, int(win_per_bucket.get(b, 0)),
-                        0, int(dirty_per_bucket.get(b, 0)), 0, dur_ms,
-                    ))
-                rows.append((
-                    -1, batch_id, epoch, events_read, 0,
-                    events_read - dirty_count - applied,
-                    int(dirty_per_bucket.get(-1, 0)), bytes_in, dur_ms,
-                ))
-            # tiny table: write driver-side via pyarrow (no Spark job)
-            self._write_metrics_slice(rows, epoch, sub)
-            lap("metrics_write")
-
-            res = BatchResult(
-                batch_id=batch_id, epoch=epoch, sub=sub,
-                events_read=events_read, events_quarantined=dirty_count,
-                events_deduped=events_read - dirty_count - applied,
-                events_applied=applied, snapshot_version=stats.version,
-                duration_s=time.monotonic() - t0,
-            )
-            self._write_checkpoint(res)
-            return res
-        finally:
-            pass
-
-    @staticmethod
-    def _dir_bucket_counts(path: str) -> dict[int, int]:
-        """{bucket: row_count} from a bucket-partitioned dir's parquet footers
-        (driver-side metadata reads, no Spark job)."""
-        import pyarrow.parquet as pq
-
-        out: dict[int, int] = {}
-        if not os.path.isdir(path):
-            return out
-        for d in os.listdir(path):
-            if not d.startswith(f"{SYS_BUCKET}="):
-                continue
-            raw = d.split("=", 1)[1]
-            b = -1 if raw == "__HIVE_DEFAULT_PARTITION__" else int(raw)
-            n = 0
-            sub = os.path.join(path, d)
-            for fn in os.listdir(sub):
-                if fn.endswith(".parquet"):
-                    n += pq.ParquetFile(os.path.join(sub, fn)).metadata.num_rows
-            out[b] = out.get(b, 0) + n
-        return out
-
     # ------------------------------------------------------------- reading
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.cfg.metrics_dir, "slice=*"))
 
     def quarantine(self) -> DataFrame:
-        # basePath: slice= (and, classic layout, bucket=) partition levels
-        # under the root; fused slices keep bucket as a data column and hide
-        # their _stats sidecars behind the underscore prefix. A run with zero
-        # dirty rows has no data files at all — return a typed empty frame.
-        # One stable schema regardless of layout/config: the classic layout's
-        # `_bucket` partition column is renamed to `bucket` so consumers see
-        # the same column name the fused layout (and the empty frame) carry.
+        # basePath: slice= (and, in work dirs written by the retired two-job
+        # batch pipeline, _bucket=) partition levels under the root; fused
+        # slices keep bucket as a data column and hide their _stats sidecars
+        # behind the underscore prefix. A run with zero dirty rows has no
+        # data files at all — return a typed empty frame. One stable schema
+        # regardless of layout: the old layout's `_bucket` partition column
+        # is renamed to `bucket` so consumers see the same column name the
+        # fused layout (and the empty frame) carry. The two layouts are read
+        # apart: a work dir resumed across the change holds both, and one
+        # partition discovery over mixed depths fails.
         import glob
 
         q = self.cfg.quarantine_dir
-        if not glob.glob(
-            os.path.join(q, "slice=*", f"{SYS_BUCKET}=*", "*.parquet")
-        ) and not glob.glob(os.path.join(q, "slice=*", "*.parquet")):
+        flat = sorted({os.path.dirname(p) for p in glob.glob(
+            os.path.join(q, "slice=*", "*.parquet"))})
+        old = sorted({os.path.dirname(os.path.dirname(p)) for p in glob.glob(
+            os.path.join(q, "slice=*", f"{SYS_BUCKET}=*", "*.parquet"))})
+        if not flat and not old:
             return self.spark.createDataFrame(
                 [], "log_offset long, epoch int, url string, reason string, "
                     "raw_payload binary, slice string, bucket int"
             )
-        df = (
-            self.spark.read.option("basePath", self.cfg.quarantine_dir)
-            .parquet(os.path.join(self.cfg.quarantine_dir, "slice=*"))
-        )
-        if SYS_BUCKET in df.columns:
-            df = df.withColumnRenamed(SYS_BUCKET, "bucket")
-        return df.withColumn("bucket", F.col("bucket").cast("int"))
+        reader = self.spark.read.option("basePath", q)
+        parts = [reader.parquet(*flat)] if flat else []
+        if old:
+            parts.append(reader.parquet(*old).withColumnRenamed(SYS_BUCKET, "bucket"))
+        parts = [df.withColumn("bucket", F.col("bucket").cast("int")) for df in parts]
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def fold_quarantine(self, *, concurrency: int = 4) -> dict:
         """Fold each quarantine slice's many per-task dirty files into one

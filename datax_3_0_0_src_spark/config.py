@@ -125,10 +125,14 @@ def run_cdc_job(spark: SparkSession, spec: JobSpec | dict | str, *, hooks: list 
 
       reader  = {"name": "eventlog", "parameter": {"path": <WAL dir>}}
       writer  = {"name": "lake", "parameter": {"path", "workDir"?, "numBuckets"?,
-                 "mergeMode"?, "saltPartitions"?, "lineageLevel"?}}
+                 "saltPartitions"?}}
       setting.speed.record      -> max_events_per_batch (channel flow control,
                                    Channel.statPush semantics)
       setting.errorLimit.record/percentage -> quarantine abort thresholds
+
+    ``saltPartitions`` turns on the per-batch salted LWW dedup. The retired
+    ``mergeMode`` (only "mor" remains) and ``lineageLevel`` (only "global"
+    remains) keys are rejected when they ask for a removed mode.
 
     Returns the list of BatchResults (resume-safe: re-running the same job
     JSON continues from the last committed (epoch, sub))."""
@@ -140,6 +144,11 @@ def run_cdc_job(spark: SparkSession, spec: JobSpec | dict | str, *, hooks: list 
         spec = JobSpec.from_json(json.dumps(spec))
     rp = spec.reader.get("parameter", {})
     wp = spec.writer.get("parameter", {})
+    for k, only in (("mergeMode", "mor"), ("lineageLevel", "global")):
+        if wp.get(k, only) != only:
+            raise ValueError(
+                f"writer parameter {k}={wp[k]!r} is no longer supported; "
+                f"the replay engine only runs {k}={only!r}")
     cfg = ReplayConfig(
         log_dir=rp["path"],
         table_path=wp["path"],
@@ -147,10 +156,9 @@ def run_cdc_job(spark: SparkSession, spec: JobSpec | dict | str, *, hooks: list 
         num_buckets=wp.get("numBuckets", 16),
         max_events_per_batch=spec.speed.get("record"),
         salt_partitions=wp.get("saltPartitions"),
+        dedup_per_batch=bool(wp.get("saltPartitions")),
         error_record_limit=spec.error_limit.get("record"),
         error_percentage_limit=spec.error_limit.get("percentage", 0.05),
-        merge_mode=wp.get("mergeMode", "mor"),
-        lineage_level=wp.get("lineageLevel", "bucket"),
         key=wp.get("key", "url"),
         ts_col=wp.get("tsCol", "warc_ts"),
     )

@@ -771,7 +771,6 @@ class LakeTable:
         op_col: str | None = "op",
         delete_op: str = "D",
         properties: dict | None = None,
-        plan_rows_per_bucket: dict[int, int] | None = None,
         mode: str | None = None,
         pre_commit=None,
         pre_partitioned: bool = False,
@@ -796,12 +795,6 @@ class LakeTable:
         (O(batch) writes, zero table reads — resolution deferred to
         read()/compact()). Default comes from the table property
         ``merge_mode`` (itself defaulting to "cow").
-
-        ``plan_rows_per_bucket``: optional precomputed {bucket: row_count} for
-        the batch (e.g. from an upstream per-partition stat pass). COW-only:
-        when given, the planning aggregation is skipped and the batch pipeline
-        is evaluated exactly once. MOR never needs a plan (per-bucket counts
-        come free from the written parquet footers).
 
         ``pre_commit``: optional zero-arg callable invoked AFTER the batch's
         data files are written but BEFORE the manifest commit. Raising from it
@@ -869,22 +862,12 @@ class LakeTable:
         if mode == "mor":
             return self._merge_mor(snap, s, key, user_schema, properties,
                                    pre_commit, pre_partitioned)
-        if plan_rows_per_bucket is not None:
-            per_bucket = {int(b): int(n) for b, n in plan_rows_per_bucket.items() if n}
-            bad = [b for b in per_bucket if not 0 <= b < nb]
-            if bad:
-                raise ValueError(
-                    f"plan_rows_per_bucket keys {bad} outside range(0, {nb}) — "
-                    f"plan was built with a different bucket count than the table's"
-                )
-            batch_deletes = -1  # unknown without the agg; metrics use the plan
-        else:
-            agg = s.groupBy(SYS_BUCKET).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col(SYS_DELETED).cast("long")).alias("d"),
-            ).collect()
-            per_bucket = {int(r[SYS_BUCKET]): int(r["n"]) for r in agg}
-            batch_deletes = int(sum(r["d"] for r in agg))
+        agg = s.groupBy(SYS_BUCKET).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col(SYS_DELETED).cast("long")).alias("d"),
+        ).collect()
+        per_bucket = {int(r[SYS_BUCKET]): int(r["n"]) for r in agg}
+        batch_deletes = int(sum(r["d"] for r in agg))
         touched = sorted(per_bucket)
         batch_rows = int(sum(per_bucket.values()))
         if not touched and pre_commit is not None:
@@ -960,7 +943,8 @@ class LakeTable:
         if stray:
             raise RuntimeError(
                 f"merge wrote buckets {stray} outside the planned set {touched} — "
-                f"plan_rows_per_bucket disagrees with the table's bucket assignment"
+                f"the batch re-evaluated to other keys than its planning pass "
+                f"(non-deterministic input?)"
             )
         if pre_commit is not None:
             pre_commit()  # raising here aborts with no snapshot (orphan files)

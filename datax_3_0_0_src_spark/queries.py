@@ -111,8 +111,9 @@ _REPLAY_BASE = os.path.join(tempfile.gettempdir(), "cdc_replay_snapshot_42_20000
 
 def cdc_replay_snapshot(spark, sf_dir):
     """Flagship: full engine replay of a deterministic synthetic WAL (the
-    BASELINE input_hint pages table): validate -> quarantine -> LWW dedup ->
-    Arrow text extraction -> lake MERGE over 4 epochs, resume-safe. The final
+    BASELINE input_hint pages table): validate -> quarantine -> Arrow text
+    extraction -> MOR delta MERGE over 4 epochs, LWW resolved at read,
+    resume-safe. The final
     (url, warc_ts, lang) state has an exact DuckDB twin over the same WAL
     parquet (validity predicate + LWW window + delete filter); the byte-exact
     ``text`` invariant is enforced by tests/test_replayer_e2e.py."""
@@ -172,17 +173,17 @@ CDC_REPLAY_FUSED_SQL = _replay_oracle_sql(_REPLAY_FUSED_BASE)
 
 
 def cdc_replay_fused(spark, sf_dir):
-    """Flagship variant under the bench THROUGHPUT_PROFILE: single-pass fused
-    stage (one scan carries validation, executor-side quarantine/stats
-    side-writes, Arrow extraction — cdc/fused.py), pipelined MOR micro-batches
-    with optimistic-CAS commits, deferred LWW dedup, then a zero-exchange
-    local compaction fold. Same DuckDB oracle as cdc_replay_snapshot over its
-    own WAL — the high-throughput path and the classic two-job path must
-    converge to the identical final state, hash-exact."""
+    """Flagship variant with a rewrite fold: the default replay (single-pass
+    fused stage — one scan carries validation, executor-side quarantine/stats
+    side-writes, Arrow extraction, cdc/fused.py — over pipelined MOR
+    micro-batches with optimistic-CAS commits and deferred LWW dedup), then a
+    zero-exchange local compaction fold. Same DuckDB oracle as
+    cdc_replay_snapshot over its own WAL — the folded table must match the
+    LWW state hash-exact."""
     import shutil
 
     from .cdc.gen import EventGenConfig, write_event_log
-    from .cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+    from .cdc.replayer import ReplayConfig, Replayer
 
     cfg = EventGenConfig(seed=42, n_events=20_000, events_per_epoch=5_000)
     base = _REPLAY_FUSED_BASE
@@ -198,13 +199,12 @@ def cdc_replay_fused(spark, sf_dir):
             table_path=os.path.join(base, "pages"),
             work_dir=os.path.join(base, "work"),
             num_buckets=16,
-            **THROUGHPUT_PROFILE,
         ),
     )
     rep.run()
     rep.table.compact(target_files_per_bucket=2,
-                      concurrency=THROUGHPUT_PROFILE["compact_concurrency"],
-                      strategy=THROUGHPUT_PROFILE["compact_strategy"])
+                      concurrency=rep.cfg.compact_concurrency,
+                      strategy=rep.cfg.compact_strategy)
     return rep.table.read().select("url", "warc_ts", "lang")
 
 
@@ -333,10 +333,6 @@ def cdc_changes_feed(spark, sf_dir):
             table_path=os.path.join(base, "pages"),
             work_dir=os.path.join(base, "work"),
             num_buckets=16,
-            merge_mode="mor",
-            dedup_per_batch=False,
-            single_pass=True,
-            lineage_level="global",
         ),
     )
     rep.run()
@@ -393,10 +389,6 @@ def cdc_incremental_mv(spark, sf_dir):
             table_path=os.path.join(base, "pages"),
             work_dir=os.path.join(base, "work"),
             num_buckets=16,
-            merge_mode="mor",
-            dedup_per_batch=False,
-            single_pass=True,
-            lineage_level="global",
         ),
     )
     rep.run()

@@ -1,6 +1,6 @@
-"""Single-pass (fused) micro-batch pipeline: state parity with the classic
-two-job path, quarantine/stats side-write correctness, pre-commit error-limit
-abort, resume, and the one-python-eval plan invariant."""
+"""Single-pass (fused) micro-batch pipeline: oracle parity, quarantine/stats
+side-write correctness, pre-commit error-limit abort, resume, and the
+one-python-eval plan invariant."""
 
 from __future__ import annotations
 
@@ -14,9 +14,6 @@ from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 
 from test_replayer_e2e import CFG, assert_state_matches
 
-FUSED = dict(merge_mode="mor", dedup_per_batch=False, lineage_level="global",
-             single_pass=True)
-
 
 @pytest.fixture()
 def log_and_work(spark, tmp_path):
@@ -27,8 +24,7 @@ def log_and_work(spark, tmp_path):
 
 def make(spark, log_dir, work, table, **kw) -> Replayer:
     return Replayer(spark, ReplayConfig(
-        log_dir=log_dir, work_dir=work, table_path=table, num_buckets=8,
-        **{**FUSED, **kw}))
+        log_dir=log_dir, work_dir=work, table_path=table, num_buckets=8, **kw))
 
 
 def test_fused_replay_matches_oracle_and_counts(spark, log_and_work):
@@ -55,22 +51,6 @@ def test_fused_replay_matches_oracle_and_counts(spark, log_and_work):
         m.loc[m.partition_id >= 0, "events_applied"].sum()
         == sum(r.events_applied for r in results)
     )
-
-
-def test_fused_state_identical_to_classic(spark, log_and_work):
-    log_dir, work, table = log_and_work
-    classic = Replayer(spark, ReplayConfig(
-        log_dir=log_dir, work_dir=work + "_c", table_path=table + "_c",
-        num_buckets=8))
-    classic.run()
-    fused = make(spark, log_dir, work, table)
-    fused.run()
-    c = classic.table.read().toPandas().sort_values("url").reset_index(drop=True)
-    f = fused.table.read().toPandas().sort_values("url").reset_index(drop=True)
-    assert list(c["url"]) == list(f["url"])
-    assert list(c["text"]) == list(f["text"])
-    assert list(c["html"].map(lambda b: None if b is None else bytes(b))) == \
-        list(f["html"].map(lambda b: None if b is None else bytes(b)))
 
 
 def test_fused_error_limit_aborts_before_commit(spark, log_and_work):
@@ -178,20 +158,46 @@ def test_quarantine_requeue_after_rule_fix(spark, log_and_work):
 
 def test_quarantine_schema_stable_across_layouts(spark, log_and_work):
     """ADVICE round-3: quarantine() must surface ONE schema (`bucket` int)
-    whether the slices were written by the classic layout (partition column
-    `_bucket`), the fused layout (data column), or nobody (typed empty)."""
+    whether the slices were written by the old two-job batch pipeline
+    (partition column `_bucket`, written here with pyarrow), the fused
+    layout (data column), both (a work dir resumed across the change), or
+    nobody (typed empty)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datax_3_0_0_src_spark.lake.table import SYS_BUCKET
+
     log_dir, work, table = log_and_work
-    classic = Replayer(spark, ReplayConfig(
+
+    def write_old_slice(rep, sl):
+        leaf = os.path.join(rep.cfg.quarantine_dir, f"slice={sl}", f"{SYS_BUCKET}=3")
+        os.makedirs(leaf)
+        pq.write_table(pa.table({
+            "log_offset": pa.array([7], pa.int64()),
+            "epoch": pa.array([0], pa.int32()),
+            "url": pa.array(["https://old.example/"]),
+            "reason": pa.array(["bad_html"]),
+            "raw_payload": pa.array([b"<garbage>"], pa.binary()),
+        }), os.path.join(leaf, "part-00000.parquet"))
+
+    old = Replayer(spark, ReplayConfig(
         log_dir=log_dir, work_dir=work + "_cl", table_path=table + "_cl",
         num_buckets=8))
-    classic.run()
-    fused = make(spark, log_dir, work, table)
-    fused.run()
+    write_old_slice(old, "0-0")
+    assert [tuple(r) for r in old.quarantine().select("bucket", "url").collect()] \
+        == [(3, "https://old.example/")]
+    mixed = make(spark, log_dir, work, table)
+    mixed.run()
+    n_fused = mixed.quarantine().count()
+    write_old_slice(mixed, "9-0")
+    assert mixed.quarantine().count() == n_fused + 1
     empty = Replayer(spark, ReplayConfig(
         log_dir=log_dir, work_dir=work + "_e", table_path=table + "_e",
         num_buckets=8))
-    cols_c = dict(classic.quarantine().dtypes)
-    cols_f = dict(fused.quarantine().dtypes)
+    cols_c = dict(old.quarantine().dtypes)
+    cols_f = dict(mixed.quarantine().dtypes)
     cols_e = dict(empty.quarantine().dtypes)
     for cols in (cols_c, cols_f, cols_e):
         assert cols["bucket"] == "int"
@@ -373,23 +379,6 @@ def test_overlapped_dv_fold_kill_soak(spark, log_and_work):
         n_rows, dups = physical_rows(resumed)
         assert dups == 0, f"seed {seed} ({mode}): duplicated (url, offset)"
         assert n_rows == n_rows_base, f"seed {seed} ({mode})"
-
-
-def test_single_pass_normalizes_lineage_level(spark, log_and_work):
-    """ADVICE round-3: single_pass cannot produce per-bucket read/dedup
-    lineage; requesting 'bucket' alongside it must warn and normalize to
-    'global' instead of silently changing the metrics shape."""
-    import warnings
-
-    log_dir, work, table = log_and_work
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        rep = Replayer(spark, ReplayConfig(
-            log_dir=log_dir, work_dir=work, table_path=table, num_buckets=8,
-            merge_mode="mor", dedup_per_batch=False, single_pass=True,
-            lineage_level="bucket"))
-    assert rep.cfg.lineage_level == "global"
-    assert any("lineage_level" in str(x.message) for x in w)
 
 
 def test_fold_quarantine_compacts_and_preserves_rows(spark, log_and_work):

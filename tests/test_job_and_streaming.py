@@ -156,6 +156,14 @@ def test_cdc_job_spec_end_to_end(spark, tmp_path):
     assert hooks[0][1]["events_read"] == 2_000
     # re-running the same job JSON is a no-op (exactly-once resume)
     assert run_cdc_job(spark, job) == []
+    # a job asking for a removed merge/lineage mode fails loudly, by key
+    import copy
+
+    for k, v in (("mergeMode", "cow"), ("lineageLevel", "bucket")):
+        bad = copy.deepcopy(job)
+        bad["job"]["content"][0]["writer"]["parameter"][k] = v
+        with pytest.raises(ValueError, match=k):
+            run_cdc_job(spark, bad)
 
 
 def test_cli_main_runs_cdc_job(spark, tmp_path):

@@ -92,48 +92,36 @@ def test_resume_processes_late_lower_epoch(spark, tmp_path):
 
 
 def test_global_lineage_observe_fewer_jobs_same_state(spark, tmp_path):
-    """lineage_level='global' folds the stat pass into the quarantine write
-    via Dataset.observe: at least one fewer Spark job per batch, identical
-    final state, and the metrics table keeps its sum invariants (per-bucket
-    applied/quarantined exact from footers; read/deduped batch-global)."""
+    """Lineage rides the batch's one fused job (no separate stat pass): the
+    metrics table keeps its sum invariants — per-bucket applied/quarantined
+    exact from footers, read/deduped/bytes as one batch-global row
+    (partition -1) — and the guarded batches' jobs carry their group tag."""
     import numpy as np
 
-    from datax_3_0_0_src_spark.cdc.oracle import expected_pages, gen_events_pdf, validate_pd
+    from datax_3_0_0_src_spark.cdc.oracle import gen_events_pdf, validate_pd
 
     cfg = EventGenConfig(seed=42, n_events=2_000, events_per_epoch=1_000)
     log_dir = str(tmp_path / "wal")
     write_event_log(spark, cfg, log_dir, slices=2)
-
-    def run(level, sub):
-        rep = Replayer(spark, ReplayConfig(
-            log_dir=log_dir, table_path=str(tmp_path / sub / "pages"),
-            work_dir=str(tmp_path / sub / "work"), num_buckets=4,
-            lineage_level=level, batch_timeout_s=3600,
-        ))
-        rep.run()
-        tracker = spark.sparkContext.statusTracker()
-        jobs = sum(len(tracker.getJobIdsForGroup(f"cdc-batch-{i}")) for i in range(2))
-        return rep, jobs
-
-    rep_g, jobs_g = run("global", "g")
-    rep_b, jobs_b = run("bucket", "b")
-    assert jobs_g < jobs_b  # the stat job is gone
-
-    exp = expected_pages(cfg)
-    for rep in (rep_g, rep_b):
-        got = rep.table.read().toPandas().sort_values("url").reset_index(drop=True)
-        assert list(got["url"]) == list(exp["url"])
-        assert list(got["text"]) == list(exp["text"])
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, table_path=str(tmp_path / "pages"),
+        work_dir=str(tmp_path / "work"), num_buckets=4, batch_timeout_s=3600,
+    ))
+    results = rep.run()
+    tracker = spark.sparkContext.statusTracker()
+    assert all(tracker.getJobIdsForGroup(f"cdc-batch-{i}") for i in range(2))
 
     ev = gen_events_pdf(cfg, np.arange(cfg.n_events))
     n_dirty = int((~validate_pd(ev)).sum())
-    m = rep_g.metrics().toPandas()
+    m = rep.metrics().toPandas()
     assert m["events_read"].sum() == cfg.n_events
     assert m["events_quarantined"].sum() == n_dirty
-    assert rep_g.quarantine().count() == n_dirty
-    # per-bucket rows carry exact applied counts (footer-derived)
-    per_bucket = m[m["partition_id"] >= 0]
-    assert (per_bucket["events_applied"] > 0).any()
+    assert rep.quarantine().count() == n_dirty
+    per_bucket, batch_rows = m[m["partition_id"] >= 0], m[m["partition_id"] < 0]
+    assert len(batch_rows) == len(results) == 2
+    assert (per_bucket["events_read"] == 0).all()
+    assert per_bucket["events_applied"].sum() == sum(r.events_applied for r in results)
+    assert batch_rows["events_deduped"].sum() == sum(r.events_deduped for r in results)
 
 
 def test_hung_guard_late_fire_does_not_fail_committed_block(spark):

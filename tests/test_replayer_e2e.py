@@ -3,8 +3,6 @@ salting, quarantine, error limits, schema evolution (FIXTURES.md §3)."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -12,7 +10,7 @@ import pytest
 from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
 from datax_3_0_0_src_spark.cdc.oracle import expected_pages, validate_pd, gen_events_pdf
 from datax_3_0_0_src_spark.cdc.quarantine import ErrorLimitExceeded
-from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 
 CFG = EventGenConfig(seed=42, n_events=3_000, events_per_epoch=1_000)
 
@@ -50,11 +48,6 @@ def log_and_work(spark, tmp_path):
 
 
 def make_replayer(spark, log_dir, work, table, **kw) -> Replayer:
-    # CDC_PROFILE=throughput soaks the ENTIRE e2e suite under the bench's
-    # high-throughput profile (pipelined MOR, observe-lineage, deferred
-    # dedup); explicit per-test kwargs always win over the profile defaults
-    if os.environ.get("CDC_PROFILE") == "throughput":
-        kw = {**THROUGHPUT_PROFILE, **kw}
     return Replayer(spark, ReplayConfig(
         log_dir=log_dir, table_path=table, work_dir=work, num_buckets=8, **kw))
 
@@ -115,9 +108,16 @@ def test_rate_capped_microbatches_same_state(spark, log_and_work):
 
 def test_salted_dedup_same_state(spark, log_and_work):
     log_dir, work, table = log_and_work
-    rep = make_replayer(spark, log_dir, work, table, salt_partitions=4)
+    rep = make_replayer(spark, log_dir, work, table, salt_partitions=4,
+                        dedup_per_batch=True)
     rep.run()
     assert_state_matches(rep, CFG)
+
+
+def test_salt_requires_per_batch_dedup(spark, tmp_path):
+    with pytest.raises(ValueError, match="salt_partitions"):
+        make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
+                      str(tmp_path / "t"), salt_partitions=4)
 
 
 def test_error_limit_aborts(spark, log_and_work):
@@ -142,24 +142,17 @@ def test_schema_evolution_mid_log(spark, tmp_path):
 
 
 def test_mor_nodedup_fast_path_same_state(spark, log_and_work):
-    """dedup_per_batch=False: all valid events land as delta rows; the LWW
-    (ts, offset) rule applied at read/compact resolution must converge to the
-    byte-identical oracle state."""
+    """dedup_per_batch=False (the default): all valid events land as delta
+    rows; the LWW (ts, offset) rule applied at read/compact resolution must
+    converge to the byte-identical oracle state."""
     log_dir, work, table = log_and_work
-    rep = make_replayer(spark, log_dir, work, table, dedup_per_batch=False)
+    rep = make_replayer(spark, log_dir, work, table)
     rep.run()
     assert_state_matches(rep, CFG)
     # folding the deltas preserves the state too
     rep.table.compact(target_files_per_bucket=1)
     assert rep.table.snapshot().deltas == {}
     assert_state_matches(rep, CFG)
-
-
-def test_nodedup_requires_mor(spark, tmp_path):
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="mor"):
-        make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
-                      str(tmp_path / "t"), dedup_per_batch=False, merge_mode="cow")
 
 
 def test_concurrent_batches_same_state(spark, log_and_work):
@@ -185,11 +178,9 @@ def test_overlapped_fold_same_state_and_fully_folded(spark, log_and_work):
     fully folded — zero deltas, <= compact_target_files files per bucket."""
     log_dir, work, table = log_and_work
     rep = make_replayer(spark, log_dir, work, table,
-                        merge_mode="mor", dedup_per_batch=False,
-                        single_pass=True, lineage_level="global",
                         max_events_per_batch=400, max_concurrent_batches=3,
                         compact_every=2, compact_overlap=True,
-                        compact_strategy="local", compact_concurrency=2)
+                        compact_concurrency=2)
     results = rep.run()
     assert len(results) == 9
     assert_state_matches(rep, CFG)
@@ -203,11 +194,8 @@ def test_overlapped_fold_same_state_and_fully_folded(spark, log_and_work):
     assert snap.version >= len(results) + 1
     # exactly-once on re-run, state unchanged
     rep2 = make_replayer(spark, log_dir, work, table,
-                         merge_mode="mor", dedup_per_batch=False,
-                         single_pass=True, lineage_level="global",
                          max_events_per_batch=400, max_concurrent_batches=3,
-                         compact_every=2, compact_overlap=True,
-                         compact_strategy="local")
+                         compact_every=2, compact_overlap=True)
     assert rep2.run() == []
     assert_state_matches(rep2, CFG)
 
@@ -218,8 +206,6 @@ def test_overlapped_dv_fold_same_state(spark, log_and_work):
     attached, and the read byte-identical to the oracle."""
     log_dir, work, table = log_and_work
     rep = make_replayer(spark, log_dir, work, table,
-                        merge_mode="mor", dedup_per_batch=False,
-                        single_pass=True, lineage_level="global",
                         max_events_per_batch=400, max_concurrent_batches=3,
                         compact_every=2, compact_overlap=True,
                         compact_strategy="dv")
@@ -239,16 +225,8 @@ def test_overlap_requires_compact_every(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="compact_every"):
         make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
-                      str(tmp_path / "t"), merge_mode="mor",
-                      compact_overlap=True, compact_every=None)
-
-
-def test_concurrent_requires_mor(spark, tmp_path):
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="mor"):
-        make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
-                      str(tmp_path / "t"), max_concurrent_batches=2,
-                      merge_mode="cow")
+                      str(tmp_path / "t"), compact_overlap=True,
+                      compact_every=None)
 
 
 def test_rate_cap_with_offset_gaps_no_events_lost(spark, tmp_path):
@@ -288,40 +266,33 @@ def test_rate_cap_with_offset_gaps_no_events_lost(spark, tmp_path):
 
 
 def test_throughput_profile_clean_resume_evolution_fold(spark, tmp_path):
-    """The bench-default THROUGHPUT_PROFILE (pipelined MOR + observe-lineage +
-    deferred dedup + parallel fold) soaked end-to-end: clean replay matches
-    the byte-identical oracle, resume stays exactly-once, mid-log schema
-    evolution null-backfills, and the parallel compaction fold preserves it
-    all."""
+    """The default config, which is the measured throughput profile
+    (pipelined MOR + deferred dedup + parallel fold), soaked end-to-end:
+    clean replay matches the byte-identical oracle, resume stays
+    exactly-once, mid-log schema evolution null-backfills, and the parallel
+    compaction fold preserves it all."""
     gcfg = EventGenConfig(seed=42, n_events=3_000, events_per_epoch=1_000, evo_epoch=2)
     log_dir = str(tmp_path / "wal")
     write_event_log(spark, gcfg, log_dir, slices=4)
     work, table = str(tmp_path / "work"), str(tmp_path / "pages")
 
-    rep1 = Replayer(spark, ReplayConfig(
-        log_dir=log_dir, table_path=table, work_dir=work, num_buckets=8,
-        **THROUGHPUT_PROFILE))
+    rep1 = make_replayer(spark, log_dir, work, table)
     first = rep1.run(stop_after_batches=1)  # "kill" mid-run
     assert len(first) == 1
 
-    rep2 = Replayer(spark, ReplayConfig(
-        log_dir=log_dir, table_path=table, work_dir=work, num_buckets=8,
-        **THROUGHPUT_PROFILE))
+    rep2 = make_replayer(spark, log_dir, work, table)
     rest = rep2.run()
     assert sorted(r.epoch for r in rest) == [1, 2]
     assert_state_matches(rep2, gcfg)
 
-    # parallel fold under the profile's compact_concurrency
+    # parallel fold under the default compact_concurrency
     rep2.table.compact(
-        target_files_per_bucket=1,
-        concurrency=THROUGHPUT_PROFILE["compact_concurrency"])
+        target_files_per_bucket=1, concurrency=rep2.cfg.compact_concurrency)
     assert rep2.table.snapshot().deltas == {}
     assert_state_matches(rep2, gcfg)
 
     # exactly-once: full re-run is a no-op
-    rep3 = Replayer(spark, ReplayConfig(
-        log_dir=log_dir, table_path=table, work_dir=work, num_buckets=8,
-        **THROUGHPUT_PROFILE))
+    rep3 = make_replayer(spark, log_dir, work, table)
     assert rep3.run() == []
     assert_state_matches(rep3, gcfg)
 
@@ -333,8 +304,6 @@ def test_slice_file_pruning_parity_and_prunes(spark, tmp_path):
     subset of the epoch's files (plan-time footer stats drive it)."""
     import shutil
 
-    from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE
-
     cfg = EventGenConfig(seed=7, n_events=8_000, events_per_epoch=4_000)
     log_dir = str(tmp_path / "wal")
     write_event_log(spark, cfg, log_dir, slices=8)
@@ -345,7 +314,7 @@ def test_slice_file_pruning_parity_and_prunes(spark, tmp_path):
         rep = Replayer(spark, ReplayConfig(
             log_dir=log_dir, table_path=base + "/pages",
             work_dir=base + "/work", num_buckets=8,
-            **dict(THROUGHPUT_PROFILE, max_events_per_batch=cap)))
+            max_events_per_batch=cap))
         rep.run()
         return rep
 

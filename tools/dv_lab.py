@@ -22,7 +22,7 @@ if hasattr(os, "sched_setaffinity"):
     os.sched_setaffinity(0, set(range({cores})))
 sys.path.insert(0, {repo!r})
 from datax_3_0_0_src_spark.session import get_spark
-from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 from datax_3_0_0_src_spark.cdc.extract import extract_text_udf
 from pyspark.sql import functions as F
 cores = {cores}
@@ -32,8 +32,7 @@ spark = get_spark(parallelism=cores, shuffle_partitions=cores,
  .select(extract_text_udf(F.lit(b"<html><body>b</body></html>")))
  .write.format("noop").mode("overwrite").save())
 base = {shm!r} + f"/datax_dvlab_{{cores}}"
-profile = dict(THROUGHPUT_PROFILE, max_concurrent_batches=4, compact_concurrency=4)
-profile["max_events_per_batch"] = {cap}
+profile = {{"max_events_per_batch": {cap}}}
 
 def read_probe(rep):
     t0 = time.monotonic()

@@ -11,7 +11,7 @@ fold cannot scale by construction; (b) the per-bucket winner sort is CPU
 (pandas sort_values over string keys), not bandwidth, so more tasks SHOULD
 help. This tool answers it empirically.
 
-Method: one child applies the 16M WAL at 32 cores (throughput profile, no
+Method: one child applies the 16M WAL at 32 cores (default config, no
 fold) and snapshots the table dir to a pristine copy. Each fold variant then
 runs in its own pinned subprocess: restore pristine -> fresh SparkSession ->
 time ONLY table.compact(strategy='local'). Serial children, cooldown between.
@@ -42,7 +42,7 @@ os.sched_setaffinity(0, set(range(32)))
 sys.path.insert(0, {repo!r})
 from datax_3_0_0_src_spark.session import get_spark
 from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
-from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 spark = get_spark(parallelism=32, shuffle_partitions=32,
                   extra_conf={{"spark.local.dir": {shm!r} + "/spark_local_foldlab"}})
 if not os.path.isdir({wal!r}):
@@ -50,7 +50,7 @@ if not os.path.isdir({wal!r}):
                     {wal!r}, slices=128)
 base = {shm!r} + "/fold_lab_apply"
 shutil.rmtree(base, ignore_errors=True)
-profile = dict(THROUGHPUT_PROFILE, max_events_per_batch={n}//8,
+profile = dict(max_events_per_batch={n}//8,
                file_compression={codec!r})
 rep = Replayer(spark, ReplayConfig(log_dir={wal!r}, table_path=base + "/pages",
                                    work_dir=base + "/work", num_buckets=32, **profile))

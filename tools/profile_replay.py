@@ -24,7 +24,7 @@ if hasattr(os, "sched_setaffinity"):
 from pyspark.sql import functions as F
 
 from datax_3_0_0_src_spark.cdc.extract import extract_text_udf
-from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 from datax_3_0_0_src_spark.session import get_spark
 
 
@@ -38,8 +38,7 @@ def main() -> None:
      .write.format("noop").mode("overwrite").save())
     base = shm + f"/datax_prof_replay_{CORES}"
     import shutil
-    profile = dict(THROUGHPUT_PROFILE)
-    profile["max_events_per_batch"] = N_EVENTS // 8
+    profile = {"max_events_per_batch": N_EVENTS // 8}
     # warm run on quarter input (same as bench child)
     warm_wal = f"/dev/shm/datax_bench_wal_{max(N_EVENTS // 4, 1_000_000)}"
     for wal in ([warm_wal] if os.path.isdir(warm_wal) else []) + [WAL]:

@@ -41,8 +41,7 @@ def main() -> None:
 
     from datax_3_0_0_src_spark.cdc.extract import extract_text_udf
     from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
-    from datax_3_0_0_src_spark.cdc.replayer import (
-        THROUGHPUT_PROFILE, ReplayConfig, Replayer)
+    from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
     from datax_3_0_0_src_spark.session import get_spark
 
     cores = args.cores
@@ -67,8 +66,7 @@ def main() -> None:
      .write.format("noop").mode("overwrite").save())
 
     base = SHM + f"/datax_r7lab_replay_{cores}"
-    profile = dict(THROUGHPUT_PROFILE, max_concurrent_batches=args.conc,
-                   compact_concurrency=4)
+    profile = dict(max_concurrent_batches=args.conc)
     profile["max_events_per_batch"] = args.cap or min(n // 8, 2_000_000)
 
     out = {"cores": cores, "events": n, "tag": args.tag}

@@ -45,7 +45,7 @@ def fused_batch_df(spark):
 
     from datax_3_0_0_src_spark.cdc.fused import apply_fused
     from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
-    from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+    from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
     from datax_3_0_0_src_spark.lake.table import SYS_BUCKET
 
     base = os.path.join(tempfile.gettempdir(), "r7_plan_fused")
@@ -54,7 +54,7 @@ def fused_batch_df(spark):
     write_event_log(spark, cfg, base + "/wal", slices=8)
     rep = Replayer(spark, ReplayConfig(
         log_dir=base + "/wal", table_path=base + "/pages",
-        work_dir=base + "/work", num_buckets=8, **THROUGHPUT_PROFILE))
+        work_dir=base + "/work", num_buckets=8))
     c = rep.cfg
     ev = rep.read_epoch(0).drop("epoch")
     nb = rep.table.num_buckets
@@ -72,7 +72,7 @@ def dv_read_df(spark):
     import shutil
 
     from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
-    from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE, ReplayConfig, Replayer
+    from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 
     base = os.path.join(tempfile.gettempdir(), "r7_plan_dv")
     shutil.rmtree(base, ignore_errors=True)
@@ -80,7 +80,7 @@ def dv_read_df(spark):
     write_event_log(spark, cfg, base + "/wal", slices=8)
     rep = Replayer(spark, ReplayConfig(
         log_dir=base + "/wal", table_path=base + "/pages",
-        work_dir=base + "/work", num_buckets=8, **THROUGHPUT_PROFILE))
+        work_dir=base + "/work", num_buckets=8))
     rep.run()
     rep.table.compact(strategy="dv")
     return rep.table.read()
