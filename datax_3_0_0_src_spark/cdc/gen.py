@@ -215,10 +215,11 @@ def write_event_log(spark: SparkSession, cfg: EventGenConfig, log_dir: str,
     # segment file a 2M-event slice spans only ~4 files, so the batch's map
     # stage runs ~4-wide no matter how many cores the reader has (measured:
     # cpu_frac 0.63 at 32 cores, the round-6 verdict's utilization gap).
-    # Small row groups let the reader's slice-aware split sizing
-    # (replayer._tune_scan_splits) cut real, row-group-aligned splits at any
-    # width; offset min/max stats per row group make non-slice groups prune
-    # for free. Same rows, same bytes-per-event within ~2%.
+    # Small row groups let the replayer's slice-aware split sizing (set for
+    # its own scans during a run, replayer._tune_scan_splits) cut real,
+    # row-group-aligned splits at any width; offset min/max stats per row
+    # group make non-slice groups prune for free. Same rows, same
+    # bytes-per-event within ~2%.
     opts = {"parquet.block.size": str(4 << 20)}
     if cfg.evo_epoch is None or cfg.evo_epoch >= cfg.n_epochs:
         (gen_events_df(spark, cfg, slices=slices)

@@ -33,6 +33,7 @@ Exactly-once protocol (the hard part, SURVEY §7.3):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -45,11 +46,36 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..lake.manifest import _atomic_write
-from ..lake.table import SYS_BUCKET, LakeTable
+from ..lake.table import SYS_BUCKET, LakeTable, exchange_width
 from .dedup import dedup_lww
 from .quarantine import check_error_limits
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+# the scan-split size the replayer tunes for its own scans (_tune_scan_splits)
+SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
+
+
+def _split_conf_scoped(method):
+    """Keep the scan-split tuning inside one Replayer entry point: the
+    caller's maxPartitionBytes is restored on the way out (unset when it was
+    unset) and the next sequential run re-tunes. The tuned value only
+    matters while the call's batches scan; left on the shared session it
+    sized every later scan's splits too."""
+
+    @functools.wraps(method)
+    def scoped(self: "Replayer", *args, **kwargs):
+        saved = self.spark.conf.get(SPLIT_CONF, None)
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            self._split_frozen = False
+            if saved is None:
+                self.spark.conf.unset(SPLIT_CONF)
+            else:
+                self.spark.conf.set(SPLIT_CONF, saved)
+
+    return scoped
 
 
 @dataclass
@@ -172,11 +198,17 @@ class Replayer:
         # behind executor-saturating write jobs (profiled: 1.2s -> 10s per
         # batch as the pipeline saturates; 26s of a 70s 8-core wall).
         self._epoch_df_cache: dict[int, DataFrame] = {}
-        # per-epoch [(file, min_offset, max_offset)] from the plan-time
-        # footer pass — drives per-slice FILE pruning (_slice_df). Written
-        # once by plan_batches (single-threaded), read-only under the pool.
+        # per-epoch [(file, min_offset, max_offset)] from the footer pass —
+        # drives per-slice FILE pruning (_slice_df). Written once per epoch
+        # by plan_batches or the split tuning, before the batch pool starts.
         self._epoch_file_stats: dict[int, list[tuple[str, int, int]]] = {}
+        # per-epoch (min_offset, max_offset, rows) from the same footer pass,
+        # None when the footers lack offset stats: plan_batches, the split
+        # tuning and the exchange sizing all reuse one pass per epoch
+        self._epoch_stats: dict[int, tuple[int, int, int] | None] = {}
         self._epoch_cache_lock = threading.Lock()
+        # concurrent run(): split size pinned for the run (_freeze_scan_splits)
+        self._split_frozen = False
         if cfg.salt_partitions and not cfg.dedup_per_batch:
             raise ValueError(
                 "salt_partitions needs dedup_per_batch=True (salting splits "
@@ -288,9 +320,14 @@ class Replayer:
         split planning Spark itself must do to scan the epoch; at 10^8-event
         epochs the WAL segment count stays in the hundreds (writers roll
         segments by size), so plan time stays sub-second where the agg-job
-        path paid a full scheduler round trip per epoch."""
+        path paid a full scheduler round trip per epoch.
+
+        Memoized per epoch (epoch dirs are immutable once logged); a missing
+        or empty dir is not memoized."""
         import pyarrow.parquet as pq
 
+        if epoch in self._epoch_stats:
+            return self._epoch_stats[epoch]
         p = self._epoch_path(epoch)
         seq = self.cfg.seq_col
         lo = hi = None
@@ -328,23 +365,23 @@ class Replayer:
 
         with ThreadPoolExecutor(max_workers=min(8, len(files))) as pool:
             per_file = list(pool.map(file_stats, files))
+        if any(fs is None for fs in per_file):
+            self._epoch_stats[epoch] = None
+            return None
         for fs in per_file:
-            if fs is None:
-                return None
             path, flo, fhi, rows = fs
             n += rows
             fstats.append((path, flo, fhi))
             lo = flo if lo is None else min(lo, flo)
             hi = fhi if hi is None else max(hi, fhi)
-        if lo is None:
-            return None
         # per-file offset ranges for slice-level FILE pruning (complete sets
         # only): a rate-capped slice touches slice/epoch of the files; a
         # per-batch scan built from just those files schedules zero no-op
         # splits (the whole-epoch DF would dispatch epoch/slice times more
         # tasks per job once splits are slice-sized — pure scheduler tax)
         self._epoch_file_stats[epoch] = fstats
-        return int(lo), int(hi), int(n)
+        self._epoch_stats[epoch] = (int(lo), int(hi), int(n))
+        return self._epoch_stats[epoch]
 
     def _slice_df(self, epoch: int, lo: int, hi: int) -> DataFrame | None:
         """A DataFrame over ONLY the epoch files whose offset range overlaps
@@ -361,9 +398,9 @@ class Replayer:
         schema = self.read_epoch(epoch).drop("epoch").schema
         return self.spark.read.schema(schema).parquet(*files)
 
-    def _split_target(self, sizes: list[tuple[int, int]]) -> int | None:
+    def _split_target(self, sizes: list[tuple[int, int | None]]) -> int | None:
         """maxPartitionBytes for this run's scans, from (bytes, rows) per
-        pending epoch.
+        pending epoch (rows None: the footers lack offset stats).
 
         The unit that must go wide is the rate-capped SLICE, not the epoch:
         with a 2M-event cap on a 32M-event epoch, epoch-size/(2*par) splits
@@ -374,21 +411,25 @@ class Replayer:
         tasks (footer-only, ~ms), so the extra scheduled splits per epoch
         cost microseconds each while every batch's scan+shuffle-write map
         stage runs full-width. The [4 MB, 128 MB] clamp keeps the setting
-        sane at 100 TB (10^8-event slices saturate at the 128 MB default)."""
-        tot_b = sum(b for b, _ in sizes)
-        tot_r = sum(r for _, r in sizes)
-        if not tot_b:
+        sane at 100 TB (10^8-event slices saturate at the 128 MB default).
+
+        The bytes-per-row ratio comes from epochs with a known row count
+        only; every epoch still counts toward the whole-epoch maximum."""
+        slice_b = max((b for b, _ in sizes), default=0)  # whole-epoch batches
+        if not slice_b:
             return None
+        tot_b = sum(b for b, r in sizes if r)
+        tot_r = sum(r for _, r in sizes if r)
         cap = self.cfg.max_events_per_batch
         par = self.spark.sparkContext.defaultParallelism
-        slice_b = max(s for s, _ in sizes)  # whole-epoch batches
         if cap and tot_r:
             slice_b = min(slice_b, int(cap * (tot_b / tot_r)))
         return min(max(slice_b // par, 4 << 20), 128 << 20)
 
-    def _epoch_bytes_rows(self, epoch: int) -> tuple[int, int] | None:
+    def _epoch_bytes_rows(self, epoch: int) -> tuple[int, int | None] | None:
         """(total bytes, total rows) of an epoch dir — driver-side metadata.
-        Row counts ride the same footer pass plan_batches already does."""
+        Row counts ride the memoized footer pass (None without offset
+        stats)."""
         p = self._epoch_path(epoch)
         try:
             size = sum(
@@ -398,7 +439,7 @@ class Replayer:
         except OSError:
             return None
         stats = self._epoch_stats_from_footers(epoch)
-        return size, (stats[2] if stats else 0)
+        return size, (stats[2] if stats else None)
 
     def _tune_scan_splits(self, epoch: int) -> None:
         """Size parquet splits so each rate-capped slice scans ~par-wide
@@ -408,7 +449,7 @@ class Replayer:
             return
         target = self._split_target([br])
         if target:
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+            self.spark.conf.set(SPLIT_CONF, str(target))
 
     def read_epoch(self, epoch: int) -> DataFrame:
         """One WAL segment; its files' own schema (=> additive evolution
@@ -418,7 +459,7 @@ class Replayer:
         resolved once per epoch instead of once per offset-slice batch.
         Safe because WAL epoch dirs are immutable once logged — requeue and
         resume re-read the same frozen file set."""
-        if not getattr(self, "_split_frozen", False):
+        if not self._split_frozen:
             self._tune_scan_splits(epoch)
         with self._epoch_cache_lock:
             df = self._epoch_df_cache.get(epoch)
@@ -545,6 +586,7 @@ class Replayer:
         }
 
     # -------------------------------------------------------------- running
+    @_split_conf_scoped
     def run(self, *, stop_after_batches: int | None = None) -> list[BatchResult]:
         """Replay all uncommitted micro-batches. Safe to re-run / resume."""
         from .monitor import PeriodicReporter
@@ -668,8 +710,7 @@ class Replayer:
         if sizes:
             target = self._split_target(sizes)
             if target:
-                self.spark.conf.set(
-                    "spark.sql.files.maxPartitionBytes", str(target))
+                self.spark.conf.set(SPLIT_CONF, str(target))
         self._split_frozen = True
 
     def _run_batch(
@@ -729,7 +770,17 @@ class Replayer:
             # crosses an exchange — and (iii) lets the merge skip its own
             # repartition (pre_partitioned=True): still exactly one
             # exchange per batch, now on the cheap side of the UDF.
-            ev = self.table._layout(ev, cfg.key, nb)
+            # Sized from the batch's row count (lake.table.exchange_width):
+            # a slice's offset span, a whole epoch's footer count, None
+            # (full width) when the footers lack offset stats.
+            if lo is not None:
+                rows = hi - lo
+            else:
+                stats = self._epoch_stats_from_footers(epoch)
+                rows = stats[2] if stats else None
+            ev = self.table._layout(ev, cfg.key, nb, rows)
+            tl["exchange_parts"] = exchange_width(
+                self.spark.sparkContext.defaultParallelism, nb, rows)
 
         slice_dir = os.path.join(cfg.quarantine_dir, f"slice={epoch}-{sub}")
         # idempotent re-run: a prior partial attempt may have left task files
@@ -945,6 +996,7 @@ class Replayer:
                 "slices_folded": sum(1 for n in folded if n),
                 "files_removed": sum(max(0, n - 1) for n in folded)}
 
+    @_split_conf_scoped
     def requeue_quarantined(self, *, epochs: list[int] | None = None) -> list[dict]:
         """Reprocess quarantined rows through the SAME fused pipeline after a
         validation-rule fix (an operator the reference lacks — DataX can only

@@ -56,6 +56,35 @@ SYS_OFFSET = "_lww_offset"   # sequence number of the winning event (LWW tiebrea
 SYS_DELETED = "_deleted"     # tombstone flag
 SYS_BUCKET = "_bucket"       # partition-directory column (not stored inside files)
 
+# Rows one task of a batch's layout exchange must carry before a wider plan
+# (a second wave of tasks) is used. Every task of the post-exchange stage
+# pays a fixed Python-worker cost (UDF unpickle, Arrow setup) of about 0.25 s
+# at local[4], whatever its row count, while the extract kernel clears
+# ~300k rows/s, so a task pays for itself only from ~75k rows. Small
+# batches therefore run in one wave of ``par`` tasks (a 4k-event tail batch:
+# 1k rows a task at local[4]). The constant sits far below that break-even
+# on purpose, so large batches keep the full-width plan: 8192 = 2^13 is the
+# largest power of two under the per-task rows of the measured bulk plans
+# (150k-event slices over 16 buckets: 9.4k; 2M-event slices over 32
+# buckets: 62k).
+ROWS_PER_TASK = 8192
+
+
+def exchange_width(par: int, nb: int, rows: int | None) -> int:
+    """Partition count of the ``(bucket, salt)`` layout exchange.
+
+    The full width is ``nb * max(1, par // nb)``: one partition per
+    (bucket, salt) pair. With a known ``rows`` the width is what the batch
+    fills at ``ROWS_PER_TASK`` rows a task, raised to one wave of ``par``
+    tasks and capped at the full width; ``rows=None`` (size unknown) keeps
+    the full width. Hash partitioning on (bucket, salt) still sends each
+    pair to exactly one task, so the write makes the same files at any
+    width."""
+    full = max(nb * max(1, par // nb), 1)
+    if rows is None:
+        return full
+    return min(full, max(par, -(-rows // ROWS_PER_TASK)))
+
 
 def _lww_winner_pick(paths: list, key: str, ts_col: str):
     """Pass-1 NARROW LWW winner pick over one bucket's parquet files (runs
@@ -994,17 +1023,20 @@ class LakeTable:
                 out[int(d.split("=", 1)[1])] = fs
         return out
 
-    def _layout(self, s: DataFrame, key: str, nb: int) -> DataFrame:
+    def _layout(self, s: DataFrame, key: str, nb: int,
+                rows: int | None = None) -> DataFrame:
         """The controlled-file-layout exchange: hash-partition on
         ``(bucket, salt)`` so the partitioned write makes ~write_salt files
         per touched bucket (without it every upstream task spills a file
         into every bucket dir it saw). Factored out so the CDC replayer can
         apply the SAME layout *before* its Arrow extraction stage and tell
-        merge() to skip this exchange (``pre_partitioned=True``)."""
+        merge() to skip this exchange (``pre_partitioned=True``). ``rows``,
+        the batch's row count when the caller knows it, sizes the exchange
+        (see :func:`exchange_width`)."""
         par = self.spark.sparkContext.defaultParallelism
         write_salt = max(1, par // nb)
         return s.repartition(
-            max(nb * write_salt, 1),
+            exchange_width(par, nb, rows),
             F.col(SYS_BUCKET),
             F.pmod(F.xxhash64(F.col(key)), F.lit(write_salt)),
         )

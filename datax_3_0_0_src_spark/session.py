@@ -49,7 +49,8 @@ def get_spark(
         # worker memory.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         # keep partition sizes bounded for wide binary (html) columns; the
-        # CDC replayer re-tunes this per epoch (replayer._tune_scan_splits)
+        # CDC replayer tunes it for its own scans only, restoring this value
+        # when run() / requeue_quarantined() return (replayer._split_conf_scoped)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # tmpfs/SSD seek cost is ~0; the 4 MB default inflates small files in
         # the split-packing math and strangles scan parallelism on WALs of
