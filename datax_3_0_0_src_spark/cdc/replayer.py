@@ -114,10 +114,10 @@ class ReplayConfig:
     max_concurrent_batches: int = 4
     compact_every: int | None = None   # fold MOR deltas every N batches
     compact_target_files: int = 2      # files/bucket after a fold
-    compact_concurrency: int = 4       # parallel bucket-group folds (lake.compact)
-    # "shuffle" | "local" (zero-exchange pyarrow rewrite fold) | "dv"
-    # (delete-vector minor fold: LWW resolved via positional-delete sidecars,
-    # no data rewrite — see LakeTable._fold_dv)
+    compact_concurrency: int = 4       # ignored; see THROUGHPUT_PROFILE
+    # "local" (major fold: zero-exchange pyarrow rewrite, one task per
+    # bucket up to the core count) | "dv" (minor fold: LWW resolved via
+    # positional-delete sidecars, no data rewrite — see LakeTable._fold_dv)
     compact_strategy: str = "local"
     # pipelined mode only: run the compact_every folds in a BACKGROUND thread
     # overlapped with the still-running batches instead of serializing them
@@ -135,10 +135,10 @@ class ReplayConfig:
     # parquet codec for delta/base/fold files this job writes ("snappy" |
     # "zstd" | ...): zstd shrinks the bytes the memory-bandwidth-bound fold
     # and apply must move (~35-40% in the round-5/6 A/Bs) for a small
-    # compress-CPU premium; the round-6 within-window A/B (tools/ab_codec.py)
-    # made it the default — it wins precisely when the machine is bandwidth-
-    # contended, the realistic wide-cluster regime; readers are codec-
-    # agnostic (parquet self-describes)
+    # compress-CPU premium; the round-6 within-window A/B (BENCH.md
+    # "delta-codec A/B") made it the default — it wins precisely when the
+    # machine is bandwidth-contended, the realistic wide-cluster regime;
+    # readers are codec-agnostic (parquet self-describes)
     file_compression: str = "zstd"
     batch_timeout_s: float | None = None   # F13: cancel a wedged batch (watchdog)
     report_interval_s: float | None = None  # F11: periodic counter reporting
@@ -164,6 +164,11 @@ class ReplayConfig:
 
 
 # bench.py is frozen and still reads these two keys; nothing else uses this.
+# Debt to delete with the next bench.py change: bench.py passes
+# ``ReplayConfig(compact_concurrency=…)`` and ``LakeTable.compact(
+# concurrency=…)``, so both stay as accepted-and-ignored parameters (the
+# fold's task count is min(buckets, defaultParallelism)). No other caller
+# may pass them; test_frozen_bench_call_shapes pins bench.py's call shapes.
 THROUGHPUT_PROFILE: dict = {
     k: getattr(ReplayConfig, k) for k in ("compact_concurrency", "compact_strategy")
 }
@@ -213,6 +218,11 @@ class Replayer:
             raise ValueError(
                 "salt_partitions needs dedup_per_batch=True (salting splits "
                 "the per-batch LWW dedup; without that dedup it does nothing)"
+            )
+        if cfg.compact_strategy not in ("local", "dv"):
+            raise ValueError(
+                f"compact_strategy must be 'local' or 'dv' (the shuffle fold "
+                f"was removed), got {cfg.compact_strategy!r}"
             )
         if cfg.compact_overlap and not cfg.compact_every:
             raise ValueError(
@@ -620,7 +630,6 @@ class Replayer:
                     ):
                         self.table.compact(
                             target_files_per_bucket=self.cfg.compact_target_files,
-                            concurrency=self.cfg.compact_concurrency,
                             strategy=self.cfg.compact_strategy,
                         )
             else:
@@ -653,7 +662,6 @@ class Replayer:
                 def _fold():
                     return self.table.compact(
                         target_files_per_bucket=self.cfg.compact_target_files,
-                        concurrency=self.cfg.compact_concurrency,
                         strategy=self.cfg.compact_strategy,
                     )
 
@@ -693,7 +701,6 @@ class Replayer:
                     # the post-run state is fully folded either way
                     self.table.compact(
                         target_files_per_bucket=self.cfg.compact_target_files,
-                        concurrency=self.cfg.compact_concurrency,
                         strategy=self.cfg.compact_strategy,
                     )
         finally:

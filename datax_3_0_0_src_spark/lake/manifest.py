@@ -38,11 +38,11 @@ class Snapshot:
     # of ``files`` (the base); compaction folds them down. Same key layout.
     deltas: dict[str, list[str]] = field(default_factory=dict)
     # positional delete-vector files per bucket (Iceberg-v2-style minor
-    # compaction): each DV parquet holds (fid, pos) loser positions plus a
-    # fid->data-file map; readers drop those rows via a broadcast anti-join
-    # instead of a read-time LWW aggregation. A DV fold PROMOTES the deltas
-    # it read into ``files`` and attaches the bucket's recomputed DV set;
-    # a major (rewrite) fold clears it.
+    # compaction): each DV parquet holds (file, pos) loser positions, the
+    # file column dictionary-encoded; readers drop those rows with a
+    # file-local positional mask instead of a read-time LWW aggregation. A
+    # DV fold PROMOTES the deltas it read into ``files`` and attaches the
+    # bucket's recomputed DV set; a major (rewrite) fold clears it.
     dvs: dict[str, list[str]] = field(default_factory=dict)
 
     def to_json(self) -> str:

@@ -174,6 +174,21 @@ def _lww_winner_pick(paths: list, key: str, ts_col: str):
     return widx, file_all, row_all, schemas
 
 
+def _every_row(paths: list):
+    """:func:`_lww_winner_pick`'s result shape with every row a winner, read
+    from the parquet footers alone (no column is decoded)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    pfs = [pq.ParquetFile(p) for p in paths]
+    sizes = [pf.metadata.num_rows for pf in pfs]
+    file_all = np.repeat(np.arange(len(paths), dtype=np.int32), sizes)
+    row_all = np.concatenate(
+        [np.arange(n, dtype=np.int64) for n in sizes] or [np.empty(0, np.int64)])
+    return (np.arange(len(file_all)), file_all, row_all,
+            [pf.schema_arrow for pf in pfs])
+
+
 # Python-worker-lifetime cache of loaded delete vectors, keyed by a bucket's
 # DV sidecar path tuple: {file_rel: sorted int64 positions}. Lives at module
 # level so reused workers keep it across tasks (guide §4.5); DV sidecar paths
@@ -251,10 +266,11 @@ class LakeTable:
         # (measured: 1.9 GB vs 3.1 GB delta sets at 16M events); whenever
         # the store or the socket is bandwidth-contended — RAM-backed page
         # cache here, object-store egress or disk at cluster scale — smaller
-        # bytes win. Decided by the round-6 A/B (tools/ab_codec.py, 16M
-        # events, within-window pairs: 32-core apply 45.3s zstd vs 78.8s
+        # bytes win. Decided by the round-6 A/B (BENCH.md "delta-codec A/B",
+        # 16M events, within-window pairs: 32-core apply 45.3s zstd vs 78.8s
         # snappy best-of, 8-core a tie; concurring: round-5 fold lab 10.9s
-        # vs 12.6s and all four round-5 within-window 32-core pairs).
+        # vs 12.6s, BENCH_local_r5_fold_lab.json, and all four round-5
+        # within-window 32-core pairs).
         self.compression = "zstd"
         # diagnostics from the last lookup()/scan_ts_range() pruning pass
         self.last_prune: dict = {}
@@ -513,9 +529,9 @@ class LakeTable:
             vfiles = [f for b in buckets for f in snap.bucket_dvs(b)]
         df = self._read_files(files + dfiles, phys)
         if vfiles:
-            # delete-vector-folded buckets: losers drop via a broadcast
-            # anti-join (no shuffle); deltas layered AFTER the DV fold (if
-            # any) still resolve below — against winners only
+            # delete-vector-folded buckets: losers drop via file-local
+            # positional masks (no shuffle); deltas layered AFTER the DV fold
+            # (if any) still resolve below — against winners only
             df = self._apply_dvs(df, vfiles, files + dfiles)
         if dfiles:
             df = self._resolve_lww(df, snap.properties["key"], snap.properties["ts_col"])
@@ -1191,48 +1207,44 @@ class LakeTable:
     # --------------------------------------------------------- maintenance
     def compact(self, *, target_files_per_bucket: int = 1,
                 buckets: list[int] | None = None,
-                concurrency: int = 1,
-                strategy: str = "shuffle") -> MergeStats:
+                concurrency: int | None = None,
+                strategy: str = "local") -> MergeStats:
         """Fold merge-on-read deltas into the base and rewrite fragmented
         buckets into ~target_files_per_bucket files each (Iceberg
         rewrite_data_files + minor compaction in one pass). Metadata-only for
         buckets already folded and at/below the target; commits one new
-        snapshot per bucket group. Tombstones are preserved through the fold
-        (they guard against late-event resurrection).
-
-        ``concurrency`` > 1 splits the buckets into that many disjoint groups
-        folded by CONCURRENT Spark jobs (driver thread pool), each committing
-        via the optimistic-CAS manifest loop. Rationale (BENCH.md round-2):
-        one monolithic fold stage puts every core into the wide-row sort at
-        once and GC-thrashes at high core counts; smaller per-group stages
-        pipeline shuffle/sort/write phases against each other instead. The
-        fold stays safe under concurrent MOR *merges*: a commit re-layers
-        against the freshest snapshot and preserves any delta that arrived
-        after the fold's read (the folded rows keep their (ts, offset), so
-        read-time LWW against later deltas is unchanged). Concurrent folds of
-        the SAME bucket are detected and rejected.
+        snapshot. Tombstones are preserved through the fold (they guard
+        against late-event resurrection). The fold stays safe under
+        concurrent MOR *merges*: its commit re-layers against the freshest
+        snapshot and preserves any delta that arrived after the fold's read
+        (the folded rows keep their (ts, offset), so read-time LWW against
+        later deltas is unchanged). Concurrent folds of the SAME bucket are
+        detected and rejected.
 
         ``strategy``:
-        - "shuffle" (default): one exchange on (bucket, salt) + in-partition
-          sort + lag-filter — works on any storage, any bucket/core ratio.
-        - "local": ZERO-exchange fold — one executor task per bucket reads
-          that bucket's base+delta files directly with pyarrow (they are
-          bucket-pure by the write layout), resolves the same (ts, offset)
-          LWW in-task, and writes the folded files. This is Iceberg's
-          file-group-local rewrite_data_files: at 100 TB a fold never needs
-          a cluster-wide shuffle because every key's rows are already
-          confined to one bucket's file group. Requires executors to reach
-          the table path (shared FS / object store — true wherever the table
-          itself is readable).
+        - "local" (default): MAJOR fold with zero exchange — one executor
+          task per bucket reads that bucket's base+delta files directly with
+          pyarrow (they are bucket-pure by the write layout), resolves the
+          (ts, offset) LWW in-task, and writes the folded files. This is
+          Iceberg's file-group-local rewrite_data_files: at 100 TB a fold
+          never needs a cluster-wide shuffle because every key's rows are
+          already confined to one bucket's file group. Requires executors to
+          reach the table path (shared FS / object store — true wherever the
+          table itself is readable).
         - "dv": MINOR fold via positional delete vectors — resolves the
           deferred LWW without rewriting any data (narrow pass-1 winner pick
           + (file, pos) sidecars; see :meth:`_fold_dv`). File counts are
           untouched; pair with an occasional "local" rewrite for file-count
           hygiene (Iceberg's minor/major split). ``target_files_per_bucket``
-          and ``concurrency`` are ignored."""
-        if strategy not in ("shuffle", "local", "dv"):
+          is ignored.
+
+        ``concurrency`` is accepted and ignored (see
+        ``cdc.replayer.THROUGHPUT_PROFILE``): the fold's task count comes
+        from the bucket and core counts."""
+        if strategy not in ("local", "dv"):
             raise ValueError(
-                f"strategy must be 'shuffle', 'local' or 'dv', got {strategy!r}")
+                f"strategy must be 'local' or 'dv' (the shuffle fold was "
+                f"removed), got {strategy!r}")
         snap = self.snapshot()
         candidates = set(int(b) for b in snap.files) | set(int(b) for b in snap.deltas)
         if strategy == "dv":
@@ -1252,85 +1264,7 @@ class LakeTable:
         )
         if not todo:
             return MergeStats(snap.version, 0, 0, 0, 0, {})
-        if strategy == "local":
-            return self._compact_local(snap, todo, target_files_per_bucket)
-        n_groups = max(1, min(int(concurrency), len(todo)))
-        if n_groups == 1:
-            return self._compact_group(snap, todo, target_files_per_bucket)
-        groups = [todo[i::n_groups] for i in range(n_groups)]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=n_groups) as pool:
-            stats = list(pool.map(
-                lambda g: self._compact_group(snap, g, target_files_per_bucket),
-                groups,
-            ))
-        return MergeStats(
-            version=max(s.version for s in stats),
-            touched_buckets=sum(s.touched_buckets for s in stats),
-            batch_rows=0, batch_deletes=0,
-            new_files=sum(s.new_files for s in stats),
-            rows_per_bucket={},
-        )
-
-    def _compact_group(
-        self, snap: Snapshot, todo: list[int], target_files_per_bucket: int
-    ) -> MergeStats:
-        """Fold one disjoint bucket group read at snapshot ``snap``; commit
-        with the optimistic-CAS loop, preserving deltas layered after the
-        read."""
-        user_schema = StructType.fromJson(__import__("json").loads(snap.schema_json))
-        phys = self._physical_schema(user_schema)
-        key, ts_col = snap.properties["key"], snap.properties["ts_col"]
-        folded_files = {b: set(snap.bucket_files(b)) for b in todo}
-        folded_deltas = {b: set(snap.bucket_deltas(b)) for b in todo}
-        # a DV-folded bucket carries LWW-masked LOSERS inside its base files;
-        # _commit_fold pops the bucket's delete vectors, so the rewrite MUST
-        # re-resolve (the deterministic (ts, offset) rule re-drops the same
-        # losers) or the fold would resurrect stale rows (round-6 advice #1)
-        has_deltas = any(
-            folded_deltas[b] or snap.bucket_dvs(b) for b in todo)
-        df = self._read_files(
-            [f for b in todo for f in snap.bucket_files(b) + snap.bucket_deltas(b)], phys
-        )
-        df = df.withColumn(SYS_BUCKET, self._bucket_expr(key))
-        salt = (
-            F.pmod(F.xxhash64(F.col(key)), F.lit(target_files_per_bucket))
-            if target_files_per_bucket > 1 else F.lit(0)
-        )
-        df = df.withColumn("_salt", salt).repartition(
-            len(todo) * target_files_per_bucket, F.col(SYS_BUCKET), F.col("_salt")
-        )
-        if has_deltas:
-            # LWW fold in ONE exchange: (bucket, salt) is a pure function of
-            # the key, so every key's rows are co-located by the layout
-            # repartition above; a sort within those partitions + lag-filter
-            # picks the (ts, offset)-max winner per key without the hash
-            # aggregation of wide structs or a second shuffle. Only valid for
-            # merge-maintained buckets (one row per (key, offset));
-            # append-only tables never carry deltas.
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(SYS_BUCKET, "_salt").orderBy(
-                F.col(key).asc(),
-                F.col(ts_col).desc(),
-                F.coalesce(F.col(SYS_OFFSET), F.lit(-1)).desc(),
-            )
-            prev = F.lag(key).over(w)
-            df = (
-                df.withColumn("_first", prev.isNull() | (prev != F.col(key)))
-                .filter(F.col("_first"))
-                .drop("_first")
-            )
-        df = df.drop("_salt")
-        rel_dir = f"data/c{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"  # unique, never contended
-        out_dir = os.path.join(self.path, rel_dir)
-        df.write.option("compression", self.compression).mode("errorifexists").partitionBy(SYS_BUCKET).parquet(out_dir)
-        written = self._written_buckets(out_dir, rel_dir)
-        from . import skipping
-        skipping.write_dir_stats(
-            self.path, [f for fs in written.values() for f in fs], ts_col)
-        return self._commit_fold(todo, folded_files, folded_deltas, written)
+        return self._compact_local(snap, todo, target_files_per_bucket)
 
     def _compact_local(
         self, snap: Snapshot, todo: list[int], target_files_per_bucket: int
@@ -1341,13 +1275,17 @@ class LakeTable:
         repartition on the bucket before a partitionBy write), so a bucket's
         LWW winners are computable from its own file group alone — no
         shuffle, no sort of wide rows through the exchange. Each task:
-        concat the group's tables (schemas unified by name, pre-evolution
-        files null-filled), pick per-key max (ts, coalesce(offset, -1)) row
-        indices on the NARROW columns only (pandas), ``take`` those rows
-        from the arrow table (wide columns never converted), write
-        ~target files. Same winner rule as _resolve_lww; tombstones are rows
-        like any other and survive. Arrow/pandas here is the engine's
-        sanctioned vectorized path (no per-row python)."""
+        pick per-key max (ts, coalesce(offset, -1)) rows on the NARROW
+        columns only (:func:`_lww_winner_pick`), then stream each file's
+        winners into ~target files (schemas unified by name, pre-evolution
+        files null-filled; wide columns never converted). Same winner rule
+        as _resolve_lww; tombstones are rows like any other and survive.
+
+        A bucket with no deltas and no delete vectors skips the winner pick
+        and keeps EVERY row: its base is either already resolved (one row
+        per key) or blind-appended (``append()``), where repeated keys are
+        data, not superseded versions. Such a bucket is only rewritten for
+        its file count."""
         import json as _json
 
         from pyspark.sql.types import TimestampNTZType, TimestampType
@@ -1373,7 +1311,8 @@ class LakeTable:
         n_out = max(1, int(target_files_per_bucket))
 
         specs = [
-            (b, _json.dumps(sorted(folded_files[b]) + sorted(folded_deltas[b])))
+            (b, _json.dumps(sorted(folded_files[b]) + sorted(folded_deltas[b])),
+             bool(folded_deltas[b] or snap.bucket_dvs(b)))
             for b in todo
         ]
 
@@ -1401,7 +1340,8 @@ class LakeTable:
                 return pa.Table.from_arrays(cols, schema=target)
 
             for pdf in batches:
-                for b, files_json in zip(pdf["bucket"], pdf["files"]):
+                for b, files_json, lww in zip(
+                        pdf["bucket"], pdf["files"], pdf["lww"]):
                     b = int(b)
                     paths = [os.path.join(table_path, f) for f in _json.loads(files_json)]
                     # ---- pass 1 (narrow): winner (file, row) per key from the
@@ -1411,8 +1351,9 @@ class LakeTable:
                     # spin up arrow's own cpu_count-wide pool — tasks × cores
                     # threads oversubscribe the executor; parallelism comes
                     # from the per-bucket tasks themselves
-                    widx, file_all, row_all, schemas = _lww_winner_pick(
-                        paths, key, ts_col)
+                    widx, file_all, row_all, schemas = (
+                        _lww_winner_pick(paths, key, ts_col) if lww
+                        else _every_row(paths))
                     # unified output schema across evolution generations.
                     # Timestamp fields are normalized to the engine repr
                     # (us, UTC-or-naive per ts_kinds) in EVERY input schema
@@ -1487,7 +1428,7 @@ class LakeTable:
         # Range partitioning on the distinct bucket ids spreads buckets
         # evenly across tasks (hash repartition would collide ~40% of buckets
         # together). One task per core (up to one bucket each): the round-5
-        # fold lab (tools/fold_lab.py, BENCH_local_r5_fold_lab.json) showed
+        # fold lab (BENCH_local_r5_fold_lab.json, BENCH.md) showed
         # the old max(8, cores//3) cap was the fold's anti-scaling culprit —
         # 16M events fold in 25.6s with 10 tasks at 32 cores but 12.6s with
         # 32 tasks; the winner pick is integer lexsort CPU, not pure
@@ -1496,10 +1437,9 @@ class LakeTable:
         # near equal — flat, not inverted).
         par = self.spark.sparkContext.defaultParallelism
         n_tasks = min(len(specs), max(1, par))
-        if os.environ.get("DATAX_FOLD_TASKS"):  # fold-lab A/B override
-            n_tasks = min(len(specs), int(os.environ["DATAX_FOLD_TASKS"]))
-        spec_df = self.spark.createDataFrame(specs, "bucket int, files string") \
-            .repartitionByRange(n_tasks, "bucket")
+        spec_df = self.spark.createDataFrame(
+            specs, "bucket int, files string, lww boolean"
+        ).repartitionByRange(n_tasks, "bucket")
         stats = spec_df.mapInPandas(fold_bucket, "bucket int, n_files int, rows long") \
             .collect()  # driver-side: one row per bucket (metadata only)
         written = {
@@ -1523,8 +1463,9 @@ class LakeTable:
         as the rewrite fold (:func:`_lww_winner_pick` — (key, ts, offset)
         columns only) and writes the LOSER positions as a tiny (file, pos)
         parquet sidecar; the commit PROMOTES the bucket's delta files into
-        the base and attaches the recomputed DV set. Readers drop losers via
-        a broadcast anti-join (:meth:`_apply_dvs`) — no wide-row aggregation.
+        the base and attaches the recomputed DV set. Readers drop losers with
+        a file-local positional mask (:meth:`_apply_dvs`) — no wide-row
+        aggregation.
 
         Why this is the scale path: a rewrite fold's cost is the table's
         FULL width (read+write every surviving byte — memory-bandwidth-bound
@@ -1665,9 +1606,9 @@ class LakeTable:
         folded_deltas: dict[int, set],
         written: dict[int, list[str]],
     ) -> MergeStats:
-        """Optimistic-CAS commit shared by both fold strategies: re-layer
-        against the freshest snapshot, preserve deltas added after the fold's
-        read, reject concurrent folds of the same bucket."""
+        """Optimistic-CAS commit of a rewrite fold: re-layer against the
+        freshest snapshot, preserve deltas added after the fold's read,
+        reject concurrent folds of the same bucket."""
         n_new = sum(len(fs) for fs in written.values())
 
         for _attempt in range(64):

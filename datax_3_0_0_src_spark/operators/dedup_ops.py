@@ -324,6 +324,11 @@ def simhash(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", bi
     The re-hash gives every simhash bit full entropy at any width; identical
     token multisets still hash identically. Cross-engine integer math.
 
+    Precondition: ``id_col`` is unique per row. The bit sums are a
+    ``groupBy(id_col)``, so rows sharing an id collapse into ONE output row
+    whose simhash covers the union of their token multisets (not one row per
+    input row). Dedupe or re-key upstream when ids can repeat.
+
     Physical shape (round 7): explode to (id, token_hash) rows — the
     interpreted per-char rolling hash runs ONCE per token — then one
     CODEGEN'D hash aggregation computes all ``bits`` bit sums as sum(CASE)

@@ -203,7 +203,6 @@ def cdc_replay_fused(spark, sf_dir):
     )
     rep.run()
     rep.table.compact(target_files_per_bucket=2,
-                      concurrency=rep.cfg.compact_concurrency,
                       strategy=rep.cfg.compact_strategy)
     return rep.table.read().select("url", "warc_ts", "lang")
 

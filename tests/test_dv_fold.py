@@ -89,28 +89,6 @@ def test_dv_tombstone_survives_and_blocks_resurrection(spark, tmp_path):
     assert "b" not in state(t)
 
 
-def test_dv_then_shuffle_compact_does_not_resurrect_losers(spark, tmp_path):
-    """Round-6 advice #1 (high): after a DV fold, a bucket's base files
-    carry LWW-masked losers and its deltas are gone — a later SHUFFLE-
-    strategy rewrite (the default for LakeTable.compact and
-    ReplayConfig.compact_strategy) must re-resolve instead of copying the
-    masked losers into the new base while popping the DVs."""
-    t = seed_mor(spark, str(tmp_path / "t"))
-    t.compact(strategy="dv")
-    assert t.snapshot().all_dvs()
-    # file-count-triggered rewrite, DEFAULT strategy, no unresolved deltas
-    t.compact(strategy="shuffle", target_files_per_bucket=1)
-    snap = t.snapshot()
-    assert not snap.all_dvs()          # rewrite clears the delete vectors
-    assert all(not v for v in snap.deltas.values())
-    assert state(t) == EXPECTED        # ...and must not resurrect A0/A_LOSER/C0
-    # deleted key stays dead through the rewrite (tombstone row kept)
-    assert "b" not in state(t)
-    rows = t.read(include_deleted=True).collect()
-    assert {r["url"] for r in rows} == {"a", "b", "c", "d", "e"}
-    assert len(rows) == 5              # exactly one physical row per key now
-
-
 def test_fold_winner_pick_exact_at_2pow53_offsets(spark, tmp_path):
     """Round-6 advice #3 (low): the fold's narrow winner pick must compare
     offsets as exact int64 — float64 cannot represent 2^53+1, so equal-ts
@@ -172,14 +150,24 @@ def test_dv_then_new_deltas_then_refold(spark, tmp_path):
 
 
 def test_major_fold_after_dv_clears_dvs(spark, tmp_path):
+    """Round-6 advice #1 (high): after a DV fold, a bucket's base files
+    carry LWW-masked losers and its deltas are gone — a later rewrite fold
+    (file-count-triggered, no unresolved deltas) must re-resolve instead of
+    copying the masked losers into the new base while popping the DVs."""
     t = seed_mor(spark, str(tmp_path / "t"))
     t.compact(strategy="dv")
     assert t.snapshot().all_dvs()
     t.compact(strategy="local", target_files_per_bucket=1)
     snap = t.snapshot()
-    assert not snap.all_dvs()
+    assert not snap.all_dvs()          # rewrite clears the delete vectors
+    assert all(not v for v in snap.deltas.values())
     assert all(len(fs) <= 1 for fs in snap.files.values())
-    assert state(t) == EXPECTED
+    assert state(t) == EXPECTED        # ...and must not resurrect A0/A_LOSER/C0
+    # deleted key stays dead through the rewrite (tombstone row kept)
+    assert "b" not in state(t)
+    rows = t.read(include_deleted=True).collect()
+    assert {r["url"] for r in rows} == {"a", "b", "c", "d", "e"}
+    assert len(rows) == 5              # exactly one physical row per key now
 
 
 def test_cow_merge_after_dv(spark, tmp_path):
@@ -277,6 +265,8 @@ def test_dv_strategy_rejects_unknown(spark, tmp_path):
     t = seed_mor(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError, match="strategy"):
         t.compact(strategy="bogus")
+    with pytest.raises(ValueError, match="shuffle fold was removed"):
+        t.compact(strategy="shuffle")
 
 
 def test_dv_cas_preserves_delta_layered_after_fold_read(spark, tmp_path):

@@ -177,6 +177,36 @@ def test_compact_reduces_files_preserves_state(spark, tmp_table_dir):
     assert t.compact(target_files_per_bucket=1).touched_buckets == 0
 
 
+def test_compact_keeps_every_row_of_append_only_buckets(spark, tmp_table_dir):
+    """Blind appends (no deltas, no delete vectors) may repeat keys on
+    purpose: the default fold rewrites such a bucket for its file count only
+    and must not collapse the duplicates with a LWW winner pick."""
+    from collections import Counter
+
+    t = make_table(spark, tmp_table_dir, nb=2)
+    rows = [("a", "2024-01-01T00:00:00", "<a>", "A", "en", 0, "I"),
+            ("b", "2024-01-01T00:00:01", "<b>", "B", "en", 1, "I"),
+            ("c", "2024-01-01T00:00:02", "<c>", "C", "de", 2, "I")]
+    for _ in range(2):
+        t.append(batch(spark, rows).drop("log_offset", "op"))
+
+    def multiset():
+        return Counter(tuple(r) for r in t.read().collect())
+
+    before = multiset()
+    assert sum(before.values()) == 6
+    snap = t.snapshot()
+    assert not snap.all_deltas() and not snap.all_dvs()
+    frag = [b for b in map(int, snap.files) if len(snap.bucket_files(b)) > 1]
+    assert frag  # at least one bucket is fragmented, so the fold rewrites it
+    stats = t.compact()
+    assert stats.touched_buckets == len(frag)
+    assert multiset() == before
+    snap = t.snapshot()
+    for b in frag:
+        assert len(snap.bucket_files(b)) == 1  # target_files_per_bucket
+
+
 # ------------------------------------------------------------- merge-on-read
 def test_mor_merge_writes_deltas_not_base(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir)
@@ -295,11 +325,11 @@ def test_mor_concurrent_committers_optimistic_cas(spark, tmp_table_dir):
     assert got["a5"][1] == "A5" and got["b7"][1] == "B7"
 
 
-# ----------------------------------------------- parallel compaction (round 3)
-def test_parallel_compact_matches_serial_fold(spark, tmp_table_dir):
-    """concurrency>1 splits the buckets into disjoint groups folded by
-    concurrent Spark jobs with CAS commits — final state, file counts, and
-    delta-free layout must match the serial fold exactly."""
+# ------------------------------------------------------------ full fold
+def test_compact_folds_every_bucket_to_target(spark, tmp_table_dir):
+    """A fold of an 8-bucket MOR table (inserts, updates, deletes) touches
+    every bucket, leaves it delta-free at the target file count, keeps the
+    resolved state, and a second fold is metadata-only."""
     t = make_table(spark, tmp_table_dir, nb=8)
     rows = [(f"u{i}", f"2024-01-01T00:{i % 60:02d}:00", "<x>", f"T{i}", "en", i, "I")
             for i in range(120)]
@@ -310,62 +340,25 @@ def test_parallel_compact_matches_serial_fold(spark, tmp_table_dir):
     for r in (rows, updates, dels):
         t.merge(batch(spark, r), mode="mor")
     before = state(t)
-    stats = t.compact(target_files_per_bucket=1, concurrency=3)
+    stats = t.compact(target_files_per_bucket=1)
     assert stats.touched_buckets == 8
     snap = t.snapshot()
     assert snap.deltas == {}
     for b in snap.files:
         assert len(snap.bucket_files(int(b))) == 1
     assert state(t) == before
-    # idempotent: a second parallel compact is metadata-only
-    again = t.compact(target_files_per_bucket=1, concurrency=3)
+    # idempotent: a second compact is metadata-only
+    again = t.compact(target_files_per_bucket=1)
     assert again.touched_buckets == 0
-
-
-def test_compact_cas_preserves_delta_layered_after_fold_read(spark, tmp_table_dir):
-    """A MOR merge that lands BETWEEN a fold's snapshot read and its commit
-    must survive: the CAS re-layer keeps any delta the fold didn't read, and
-    read-time LWW across (folded base + late delta) stays exact."""
-    t = make_table(spark, tmp_table_dir, nb=2)
-    t.merge(batch(spark, [("a", "2024-01-01T00:00:00", "<x>", "A1", "en", 0, "I"),
-                          ("b", "2024-01-01T00:00:01", "<x>", "B1", "en", 1, "I")]),
-            mode="mor")
-    stale = t.snapshot()
-    todo = sorted(int(b) for b in stale.deltas)
-    # a concurrent merge lands after the fold's read...
-    t.merge(batch(spark, [("a", "2024-01-02T00:00:00", "<x>", "A2", "en", 5, "U")]),
-            mode="mor")
-    # ...then the fold (started from the stale snapshot) commits
-    t._compact_group(stale, todo, 1)
-    snap = t.snapshot()
-    assert snap.all_deltas(), "late delta must survive the fold commit"
-    got = state(t)
-    assert got["a"][1] == "A2" and got["b"][1] == "B1"
-    # and a full fold afterwards converges
-    t.compact(target_files_per_bucket=1)
-    assert t.snapshot().deltas == {} and state(t) == got
-
-
-def test_compact_same_bucket_conflict_detected(spark, tmp_table_dir):
-    """Two folds of the SAME bucket cannot both commit: the second (stale)
-    one must fail the base-files check instead of silently dropping the
-    first's rewrite."""
-    t = make_table(spark, tmp_table_dir, nb=2)
-    t.merge(batch(spark, [("a", "2024-01-01T00:00:00", "<x>", "A1", "en", 0, "I"),
-                          ("b", "2024-01-01T00:00:01", "<x>", "B1", "en", 1, "I")]),
-            mode="mor")
-    stale = t.snapshot()
-    todo = sorted(int(b) for b in stale.deltas)
-    t.compact(target_files_per_bucket=1)  # first fold wins
-    with pytest.raises(RuntimeError, match="concurrent compaction"):
-        t._compact_group(stale, todo, 1)
 
 
 def test_local_fold_matches_shuffle_fold(spark, tmp_path):
     """strategy='local' (zero-exchange pyarrow per-bucket rewrite) must
-    produce the identical final state as the shuffle fold — LWW winners,
-    tombstones, schema evolution null-backfill — and the identical manifest
-    shape (delta-free, target files per bucket)."""
+    produce the identical state as the table's own unfolded MOR read taken
+    before the fold — that read resolves LWW through _resolve_lww's
+    max_by aggregation, an independent reference — covering LWW winners,
+    tombstones and schema evolution null-backfill, with a delta-free
+    manifest at the target files per bucket."""
     rows = [(f"u{i}", f"2024-01-01T00:{i % 60:02d}:00", "<x>", f"T{i}", "en", i, "I")
             for i in range(100)]
     updates = [(f"u{i}", f"2024-01-02T00:{i % 60:02d}:00", "<x>", f"N{i}", "en",
@@ -373,33 +366,30 @@ def test_local_fold_matches_shuffle_fold(spark, tmp_path):
     dels = [(f"u{i}", "2024-01-03T00:00:00", None, None, None, 2000 + i, "D")
             for i in range(1, 100, 10)]
 
-    tables = {}
-    for name, strategy in (("sh", "shuffle"), ("lo", "local")):
-        t = make_table(spark, str(tmp_path / name), nb=4)
-        for r in (rows, updates, dels):
-            t.merge(batch(spark, r), mode="mor")
-        # evolution mid-deltas: one bucket group gains a column
-        evolved = batch(spark, [("zz", "2024-01-04T00:00:00", "<x>", "Z", "en",
-                                 9000, "I")]).withColumn("fetch_status", F.lit(7))
-        t.merge(evolved, mode="mor")
-        st = t.compact(target_files_per_bucket=2, strategy=strategy)
-        assert st.touched_buckets == 4
-        assert t.snapshot().deltas == {}
-        for b in t.snapshot().files:
-            assert len(t.snapshot().bucket_files(int(b))) <= 2
-        tables[name] = t
+    t = make_table(spark, str(tmp_path / "lo"), nb=4)
+    for r in (rows, updates, dels):
+        t.merge(batch(spark, r), mode="mor")
+    # evolution mid-deltas: one bucket group gains a column
+    evolved = batch(spark, [("zz", "2024-01-04T00:00:00", "<x>", "Z", "en",
+                             9000, "I")]).withColumn("fetch_status", F.lit(7))
+    t.merge(evolved, mode="mor")
+    a = t.read(include_deleted=True, with_sys_cols=True).toPandas()
+    st = t.compact(target_files_per_bucket=2, strategy="local")
+    assert st.touched_buckets == 4
+    assert t.snapshot().deltas == {}
+    for b in t.snapshot().files:
+        assert len(t.snapshot().bucket_files(int(b))) <= 2
 
-    a = tables["sh"].read(include_deleted=True, with_sys_cols=True).toPandas()
-    b = tables["lo"].read(include_deleted=True, with_sys_cols=True).toPandas()
+    b = t.read(include_deleted=True, with_sys_cols=True).toPandas()
     a = a.sort_values("url").reset_index(drop=True)
     b = b.sort_values("url").reset_index(drop=True)
     import pandas as pd
     pd.testing.assert_frame_equal(a, b[a.columns], check_dtype=False)
     assert "fetch_status" in a.columns
-    # tombstones preserved by both
+    # tombstones preserved by the fold (and present in the reference)
     assert bool(a["_deleted"].fillna(False).any())
-    # and the fold is idempotent under the local strategy too
-    again = tables["lo"].compact(target_files_per_bucket=2, strategy="local")
+    # and the fold is idempotent
+    again = t.compact(target_files_per_bucket=2, strategy="local")
     assert again.touched_buckets == 0
 
 
@@ -417,6 +407,17 @@ def test_local_fold_preserves_late_delta_and_rejects_conflict(spark, tmp_path):
     got = state(t)
     assert got["a"][1] == "A2" and got["b"][1] == "B1"
     # conflict: a second fold from the stale snapshot must be rejected
+    with pytest.raises(RuntimeError, match="concurrent compaction"):
+        t._compact_local(stale, todo, 1)
+    # a full fold afterwards converges
+    t.compact(target_files_per_bucket=1)
+    assert t.snapshot().deltas == {} and state(t) == got
+    # a stale fold read before a committed compact() cannot commit over it
+    t.merge(batch(spark, [("b", "2024-01-02T00:00:01", "<x>", "B2", "en", 6, "U")]),
+            mode="mor")
+    stale = t.snapshot()
+    todo = sorted(int(x) for x in stale.deltas)
+    t.compact(target_files_per_bucket=1)  # first fold wins
     with pytest.raises(RuntimeError, match="concurrent compaction"):
         t._compact_local(stale, todo, 1)
 
@@ -527,14 +528,15 @@ def test_rebucket_rejects_concurrent_commit(spark, tmp_path):
 
 # ------------------------------------- fold winner-pick tie semantics (round 5)
 def test_local_fold_tiebreaks_match_shuffle_fold(spark, tmp_path):
-    """Adversarial LWW corner cases through BOTH fold strategies: equal ts
+    """Adversarial LWW corner cases through the rewrite fold: equal ts
     (offset decides), null ts (loses to any real ts; among null-ts rows the
     offset decides), null offset (treated as -1). The local fold's
-    factorize+lexsort winner pick must agree with the shuffle fold's
-    window-sort row for row. (Fully-equal (ts, offset) rows are NOT tested:
-    the engine's contract is at most one row per (key, offset) — WAL
-    offsets are unique and every batch is pre-deduped — and outside it the
-    shuffle fold / max_by read path tie-break is arbitrary by design.)"""
+    dictionary-encode+lexsort winner pick must agree row for row with the
+    same table's unfolded MOR read (_resolve_lww's max_by). (Fully-equal
+    (ts, offset) rows are NOT tested: the engine's contract is at most one
+    row per (key, offset) — WAL offsets are unique and every batch is
+    pre-deduped — and outside it the max_by read path tie-break is
+    arbitrary by design.)"""
     rows_by_file = [
         # file 1 (first delta batch)
         [
@@ -559,17 +561,20 @@ def test_local_fold_tiebreaks_match_shuffle_fold(spark, tmp_path):
             BATCH_SCHEMA,
         )
 
-    tables = {}
-    for name, strategy in (("sh", "shuffle"), ("lo", "local")):
-        t = make_table(spark, str(tmp_path / name), nb=2)
-        for rows in rows_by_file:
-            t.merge(batch_nullable(rows), mode="mor")
-        t.compact(target_files_per_bucket=1, strategy=strategy)
-        tables[name] = {
+    def winners(t):
+        return {
             r["url"]: (r["text"], r["_lww_offset"])
             for r in t.read(include_deleted=True, with_sys_cols=True).collect()
         }
-    assert tables["lo"] == tables["sh"]
+
+    t = make_table(spark, str(tmp_path / "lo"), nb=2)
+    for rows in rows_by_file:
+        t.merge(batch_nullable(rows), mode="mor")
+    tables = {"mor": winners(t)}
+    t.compact(target_files_per_bucket=1, strategy="local")
+    assert not t.snapshot().all_deltas()
+    tables["lo"] = winners(t)
+    assert tables["lo"] == tables["mor"]
     # and the specific winners are the documented semantics
     assert tables["lo"]["tie_off"][0] == "f2-off2"       # equal ts -> max offset
     assert tables["lo"]["null_ts"][0] == "f1-nullts-off9"  # both null ts -> offset

@@ -179,8 +179,7 @@ def test_overlapped_fold_same_state_and_fully_folded(spark, log_and_work):
     log_dir, work, table = log_and_work
     rep = make_replayer(spark, log_dir, work, table,
                         max_events_per_batch=400, max_concurrent_batches=3,
-                        compact_every=2, compact_overlap=True,
-                        compact_concurrency=2)
+                        compact_every=2, compact_overlap=True)
     results = rep.run()
     assert len(results) == 9
     assert_state_matches(rep, CFG)
@@ -227,6 +226,50 @@ def test_overlap_requires_compact_every(spark, tmp_path):
         make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
                       str(tmp_path / "t"), compact_overlap=True,
                       compact_every=None)
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "bogus"])
+def test_replayer_rejects_unknown_compact_strategy(spark, tmp_path, strategy):
+    """An unknown fold strategy fails at construction, not at the first
+    fold N batches later (and before any table is created)."""
+    with pytest.raises(ValueError, match="compact_strategy"):
+        make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
+                      str(tmp_path / "t"), compact_strategy=strategy)
+    assert not (tmp_path / "t").exists()
+
+
+def test_frozen_bench_call_shapes(spark, tmp_path):
+    """bench.py (frozen) builds its config from THROUGHPUT_PROFILE plus
+    compact_concurrency and passes compact(concurrency=...): both are
+    accepted and ignored. Removing either shim must break this test."""
+    from datax_3_0_0_src_spark.cdc.replayer import THROUGHPUT_PROFILE
+    from test_lake_table import batch
+
+    profile = dict(THROUGHPUT_PROFILE, max_concurrent_batches=4,
+                   compact_concurrency=4)
+    profile["max_events_per_batch"] = 1000
+    base = str(tmp_path)
+    rep = Replayer(spark, ReplayConfig(log_dir=base + "/wal",
+                                       table_path=base + "/pages",
+                                       work_dir=base + "/work", num_buckets=4,
+                                       **profile))
+    # three delta layers: after the DV fold promotes them, a bucket holding
+    # an even key has 3 base files, above bench.py's rewrite target of 2
+    for n, (day, step) in enumerate([(1, 1), (2, 1), (3, 2)]):
+        rep.table.merge(batch(spark, [
+            (f"u{i}", f"2024-01-0{day}T00:00:00", "<x>", f"{'ABC'[n]}{i}",
+             "en", 100 * n + i, "U")
+            for i in range(0, 20, step)]), mode="mor")
+    assert rep.table.compact(strategy="dv").touched_buckets > 0
+    stats = rep.table.compact(target_files_per_bucket=2,
+                              concurrency=profile["compact_concurrency"],
+                              strategy=profile["compact_strategy"])
+    assert stats.touched_buckets > 0  # the rewrite fold ran
+    snap = rep.table.snapshot()
+    assert not snap.all_deltas() and not snap.all_dvs()
+    got = {r["url"]: r["text"] for r in rep.table.read().collect()}
+    assert len(got) == 20
+    assert got["u0"] == "C0" and got["u1"] == "B1"
 
 
 def test_rate_cap_with_offset_gaps_no_events_lost(spark, tmp_path):
@@ -285,9 +328,8 @@ def test_throughput_profile_clean_resume_evolution_fold(spark, tmp_path):
     assert sorted(r.epoch for r in rest) == [1, 2]
     assert_state_matches(rep2, gcfg)
 
-    # parallel fold under the default compact_concurrency
-    rep2.table.compact(
-        target_files_per_bucket=1, concurrency=rep2.cfg.compact_concurrency)
+    # full fold after the resumed run
+    rep2.table.compact(target_files_per_bucket=1)
     assert rep2.table.snapshot().deltas == {}
     assert_state_matches(rep2, gcfg)
 
