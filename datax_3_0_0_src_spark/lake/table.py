@@ -38,6 +38,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import struct
 import uuid
 from dataclasses import dataclass
 
@@ -46,7 +47,8 @@ import pyarrow as pa  # module-level: arrow_udf type hints must resolve here
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    BooleanType, LongType, StringType, StructField, StructType,
+    BinaryType, BooleanType, DataType, IntegerType, LongType, StringType,
+    StructField, StructType,
 )
 
 from .manifest import Snapshot, read_snapshot, write_snapshot
@@ -84,6 +86,79 @@ def exchange_width(par: int, nb: int, rows: int | None) -> int:
     if rows is None:
         return full
     return min(full, max(par, -(-rows // ROWS_PER_TASK)))
+
+
+# XXH64 primes and the seed Spark's ``xxhash64`` uses (XxHash64 expression)
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+_XXH_SEED = 42
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64_bytes(data: bytes) -> int:
+    """XXH64 of ``data`` at seed 42, as Spark's ``XXH64.hashUnsafeBytes``
+    (the reference algorithm, little-endian lanes), as a signed int64."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(_XXH_SEED + _P1 + _P2) & _M64, (_XXH_SEED + _P2) & _M64,
+             _XXH_SEED, (_XXH_SEED - _P1) & _M64]
+        lanes = struct.unpack_from(f"<{n // 32 * 4}Q", data)
+        for j in range(0, len(lanes), 4):
+            v = [_xxh_round(v[k], lanes[j + k]) for k in range(4)]
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh_round(0, a)) * _P1 + _P4) & _M64
+        i = n // 32 * 32
+    else:
+        h = (_XXH_SEED + _P5) & _M64
+    h = (h + n) & _M64
+    for j in range(i, n - 7, 8):
+        h ^= _xxh_round(0, struct.unpack_from("<Q", data, j)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i = j + 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def xxhash64(value, dtype: DataType) -> int:
+    """Driver-side ``F.xxhash64`` of one non-null ``value`` of Spark type
+    ``dtype``: the same signed int64 the JVM computes, so ``h % nb`` is the
+    row's ``_bucket_expr`` bucket (Python's ``%`` is ``pmod``). Strings hash
+    their UTF-8 bytes, binaries their raw bytes; ints and longs take
+    Spark's ``hashInt`` / ``hashLong`` paths, which are XXH64 over the
+    value's 4 / 8 little-endian bytes. Pinned against the JVM in
+    tests/test_xxhash64.py. Any other type, or a value that is not of
+    ``dtype``, raises ``TypeError``."""
+    if isinstance(dtype, StringType) and isinstance(value, str):
+        return _xxh64_bytes(value.encode("utf-8"))
+    if isinstance(dtype, BinaryType) and isinstance(value, (bytes, bytearray)):
+        return _xxh64_bytes(bytes(value))
+    if isinstance(dtype, IntegerType) and isinstance(value, int):
+        return _xxh64_bytes(struct.pack("<i", value))
+    if isinstance(dtype, LongType) and isinstance(value, int):
+        return _xxh64_bytes(struct.pack("<q", value))
+    raise TypeError(
+        f"xxhash64: unsupported key {value!r} of type {dtype.simpleString()}")
 
 
 def _lww_winner_pick(paths: list, key: str, ts_col: str):
@@ -412,23 +487,20 @@ class LakeTable:
         # (guide §4.1: control how many bytes cross — at 64M rows the
         # string column alone was multi-GB of Arrow transfer, the dominant
         # cost of the post-DV read probe). The hash->file map is computed
-        # driver-side with the SAME JVM xxhash64 over the (small) scanned
-        # file list; a collision inside that list would be detected right
-        # here and falls back to exact path strings, so masking can never
-        # hit the wrong file.
-        snap_rels = sorted(
-            f for f in (scan_files or [])
-            if (m := re.search(rf"{SYS_BUCKET}=(-?\d+)/", f))
-            and int(m.group(1)) in dv_by_bucket
-        )
-        hash_rows = self.spark.createDataFrame(
-            [(r,) for r in snap_rels], "f string"
-        ).select("f", F.xxhash64("f").alias("h")).collect() if snap_rels else []
+        # on the driver by ``xxhash64`` (this module's XXH64, pinned to the
+        # JVM's in tests/test_xxhash64.py) over the (small) scanned file
+        # list — no Spark job; a collision inside that list would be
+        # detected right here and falls back to exact path strings, so
+        # masking can never hit the wrong file.
         by_hash: dict[int, tuple] = {}
-        for r in hash_rows:
-            b = int(re.search(rf"{SYS_BUCKET}=(-?\d+)/", r["f"]).group(1))
-            by_hash[int(r["h"])] = (r["f"], dv_by_bucket.get(b, ()))
-        if scan_files is not None and len(by_hash) == len(snap_rels):
+        n_rels = 0
+        for f in scan_files or []:
+            m = re.search(rf"{SYS_BUCKET}=(-?\d+)/", f)
+            if m and int(m.group(1)) in dv_by_bucket:
+                n_rels += 1
+                by_hash[xxhash64(f, StringType())] = (
+                    f, dv_by_bucket[int(m.group(1))])
+        if scan_files is not None and len(by_hash) == n_rels:
             @arrow_udf("boolean")
             def _dv_keep_h(fh: pa.Array, pos: pa.Array) -> pa.Array:
                 # arrow_udf (round 7): the two int64 inputs and the boolean
@@ -574,9 +646,10 @@ class LakeTable:
         manifest + bloom sidecar reads and scans a handful of files.
 
         Intended for point reads (up to ~thousands of keys — the key list
-        travels as an IN literal and a driver hash job); for bulk key sets
-        join against :meth:`read` instead. Diagnostics land in
-        ``self.last_prune``."""
+        travels as an IN literal and is hashed on the driver by
+        :func:`xxhash64`, so the lookup submits only its scan and its LWW
+        resolve); for bulk key sets join against :meth:`read` instead.
+        Diagnostics land in ``self.last_prune``."""
         import numpy as np
 
         from . import skipping
@@ -591,16 +664,10 @@ class LakeTable:
                                "scanned_files": 0}
             return self.spark.createDataFrame([], user_schema)
         ktype = user_schema[key].dataType
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], StructType([StructField(key, ktype)]))
-        hrows = kdf.select(
-            F.xxhash64(F.col(key)).alias("h"),
-            F.pmod(F.xxhash64(F.col(key)), F.lit(snap.num_buckets))
-            .cast("int").alias("b"),
-        ).collect()
         by_bucket: dict[int, list[int]] = {}
-        for r in hrows:
-            by_bucket.setdefault(int(r["b"]), []).append(int(r["h"]))
+        for k in keys:
+            h = xxhash64(k, ktype)
+            by_bucket.setdefault(h % snap.num_buckets, []).append(h)
         files: list[str] = []
         dfiles: list[str] = []
         vfiles: list[str] = []

@@ -1,5 +1,6 @@
 """Per-batch sizing of the replay's layout exchange, the memoized footer pass,
-the scan-split estimate, and the scan-split conf staying inside a run."""
+the scan-split estimate, and the session conf staying untouched by runs and
+reads."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ from datax_3_0_0_src_spark.cdc.replayer import SPLIT_CONF, ReplayConfig, Replaye
 from datax_3_0_0_src_spark.lake.table import ROWS_PER_TASK, exchange_width
 
 from test_replayer_e2e import CFG, assert_state_matches
+from test_skipping import URLS_A, _fill, make_table
 
 NB = 8
 
@@ -205,4 +207,18 @@ def test_run_and_requeue_leave_session_conf_unchanged(spark, tmp_path):
     finally:
         if saved is not None:
             spark.conf.set(SPLIT_CONF, saved)
+    assert dict(spark.conf.getAll) == before
+
+
+def test_reads_leave_session_conf_unchanged(spark, tmp_path):
+    # the listing threshold is a build-time session setting ...
+    assert spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold") == "1024"
+    t = _fill(spark, make_table(spark, str(tmp_path / "t")))
+    t.compact(strategy="dv")
+    assert t.snapshot().all_dvs()
+    # ... and no read path sets anything on the session
+    before = dict(spark.conf.getAll)
+    assert t.lookup(URLS_A[:3]).collect()
+    assert t.read().collect()
     assert dict(spark.conf.getAll) == before

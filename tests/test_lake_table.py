@@ -352,7 +352,7 @@ def test_compact_folds_every_bucket_to_target(spark, tmp_table_dir):
     assert again.touched_buckets == 0
 
 
-def test_local_fold_matches_shuffle_fold(spark, tmp_path):
+def test_local_fold_matches_unfolded_mor_read(spark, tmp_path):
     """strategy='local' (zero-exchange pyarrow per-bucket rewrite) must
     produce the identical state as the table's own unfolded MOR read taken
     before the fold — that read resolves LWW through _resolve_lww's
@@ -527,7 +527,7 @@ def test_rebucket_rejects_concurrent_commit(spark, tmp_path):
 
 
 # ------------------------------------- fold winner-pick tie semantics (round 5)
-def test_local_fold_tiebreaks_match_shuffle_fold(spark, tmp_path):
+def test_local_fold_tiebreaks_match_unfolded_mor_read(spark, tmp_path):
     """Adversarial LWW corner cases through the rewrite fold: equal ts
     (offset decides), null ts (loses to any real ts; among null-ts rows the
     offset decides), null offset (treated as -1). The local fold's

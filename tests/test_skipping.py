@@ -209,3 +209,54 @@ def test_expire_reclaims_stats_sidecars(spark, tmp_table_dir):
     # including Spark's _SUCCESS/.crc residue and the stats sidecar
     assert not [d for d in os.listdir(data_root) if d.startswith("d0")]
     assert state(t.read())  # table still reads fine
+
+
+def _jobs(spark, group: str, fn):
+    """Run ``fn`` under a job group; returns (result, Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_runs_only_scan_and_resolve_jobs(spark, tmp_path):
+    """A lookup over more than 32 files (Spark's default threshold for a
+    parallel listing job) submits only its scan and LWW-resolve jobs: keys
+    hash on the driver and the named files are stat'ed serially."""
+    t = make_table(spark, str(tmp_path / "t"), nb=2)
+    urls = URLS_A[:8]
+    for i in range(18):  # 18 MOR layers, each touching both buckets
+        t.merge(batch(spark, day_rows(1 + i % 20, urls, 100 * i)), mode="mor")
+    assert {int(f.split("_bucket=")[1].split("/")[0])
+            for f in t.snapshot().all_deltas()} == {0, 1}
+    keys = [urls[0], urls[3], urls[6], "https://absent.example/"]
+    want = {k: v for k, v in state(t.read()).items() if k in keys}
+    assert len(want) == 3
+
+    rows, n_jobs = _jobs(spark, f"lookup-{tmp_path.name}",
+                         lambda: t.lookup(keys).collect())
+    assert t.last_prune["scanned_files"] > 32
+    assert n_jobs <= 2
+    assert {r["url"]: (r["warc_ts"], r["text"]) for r in rows} == want
+    # the last layer (day 18) wins every key
+    assert {v[1] for v in want.values()} == {
+        f"text-{u}-2024-01-18T{i:02d}:00:00" for i, u in enumerate(urls)
+        if u in keys}
+
+
+def test_dv_folded_read_builds_without_jobs(spark, tmp_table_dir):
+    t = _fill(spark, make_table(spark, tmp_table_dir))
+    t.compact(strategy="dv")
+    assert t.snapshot().all_dvs()
+    full = state(t.read())
+    df, n_jobs = _jobs(spark, "dv-read-build", t.read)
+    assert n_jobs == 0  # no path-hash job, no listing job
+    assert state(df) == full
+    lk, n_jobs = _jobs(spark, "dv-lookup", lambda: t.lookup(URLS_A[:3]).collect())
+    assert n_jobs <= 2
+    assert {r["url"]: (r["warc_ts"], r["text"]) for r in lk} == {
+        k: full[k] for k in URLS_A[:3]}
