@@ -215,8 +215,8 @@ def write_event_log(spark: SparkSession, cfg: EventGenConfig, log_dir: str,
     # segment file a 2M-event slice spans only ~4 files, so the batch's map
     # stage runs ~4-wide no matter how many cores the reader has (measured:
     # cpu_frac 0.63 at 32 cores, the round-6 verdict's utilization gap).
-    # Small row groups let the replayer's slice-aware split sizing (set for
-    # its own scans during a run, replayer._tune_scan_splits) cut real,
+    # Small row groups let the replayer's slice-aware split sizing (set once
+    # per run for its own scans, replayer._tune_scan_splits) cut real,
     # row-group-aligned splits at any width; offset min/max stats per row
     # group make non-slice groups prune for free. Same rows, same
     # bytes-per-event within ~2%.

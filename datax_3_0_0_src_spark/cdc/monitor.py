@@ -81,7 +81,7 @@ class HungTaskGuard:
             # block's LAST Spark action completed (possibly after its
             # checkpoint was written) but before this __exit__ cancelled it.
             # The batch succeeded — raising here would fail a committed batch
-            # (and, in concurrent mode, the whole pool). Log and return.
+            # (and the whole pool). Log and return.
             elapsed = time.monotonic() - (self._t0 or 0.0)
             self.late_cancel_sink(
                 f"[watchdog] late cancellation of {self.group!r} ignored: block "

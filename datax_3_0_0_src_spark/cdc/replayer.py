@@ -16,6 +16,9 @@ core/src/main/java/com/alibaba/datax/core/job/JobContainer.java:100-202):
 - task failover       => idempotent MERGE + committed-epoch guard: re-running
                          any batch is a no-op (TaskGroupContainer failover,
                          core/.../taskgroup/TaskGroupContainer.java:402-429)
+- task group schedule => ONE thread-pool loop runs 1..max_concurrent_batches
+                         batches and stops scheduling at the first failure
+                         (TaskGroupContainer.start, AbstractScheduler)
 
 Every micro-batch runs one pipeline: ONE scan of its WAL slice carries
 validation + quarantine side-write, Arrow text extraction, and the MOR delta
@@ -59,9 +62,8 @@ SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 def _split_conf_scoped(method):
     """Keep the scan-split tuning inside one Replayer entry point: the
     caller's maxPartitionBytes is restored on the way out (unset when it was
-    unset) and the next sequential run re-tunes. The tuned value only
-    matters while the call's batches scan; left on the shared session it
-    sized every later scan's splits too."""
+    unset). The tuned value only matters while the call's batches scan;
+    left on the shared session it sized every later scan's splits too."""
 
     @functools.wraps(method)
     def scoped(self: "Replayer", *args, **kwargs):
@@ -69,7 +71,6 @@ def _split_conf_scoped(method):
         try:
             return method(self, *args, **kwargs)
         finally:
-            self._split_frozen = False
             if saved is None:
                 self.spark.conf.unset(SPLIT_CONF)
             else:
@@ -112,26 +113,21 @@ class ReplayConfig:
     # manifest commit is an optimistic-retry CAS. Amortizes per-batch fixed
     # costs (job scheduling, commit, Python dispatch) across batches.
     max_concurrent_batches: int = 4
-    compact_every: int | None = None   # fold MOR deltas every N batches
+    # fold MOR deltas every N committed batches in a BACKGROUND thread,
+    # overlapped with the still-running batches, then once more after the
+    # last commit. Safe by construction: _commit_fold re-layers against the
+    # freshest snapshot and preserves any delta committed after the fold's
+    # read (read-time LWW against folded rows is exact — the folded rows
+    # keep their (ts, offset)), and folds never race each other because the
+    # fold thread is single. The post-run state is fully folded:
+    # <= compact_target_files files/bucket, zero deltas.
+    compact_every: int | None = None
     compact_target_files: int = 2      # files/bucket after a fold
     compact_concurrency: int = 4       # ignored; see THROUGHPUT_PROFILE
     # "local" (major fold: zero-exchange pyarrow rewrite, one task per
     # bucket up to the core count) | "dv" (minor fold: LWW resolved via
     # positional-delete sidecars, no data rewrite — see LakeTable._fold_dv)
     compact_strategy: str = "local"
-    # pipelined mode only: run the compact_every folds in a BACKGROUND thread
-    # overlapped with the still-running batches instead of serializing them
-    # after the last commit. Safe by construction: _commit_fold re-layers
-    # against the freshest snapshot and preserves any delta committed after
-    # the fold's read (read-time LWW against folded rows is exact — the
-    # folded rows keep their (ts, offset)), and concurrent folds can't race
-    # each other because the overlap thread is single. run() drains the
-    # in-flight fold and performs one final synchronous tail fold, so the
-    # post-run table state is identical to the serial fold's (fully folded,
-    # <= compact_target_files files/bucket, zero deltas) — only the WALL
-    # placement of the fold work moves, into the apply's idle core-seconds
-    # (driver planning / commit phases leave executors idle in waves).
-    compact_overlap: bool = False
     # parquet codec for delta/base/fold files this job writes ("snappy" |
     # "zstd" | ...): zstd shrinks the bytes the memory-bandwidth-bound fold
     # and apply must move (~35-40% in the round-5/6 A/Bs) for a small
@@ -205,15 +201,19 @@ class Replayer:
         self._epoch_df_cache: dict[int, DataFrame] = {}
         # per-epoch [(file, min_offset, max_offset)] from the footer pass —
         # drives per-slice FILE pruning (_slice_df). Written once per epoch
-        # by plan_batches or the split tuning, before the batch pool starts.
+        # by plan_batches or _tune_scan_splits, before the batch pool starts.
         self._epoch_file_stats: dict[int, list[tuple[str, int, int]]] = {}
         # per-epoch (min_offset, max_offset, rows) from the same footer pass,
         # None when the footers lack offset stats: plan_batches, the split
         # tuning and the exchange sizing all reuse one pass per epoch
         self._epoch_stats: dict[int, tuple[int, int, int] | None] = {}
         self._epoch_cache_lock = threading.Lock()
-        # concurrent run(): split size pinned for the run (_freeze_scan_splits)
-        self._split_frozen = False
+        # (epoch, sub) pairs whose checkpoint file is durable: filled from one
+        # checkpoint-dir read per run (last_committed_batch), then extended by
+        # _write_checkpoint, so a commit prunes its committed:* keys without
+        # re-listing the dir. Pool threads add to it; readers only test
+        # membership.
+        self._durable: set[tuple[int, int]] = set()
         if cfg.salt_partitions and not cfg.dedup_per_batch:
             raise ValueError(
                 "salt_partitions needs dedup_per_batch=True (salting splits "
@@ -223,12 +223,6 @@ class Replayer:
             raise ValueError(
                 f"compact_strategy must be 'local' or 'dv' (the shuffle fold "
                 f"was removed), got {cfg.compact_strategy!r}"
-            )
-        if cfg.compact_overlap and not cfg.compact_every:
-            raise ValueError(
-                "compact_overlap=True needs compact_every set (it is the "
-                "overlapped fold's trigger: fold after every N committed "
-                "batches)"
             )
         if LakeTable.exists(cfg.table_path):
             self.table = LakeTable.load(spark, cfg.table_path)
@@ -451,13 +445,14 @@ class Replayer:
         stats = self._epoch_stats_from_footers(epoch)
         return size, (stats[2] if stats else None)
 
-    def _tune_scan_splits(self, epoch: int) -> None:
-        """Size parquet splits so each rate-capped slice scans ~par-wide
-        (see _split_target). Driver-side listing is metadata-only."""
-        br = self._epoch_bytes_rows(epoch)
-        if br is None:
-            return
-        target = self._split_target([br])
+    def _tune_scan_splits(self, epochs: list[int]) -> None:
+        """Size parquet splits once per entry point so each rate-capped slice
+        of these epochs scans ~par-wide (see _split_target); the entry point
+        restores the caller's value (_split_conf_scoped). Driver-side
+        metadata only."""
+        sizes = [br for e in set(epochs)
+                 if (br := self._epoch_bytes_rows(e)) is not None]
+        target = self._split_target(sizes)
         if target:
             self.spark.conf.set(SPLIT_CONF, str(target))
 
@@ -468,9 +463,7 @@ class Replayer:
         Memoized per epoch (see __init__): the file index + schema are
         resolved once per epoch instead of once per offset-slice batch.
         Safe because WAL epoch dirs are immutable once logged — requeue and
-        resume re-read the same frozen file set."""
-        if not self._split_frozen:
-            self._tune_scan_splits(epoch)
+        resume re-read the same frozen file set. Sets no session conf."""
         with self._epoch_cache_lock:
             df = self._epoch_df_cache.get(epoch)
             if df is None:
@@ -502,6 +495,7 @@ class Replayer:
             ),
             exclusive=False,
         )
+        self._durable.add((res.epoch, res.sub))
 
     def _read_checkpoints(self) -> list[dict]:
         d = self.cfg.checkpoint_dir
@@ -527,16 +521,14 @@ class Replayer:
     def _committed_prop_prunes(self) -> dict[str, None]:
         """{committed:E:S -> None} for pairs whose checkpoint file already
         exists — piggybacked on the next commit to garbage-collect the
-        bookkeeping keys (driver-side metadata reads only)."""
-        done = {
-            (int(c["epoch"]), int(c.get("sub", 0))) for c in self._read_checkpoints()
-        }
+        bookkeeping keys. O(1) per key: membership in the in-memory durable
+        set, no checkpoint-dir read."""
         out: dict[str, None] = {}
         for k in self.table.snapshot().properties:
             if not k.startswith("committed:"):
                 continue
             _, e, s = k.split(":")
-            if (int(e), int(s)) in done:
+            if (int(e), int(s)) in self._durable:
                 out[k] = None
         return out
 
@@ -547,9 +539,10 @@ class Replayer:
         Rebuilds a checkpoint for EVERY ``committed:E:S`` property lacking
         one, so concurrent-mode crashes (several batches committed, some
         checkpoints lost) heal completely instead of only the last committer's
-        identity."""
+        identity. Resets the in-memory durable set from this one read."""
         ckpts = self._read_checkpoints()
         done = {(int(c["epoch"]), int(c.get("sub", 0))) for c in ckpts}
+        self._durable = set(done)
         ids = [int(c["batch_id"]) for c in ckpts]
         snap = self.table.snapshot()
         for k, v in snap.properties.items():
@@ -598,127 +591,112 @@ class Replayer:
     # -------------------------------------------------------------- running
     @_split_conf_scoped
     def run(self, *, stop_after_batches: int | None = None) -> list[BatchResult]:
-        """Replay all uncommitted micro-batches. Safe to re-run / resume."""
+        """Replay all uncommitted micro-batches. Safe to re-run / resume.
+
+        Up to ``max_concurrent_batches`` batches run side by side on a driver
+        thread pool: MOR deltas are commit-order-free, so batch N+1's
+        scan/extract overlaps batch N's write and per-batch fixed costs
+        amortize across the pipeline. The first failed batch stops the
+        schedule: batches not yet started never run, the in-flight ones and
+        the fold finish, then the failure is raised."""
+        from concurrent.futures import ThreadPoolExecutor, as_completed
+
+        from pyspark.util import inheritable_thread_target
+
         from .monitor import PeriodicReporter
 
+        cfg = self.cfg
         self.last_committed_batch()  # heal a lost checkpoint before resume
-        done = self.committed_pairs()
-        reporter = None
-        if self.cfg.report_interval_s:
-            sink = self.cfg.report_sink if callable(self.cfg.report_sink) else print
-            reporter = PeriodicReporter(self.cfg.report_interval_s, sink=sink).start()
-        results: list[BatchResult] = []
-        pending = [p for p in self.plan_batches() if (p[1], p[2]) not in done]
+        pending = [p for p in self.plan_batches()
+                   if (p[1], p[2]) not in self._durable]
         if stop_after_batches is not None:
             pending = pending[:stop_after_batches]
-        conc = max(1, self.cfg.max_concurrent_batches)
+        self._tune_scan_splits([p[1] for p in pending])
+        # pre-warm the epoch DataFrame memo while executors are IDLE: the
+        # first discovery of a >32-file epoch runs a listing job, and
+        # submitted after the write pipeline fills it waits seconds in the
+        # scheduler queue (profiled) — here it runs on an empty cluster
+        for e in dict.fromkeys(p[1] for p in pending):
+            self.read_epoch(e)
+
+        def carry(fn):
+            # pool threads run their Spark jobs under the caller's local
+            # properties (job group, description), copied at submit time:
+            # one copy per task, because tasks sharing one copy overwrite
+            # each other's job group and SQL execution id
+            return inheritable_thread_target(self.spark)(fn)
+
+        failed = threading.Event()
+
+        def batch(p):
+            if failed.is_set():
+                return None  # a sibling batch failed: start nothing new
+            try:
+                return self._run_batch(*p)
+            except BaseException:
+                failed.set()
+                raise
+
+        def fold():
+            return self.table.compact(
+                target_files_per_bucket=cfg.compact_target_files,
+                strategy=cfg.compact_strategy,
+            )
+
+        reporter = None
+        if cfg.report_interval_s:
+            sink = cfg.report_sink if callable(cfg.report_sink) else print
+            reporter = PeriodicReporter(cfg.report_interval_s, sink=sink).start()
+        results: list[BatchResult] = []
+        # compact_every: a SINGLE background thread folds the deltas
+        # committed so far while later batches still run, so folds never
+        # race each other; deltas layered after a fold's read survive its
+        # commit (LakeTable._commit_fold)
+        fold_pool = ThreadPoolExecutor(max_workers=1)
+        fold_fut = None
+        since_fold = 0
         try:
-            if conc == 1:
-                for batch_id, epoch, sub, lo, hi in pending:
-                    res = self._run_batch(batch_id, epoch, sub, lo, hi)
-                    results.append(res)
-                    if reporter:
-                        reporter.update(
-                            events_read=res.events_read,
-                            events_applied=res.events_applied,
-                            events_quarantined=res.events_quarantined,
-                            batches=1,
-                        )
-                    if (
-                        self.cfg.compact_every
-                        and len(results) % self.cfg.compact_every == 0
-                    ):
-                        self.table.compact(
-                            target_files_per_bucket=self.cfg.compact_target_files,
-                            strategy=self.cfg.compact_strategy,
-                        )
-            else:
-                # pipelined batches: MOR deltas are commit-order-free, so a
-                # driver thread pool overlaps batch N+1's scan/extract with
-                # batch N's write — per-batch fixed costs amortize across the
-                # pipeline. Scan-split tuning is frozen once (session-global
-                # conf must not flap under concurrent planners).
-                from concurrent.futures import ThreadPoolExecutor, as_completed
-
-                self._freeze_scan_splits([p[1] for p in pending])
-                # pre-warm the epoch DataFrame memo while executors are
-                # IDLE: the first discovery of a >32-file epoch runs a
-                # listing job, and submitted after the write pipeline fills
-                # it waits seconds in the scheduler queue (profiled) — here
-                # it runs on an empty cluster in milliseconds
-                for e in dict.fromkeys(p[1] for p in pending):
-                    self.read_epoch(e)
-                # overlapped folds (compact_overlap): a SINGLE background
-                # thread folds the deltas committed so far while later
-                # batches are still running, triggered every compact_every
-                # commits. The fold reads a snapshot, folds, and CAS-commits;
-                # deltas layered after its read survive the commit (see
-                # LakeTable._commit_fold), so the race with concurrent
-                # merges is safe. One thread = folds never race each other.
-                fold_pool = ThreadPoolExecutor(max_workers=1)
-                fold_fut = None
-                since_fold = 0
-
-                def _fold():
-                    return self.table.compact(
-                        target_files_per_bucket=self.cfg.compact_target_files,
-                        strategy=self.cfg.compact_strategy,
-                    )
-
+            with ThreadPoolExecutor(
+                max_workers=max(1, cfg.max_concurrent_batches)
+            ) as pool:
+                futs = [pool.submit(carry(batch), p) for p in pending]
                 try:
-                    with ThreadPoolExecutor(max_workers=conc) as pool:
-                        futs = {
-                            pool.submit(self._run_batch, *p): p for p in pending
-                        }
-                        for fut in as_completed(futs):
-                            res = fut.result()  # propagate the first failure
-                            results.append(res)
-                            since_fold += 1
-                            if reporter:
-                                reporter.update(
-                                    events_read=res.events_read,
-                                    events_applied=res.events_applied,
-                                    events_quarantined=res.events_quarantined,
-                                    batches=1,
-                                )
-                            if (
-                                self.cfg.compact_overlap
-                                and since_fold >= self.cfg.compact_every
-                                and (fold_fut is None or fold_fut.done())
-                            ):
-                                if fold_fut is not None:
-                                    fold_fut.result()  # surface a fold failure
-                                since_fold = 0
-                                fold_fut = fold_pool.submit(_fold)
-                    if fold_fut is not None:
-                        fold_fut.result()  # drain the in-flight fold
-                finally:
-                    fold_pool.shutdown(wait=True)
-                results.sort(key=lambda r: r.batch_id)
-                if self.cfg.compact_every and results:
-                    # tail fold: whatever landed after the last overlapped
-                    # fold (or everything, when compact_overlap is off) —
-                    # the post-run state is fully folded either way
-                    self.table.compact(
-                        target_files_per_bucket=self.cfg.compact_target_files,
-                        strategy=self.cfg.compact_strategy,
-                    )
+                    for fut in as_completed(futs):
+                        res = fut.result()  # the first failure propagates
+                        if res is None:
+                            continue
+                        results.append(res)
+                        since_fold += 1
+                        if reporter:
+                            reporter.update(
+                                events_read=res.events_read,
+                                events_applied=res.events_applied,
+                                events_quarantined=res.events_quarantined,
+                                batches=1,
+                            )
+                        if (
+                            cfg.compact_every
+                            and since_fold >= cfg.compact_every
+                            and (fold_fut is None or fold_fut.done())
+                        ):
+                            if fold_fut is not None:
+                                fold_fut.result()  # surface a fold failure
+                            since_fold = 0
+                            fold_fut = fold_pool.submit(carry(fold))
+                except BaseException:
+                    failed.set()
+                    pool.shutdown(cancel_futures=True)
+                    raise
+            if fold_fut is not None:
+                fold_fut.result()  # drain the in-flight fold
+            results.sort(key=lambda r: r.batch_id)
+            if cfg.compact_every and results:
+                fold()  # tail fold: the post-run state is fully folded
         finally:
+            fold_pool.shutdown(wait=True)
             if reporter:
                 reporter.stop()
         return results
-
-    def _freeze_scan_splits(self, epochs: list[int]) -> None:
-        """Concurrent mode: size splits once for the whole run and pin them
-        (spark.conf is session-global — per-batch re-tuning would race
-        across planner threads). Slice-aware: see _split_target."""
-        sizes = [br for e in set(epochs)
-                 if (br := self._epoch_bytes_rows(e)) is not None]
-        if sizes:
-            target = self._split_target(sizes)
-            if target:
-                self.spark.conf.set(SPLIT_CONF, str(target))
-        self._split_frozen = True
 
     def _run_batch(
         self, batch_id: int, epoch: int, sub: int,
@@ -731,6 +709,12 @@ class Replayer:
             with HungTaskGuard(self.spark, cfg.batch_timeout_s, f"cdc-batch-{batch_id}"):
                 return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
         return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
+
+    def _with_bucket(self, ev: DataFrame) -> DataFrame:
+        """ev plus the table's bucket id column (a null key buckets to -1)."""
+        k = F.col(self.cfg.key)
+        return ev.withColumn(SYS_BUCKET, F.when(k.isNull(), F.lit(-1)).otherwise(
+            F.pmod(F.xxhash64(k), F.lit(self.table.num_buckets)).cast("int")))
 
     def _run_batch_fused(
         self, batch_id: int, epoch: int, sub: int,
@@ -759,10 +743,7 @@ class Replayer:
             ev = self.read_epoch(epoch).drop("epoch")
         tl["read_epoch_s"] = time.monotonic() - t0
         nb = self.table.num_buckets
-        bucket = F.when(
-            F.col(cfg.key).isNull(), F.lit(-1)
-        ).otherwise(F.pmod(F.xxhash64(F.col(cfg.key)), F.lit(nb)).cast("int"))
-        ev = ev.withColumn(SYS_BUCKET, bucket)
+        ev = self._with_bucket(ev)
         pre_part = not cfg.dedup_per_batch
         if pre_part:
             # Place the batch's ONE wide-row exchange BEFORE the Arrow
@@ -1043,6 +1024,7 @@ class Replayer:
             q = q.filter(F.col("epoch").isin([int(e) for e in epochs]))
         target = sorted(
             int(r[0]) for r in q.select("epoch").distinct().collect())
+        self._tune_scan_splits(target)
         results: list[dict] = []
         for epoch in target:
             old_slices = sorted(
@@ -1075,12 +1057,8 @@ class Replayer:
                         & (F.col("epoch") == epoch))
                 .select(F.col("log_offset").alias("_rq_off")).distinct()
             )
-            ev = self.read_epoch(epoch).drop("epoch").join(
-                offs, F.col(cfg.seq_col) == F.col("_rq_off"), "leftsemi")
-            nb = self.table.num_buckets
-            bucket = F.when(F.col(cfg.key).isNull(), F.lit(-1)).otherwise(
-                F.pmod(F.xxhash64(F.col(cfg.key)), F.lit(nb)).cast("int"))
-            ev = ev.withColumn(SYS_BUCKET, bucket)
+            ev = self._with_bucket(self.read_epoch(epoch).drop("epoch").join(
+                offs, F.col(cfg.seq_col) == F.col("_rq_off"), "leftsemi"))
             slice_dir = os.path.join(
                 cfg.quarantine_dir, f"slice={epoch}-rq{gen}")
             shutil.rmtree(slice_dir, ignore_errors=True)

@@ -1198,8 +1198,7 @@ class LakeTable:
         laps["pre_commit"] = _time.monotonic() - _t
         _t = _time.monotonic()
 
-        for _attempt in range(64):
-            base = self.snapshot()  # freshest — another committer may have won
+        def layer(base: Snapshot) -> Snapshot:
             # re-derive evolution against the freshest schema
             base_schema = StructType.fromJson(__import__("json").loads(base.schema_json))
             merged_fields = list(base_schema.fields) + [
@@ -1208,7 +1207,7 @@ class LakeTable:
             new_deltas = {b: list(fs) for b, fs in base.deltas.items()}
             for b, fs in written.items():
                 new_deltas[str(b)] = new_deltas.get(str(b), []) + fs
-            new_snap = Snapshot(
+            return Snapshot(
                 version=base.version + 1, parent=base.version,
                 schema_json=StructType(merged_fields).json(),
                 num_buckets=nb, files=dict(base.files),
@@ -1223,13 +1222,8 @@ class LakeTable:
                 deltas=new_deltas,
                 dvs=dict(base.dvs),
             )
-            try:
-                write_snapshot(self.path, new_snap)
-                break
-            except FileExistsError:
-                continue  # optimistic-concurrency loser: re-layer and retry
-        else:
-            raise RuntimeError("MOR commit lost the optimistic race 64 times")
+
+        new_snap = self._commit_cas(layer, "MOR commit")
         laps["commit_cas"] = _time.monotonic() - _t
         return MergeStats(new_snap.version, len(written), batch_rows, -1, n_new,
                           per_bucket, laps)
@@ -1611,6 +1605,20 @@ class LakeTable:
         }
         return self._commit_dv(todo, folded_files, folded_deltas, dv_written)
 
+    def _commit_cas(self, layer, what: str) -> Snapshot:
+        """Optimistic-CAS commit: ``layer`` builds the next snapshot from the
+        freshest one (another committer may have won since the caller read);
+        a lost version race re-layers and retries, up to 64 times. Whatever
+        ``layer`` raises (a rejected concurrent fold) propagates."""
+        for _attempt in range(64):
+            new_snap = layer(self.snapshot())
+            try:
+                write_snapshot(self.path, new_snap)
+                return new_snap
+            except FileExistsError:
+                continue  # optimistic-concurrency loser: re-layer and retry
+        raise RuntimeError(f"{what} lost the optimistic race 64 times")
+
     def _commit_dv(
         self,
         todo: list[int],
@@ -1622,8 +1630,8 @@ class LakeTable:
         into the base, replace the bucket's DV set, preserve deltas layered
         after the fold's read, reject concurrent folds of the same bucket."""
         n_new = sum(len(fs) for fs in dv_written.values())
-        for _attempt in range(64):
-            base = self.snapshot()
+
+        def layer(base: Snapshot) -> Snapshot:
             new_files = {b: list(fs) for b, fs in base.files.items()}
             new_deltas = {b: list(fs) for b, fs in base.deltas.items()}
             new_dvs = {b: list(fs) for b, fs in base.dvs.items()}
@@ -1648,7 +1656,7 @@ class LakeTable:
                     new_dvs[str(b)] = list(dv_written[b])
                 else:
                     new_dvs.pop(str(b), None)  # zero losers: winners only
-            new_snap = Snapshot(
+            return Snapshot(
                 version=base.version + 1, parent=base.version,
                 schema_json=base.schema_json,
                 num_buckets=base.num_buckets, files=new_files,
@@ -1657,13 +1665,8 @@ class LakeTable:
                 deltas=new_deltas,
                 dvs=new_dvs,
             )
-            try:
-                write_snapshot(self.path, new_snap)
-                break
-            except FileExistsError:
-                continue  # optimistic-concurrency loser: re-layer and retry
-        else:
-            raise RuntimeError("DV fold commit lost the optimistic race 64 times")
+
+        new_snap = self._commit_cas(layer, "DV fold commit")
         return MergeStats(new_snap.version, len(todo), 0, 0, n_new, {})
 
     def _commit_fold(
@@ -1678,8 +1681,7 @@ class LakeTable:
         reject concurrent folds of the same bucket."""
         n_new = sum(len(fs) for fs in written.values())
 
-        for _attempt in range(64):
-            base = self.snapshot()  # freshest — merges/folds may have landed
+        def layer(base: Snapshot) -> Snapshot:
             new_files = {b: list(fs) for b, fs in base.files.items()}
             new_deltas = {b: list(fs) for b, fs in base.deltas.items()}
             new_dvs = {b: list(fs) for b, fs in base.dvs.items()}
@@ -1703,7 +1705,7 @@ class LakeTable:
                     new_deltas[str(b)] = survivors
                 else:
                     new_deltas.pop(str(b), None)
-            new_snap = Snapshot(
+            return Snapshot(
                 version=base.version + 1, parent=base.version,
                 schema_json=base.schema_json,
                 num_buckets=base.num_buckets, files=new_files,
@@ -1712,13 +1714,8 @@ class LakeTable:
                 deltas=new_deltas,
                 dvs=new_dvs,
             )
-            try:
-                write_snapshot(self.path, new_snap)
-                break
-            except FileExistsError:
-                continue  # optimistic-concurrency loser: re-layer and retry
-        else:
-            raise RuntimeError("compact commit lost the optimistic race 64 times")
+
+        new_snap = self._commit_cas(layer, "compact commit")
         return MergeStats(new_snap.version, len(todo), 0, 0, n_new, {})
 
     def rebucket(

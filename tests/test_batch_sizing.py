@@ -80,8 +80,8 @@ def _foreign_wal(src: str, dst: str) -> None:
 
 
 def _replay_counting_tasks(spark, rep: Replayer, group: str) -> list[int]:
-    """Sequential run() under a job group; the task count of every stage
-    the run submitted (the status tracker sees the main thread's group)."""
+    """run() under a job group; the task count of every stage the run
+    submitted (the batch threads inherit the caller's group)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -142,6 +142,30 @@ def test_wal_without_offset_stats_keeps_full_width(spark, tmp_path):
     _assert_one_delta_per_bucket_per_batch(rep, 3)
 
 
+def test_pool_jobs_carry_the_callers_job_group(spark, tmp_path):
+    log_dir = str(tmp_path / "wal")
+    write_event_log(spark, CFG, log_dir, slices=4)
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, work_dir=str(tmp_path / "work"),
+        table_path=str(tmp_path / "pages"), num_buckets=NB,
+        max_events_per_batch=250, max_concurrent_batches=4))
+    sc, group = spark.sparkContext, f"pool-{tmp_path.name}"
+    st = sc.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        results = rep.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(results) == 12
+    # every job the run submitted, the batches' write jobs included, is in
+    # the caller's group: none left the run without one
+    assert set(st.getJobIdsForGroup(None)) <= ungrouped
+    assert len(st.getJobIdsForGroup(group)) >= len(results)
+    assert_state_matches(rep, CFG)
+
+
 def test_footer_pass_memoized_per_epoch(spark, tmp_path, monkeypatch):
     log_dir = str(tmp_path / "wal")
     write_event_log(spark, CFG, log_dir, slices=4)
@@ -163,6 +187,17 @@ def test_footer_pass_memoized_per_epoch(spark, tmp_path, monkeypatch):
 
 
 # ------------------------------------------------------- session conf
+def test_read_epoch_leaves_session_conf_unchanged(spark, tmp_path):
+    log_dir = str(tmp_path / "wal")
+    write_event_log(spark, CFG, log_dir, slices=4)
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, work_dir=str(tmp_path / "work"),
+        table_path=str(tmp_path / "pages"), num_buckets=NB))
+    before = dict(spark.conf.getAll)
+    assert rep.read_epoch(0).count() == CFG.events_per_epoch
+    assert dict(spark.conf.getAll) == before
+
+
 def test_run_and_requeue_leave_session_conf_unchanged(spark, tmp_path):
     log_dir = str(tmp_path / "wal")
     write_event_log(spark, CFG, log_dir, slices=4)
@@ -187,12 +222,10 @@ def test_run_and_requeue_leave_session_conf_unchanged(spark, tmp_path):
     seq.run()
     assert dict(spark.conf.getAll) == before
     assert seen and all(v != before.get(SPLIT_CONF) for v in seen)
-    assert not seq._split_frozen
 
     conc = make("conc", 4)
     conc.run()
     assert dict(spark.conf.getAll) == before
-    assert not conc._split_frozen
     assert conc.requeue_quarantined()  # the CFG WAL has dirty events
     assert dict(spark.conf.getAll) == before
 

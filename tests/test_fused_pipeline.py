@@ -65,6 +65,33 @@ def test_fused_error_limit_aborts_before_commit(spark, log_and_work):
     assert rep.committed_pairs() == set()
 
 
+def test_first_failed_batch_stops_the_schedule(spark, log_and_work):
+    """A failed batch stops the pool: queued batches never start, so at most
+    the one in-flight sibling commits before run() raises; a resume with the
+    same config converges to the oracle."""
+    log_dir, work, table = log_and_work
+    conc = dict(max_events_per_batch=500, max_concurrent_batches=2)
+    rep = make(spark, log_dir, work, table, **conc)
+    assert len(rep.plan_batches()) >= 6
+    merge = rep.table.merge
+
+    class Boom(RuntimeError):
+        pass
+
+    def failing(*a, **kw):
+        if kw["properties"]["last_batch_id"] == 0:
+            raise Boom("batch 0")
+        return merge(*a, **kw)
+
+    rep.table.merge = failing
+    with pytest.raises(Boom):
+        rep.run()
+    assert len(rep.committed_pairs()) <= 1
+    resumed = make(spark, log_dir, work, table, **conc)
+    resumed.run()
+    assert_state_matches(resumed, CFG)
+
+
 def test_fused_resume_and_idempotent_rerun(spark, log_and_work):
     log_dir, work, table = log_and_work
     rep1 = make(spark, log_dir, work, table)
@@ -308,7 +335,7 @@ def test_overlapped_dv_fold_kill_soak(spark, log_and_work):
         pass
 
     conc = dict(max_events_per_batch=500, max_concurrent_batches=4,
-                compact_every=2, compact_overlap=True, compact_strategy="dv")
+                compact_every=2, compact_strategy="dv")
 
     base = make(spark, log_dir, work + "_db", table + "_db", **conc)
     base.run()

@@ -172,14 +172,14 @@ def test_concurrent_batches_same_state(spark, log_and_work):
 
 
 def test_overlapped_fold_same_state_and_fully_folded(spark, log_and_work):
-    """compact_overlap: background folds race the still-running batches (the
+    """compact_every: background folds race the still-running batches (the
     CAS commit preserves deltas layered after each fold's read), and the
     post-run tail fold leaves the table byte-identical to the oracle AND
     fully folded — zero deltas, <= compact_target_files files per bucket."""
     log_dir, work, table = log_and_work
     rep = make_replayer(spark, log_dir, work, table,
                         max_events_per_batch=400, max_concurrent_batches=3,
-                        compact_every=2, compact_overlap=True)
+                        compact_every=2)
     results = rep.run()
     assert len(results) == 9
     assert_state_matches(rep, CFG)
@@ -194,7 +194,7 @@ def test_overlapped_fold_same_state_and_fully_folded(spark, log_and_work):
     # exactly-once on re-run, state unchanged
     rep2 = make_replayer(spark, log_dir, work, table,
                          max_events_per_batch=400, max_concurrent_batches=3,
-                         compact_every=2, compact_overlap=True)
+                         compact_every=2)
     assert rep2.run() == []
     assert_state_matches(rep2, CFG)
 
@@ -206,8 +206,7 @@ def test_overlapped_dv_fold_same_state(spark, log_and_work):
     log_dir, work, table = log_and_work
     rep = make_replayer(spark, log_dir, work, table,
                         max_events_per_batch=400, max_concurrent_batches=3,
-                        compact_every=2, compact_overlap=True,
-                        compact_strategy="dv")
+                        compact_every=2, compact_strategy="dv")
     results = rep.run()
     assert len(results) == 9
     assert_state_matches(rep, CFG)
@@ -220,12 +219,49 @@ def test_overlapped_dv_fold_same_state(spark, log_and_work):
     assert_state_matches(rep, CFG)
 
 
-def test_overlap_requires_compact_every(spark, tmp_path):
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="compact_every"):
-        make_replayer(spark, str(tmp_path / "w"), str(tmp_path / "wk"),
-                      str(tmp_path / "t"), compact_overlap=True,
-                      compact_every=None)
+@pytest.mark.parametrize("strategy", ["local", "dv"])
+def test_depth_one_background_fold(spark, log_and_work, strategy):
+    """compact_every at depth 1 takes the same background-fold path as any
+    depth: the run ends fully folded and byte-identical to the oracle."""
+    log_dir, work, table = log_and_work
+    rep = make_replayer(spark, log_dir, work, table,
+                        max_events_per_batch=400, max_concurrent_batches=1,
+                        compact_every=2, compact_strategy=strategy)
+    assert len(rep.run()) == 9
+    assert_state_matches(rep, CFG)
+    snap = rep.table.snapshot()
+    assert not snap.all_deltas()
+    if strategy == "local":
+        assert all(len(fs) <= rep.cfg.compact_target_files
+                   for fs in snap.files.values())
+
+
+def test_checkpoint_dir_read_once_per_run(spark, tmp_path, monkeypatch):
+    """Commit bookkeeping is O(1) per batch: one checkpoint-dir read per run
+    whatever its batch count; committed:* keys are still pruned."""
+    log_dir = str(tmp_path / "wal")
+    write_event_log(spark, CFG, log_dir, slices=4)
+    reads = []
+    orig = Replayer._read_checkpoints
+
+    def counting(self):
+        reads.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(Replayer, "_read_checkpoints", counting)
+    counts = {}
+    for n in (2, 8):
+        reads.clear()
+        rep = make_replayer(spark, log_dir, str(tmp_path / f"work{n}"),
+                            str(tmp_path / f"pages{n}"),
+                            max_events_per_batch=250)
+        assert len(rep.run(stop_after_batches=n)) == n
+        counts[n] = len(reads)
+        assert len(rep.committed_pairs()) == n
+        keys = [k for k in rep.table.snapshot().properties
+                if k.startswith("committed:")]
+        assert len(keys) <= rep.cfg.max_concurrent_batches
+    assert counts[2] == counts[8]
 
 
 @pytest.mark.parametrize("strategy", ["shuffle", "bogus"])
