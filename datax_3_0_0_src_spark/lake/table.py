@@ -60,9 +60,12 @@ SYS_BUCKET = "_bucket"       # partition-directory column (not stored inside fil
 
 # Rows one task of a batch's layout exchange must carry before a wider plan
 # (a second wave of tasks) is used. Every task of the post-exchange stage
-# pays a fixed Python-worker cost (UDF unpickle, Arrow setup) of about 0.25 s
-# at local[4], whatever its row count, while the extract kernel clears
-# ~300k rows/s, so a task pays for itself only from ~75k rows. Small
+# pays a fixed Python-worker cost whatever its row count: at local[4], one
+# wave of four warm extract-UDF tasks of 1k rows runs 0.10-0.12 s longer than
+# the same job without Python. It was 0.29-0.31 s while Spark's per-task
+# importlib.invalidate_caches() re-parsed every zip on the worker's path (the
+# package __init__ now re-reads only a changed archive). The extract kernel
+# clears ~300k rows/s, so a task pays for itself only from ~33k rows. Small
 # batches therefore run in one wave of ``par`` tasks (a 4k-event tail batch:
 # 1k rows a task at local[4]). The constant sits far below that break-even
 # on purpose, so large batches keep the full-width plan: 8192 = 2^13 is the
