@@ -85,7 +85,7 @@ def extract_text_arrow(arr):
 
     Same guarded fast path as :func:`extract_text_pd`, but input AND output
     stay Arrow — zero pandas-object materialization for conforming rows
-    (the arrow_udf fused stage feeds whole record batches through here).
+    (the replay writer stage feeds whole record batches through here).
     Nonconforming rows (non-ASCII, foreign structure, invalid UTF-8) fall
     back to the reference pandas implementation for just those rows."""
     import numpy as np

@@ -1,48 +1,41 @@
-"""Single-pass micro-batch stage: validate + quarantine + stats + extract in
-ONE Arrow python stage riding the WAL scan.
+"""The replay batch's writer stage: ONE ``mapInArrow`` pass behind the
+batch's ``(bucket, salt)`` layout exchange that writes the batch's delta
+files itself and returns their metadata to the driver (the
+writer-returns-data-files pattern of the Iceberg spec,
+https://iceberg.apache.org/spec/). Each task sees each of its rows once and
 
-A two-job batch pipeline runs TWO full scans of every micro-batch — one job for
-the dirty-record quarantine (reads the whole ``html`` column to tag validity
-and carry raw payloads) and one for the extract→merge write. At 10^10 events
-the WAL is read twice and the driver plans/dispatches two jobs per batch. This
-module collapses them: an **iterator-form arrow_udf** (Spark 4.1 Arrow-native
-scalar UDF — batches arrive and return as pa.Array, zero pandas-object
-materialization; the round-7 upgrade of the previous pandas_udf, which built
-~8M Python objects per 2M-row batch across its four string/binary input
-columns) rides the single scan and
-
+- counts events and html bytes from each row's ``_n`` / ``_nbytes`` (1 and
+  its own html length; under per-batch dedup, the events a winner stands
+  for and their summed html length), so the counts stay exact either way;
+- side-writes its dirty rows (JVM-computed ``_reason`` not null,
+  ``quarantine.reason_col``) into the slice's quarantine dir as ONE file
+  named by the partition id, via tmp file + ``os.replace``: a retried
+  attempt rewrites the same rows and the last rename wins (the driver
+  clears the slice dir before the job);
 - extracts ``text`` for valid non-delete rows (the byte-identical
-  invariant, checked against ``cdc.oracle``); validation itself stays
-  JVM-side (``quarantine.reason_col``, codegen'd byte checks) and arrives as
-  a precomputed ``_reason`` input column — the Python workers are the batch's
-  critical resource and do ONLY the extraction plus cheap masking,
-- side-writes its task's dirty rows and a per-task stats row (events_read,
-  n_dirty, bytes_in, per-bucket dirty counts) as parquet into the slice's
-  quarantine dir at generator exhaustion, via tmp-file + atomic ``os.replace``
-  with names keyed by the Spark partition id — a retried or speculative task
-  attempt regenerates identical content and the last rename wins, so the side
-  effect is idempotent (the driver clears the slice dir before the job, so a
-  previous run's stale task files can't pollute counts).
+  invariant, checked against ``cdc.oracle``);
+- builds the table's physical columns from the schema the driver passes in
+  (additive evolution, tombstone payload nulled, ``_lww_offset``,
+  ``_deleted``) and writes one parquet file per (task, bucket) with pyarrow
+  under a name unique to the task attempt.
 
-The scalar-iterator form matters: only the requested input columns cross into
-Python and only the narrow ``text`` array returns — the wide ``html``
-payload crosses once, inbound (a ``mapInArrow`` variant was measured 29%
-SLOWER at the compute-bound 8-core level because every passthrough column
-round-trips through the boundary both ways). The generator shape gives the
-end-of-task flush point that a plain scalar udf lacks.
+It yields one row per file (bucket, table-relative path, rows, ts min/max
+in epoch micros) and one counts row per task (events_read, n_dirty,
+bytes_in, dirty rows per bucket as JSON). The driver commits exactly the
+files these rows name; a failed attempt's files are never returned and stay
+orphans that ``expire_snapshots`` reclaims.
 
-Reference parity: this is DataX's single-pass record path — reader ->
-transformer chain -> TaskPluginCollector.collectDirtyRecord -> writer, one
-traversal per record (core/src/main/java/com/alibaba/datax/core/transport/
-channel/Channel.java, AbstractTaskPluginCollector.java:53-76) — where the
-two-job variant was an artifact of Spark's one-sink-per-job model.
+Only the inputs cross the Python boundary: ``html`` goes in once and a few
+metadata rows come back. (Round 7 measured a ``mapInArrow`` variant 29%
+slower than a scalar ``arrow_udf``; that variant handed every passthrough
+column back to the JVM for Spark's writer.)
 
-DIRTY-FILE GRANULARITY (scale note): each task with >=1 dirty row writes one
-quarantine file per slice. At ~1% dirty that is one small file per task —
-same order as a bucket-partitioned write's (buckets+1) shuffled files at
-sandbox task counts, but at 10^5 tasks/slice it is more, smaller files;
-quarantine is an audit table, so fold it offline if it ever matters. Stats rows are a few
-hundred bytes each and are read driver-side once per batch.
+Reference parity: DataX's single-pass record path — reader -> transformer
+chain -> TaskPluginCollector.collectDirtyRecord -> writer, one traversal per
+record (core/src/main/java/com/alibaba/datax/core/transport/channel/
+Channel.java, AbstractTaskPluginCollector.java:53-76). Dirty files: one per
+task with dirty rows per slice — an audit table, folded offline by
+``Replayer.fold_quarantine``.
 """
 
 from __future__ import annotations
@@ -50,46 +43,30 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from typing import Iterator, Tuple
 
 import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import arrow_udf
+from ..lake.table import SYS_BUCKET, SYS_DELETED, SYS_OFFSET
 
-from ..lake.table import SYS_BUCKET
-from .extract import extract_text_arrow
+# zstd level of the delta files: parquet-mr's default, the level Spark's
+# writer used for them (at pyarrow's default, 1, they were 8% larger)
+ZSTD_LEVEL = 3
 
-RESULT_DDL = "string"
-
-_DIRTY_FIELDS = [
-    ("log_offset", "int64"),
-    ("epoch", "int32"),
-    ("url", "string"),
-    ("reason", "string"),
-    ("raw_payload", "binary"),
-    ("bucket", "int32"),
-]
+RESULT_DDL = (
+    "bucket int, path string, rows long, ts_min long, ts_max long, "
+    "events_read long, n_dirty long, bytes_in long, dirty_by_bucket string"
+)
 
 
 def _dirty_schema():
-    import pyarrow as pa
-
-    return pa.schema([(n, getattr(pa, t)()) for n, t in _DIRTY_FIELDS])
-
-
-def _stats_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("task", pa.int32()),
-            ("events_read", pa.int64()),
-            ("n_dirty", pa.int64()),
-            ("bytes_in", pa.int64()),
-            ("dirty_by_bucket", pa.string()),  # {bucket: count} JSON
-        ]
-    )
+    return pa.schema([
+        ("log_offset", pa.int64()), ("epoch", pa.int32()), ("url", pa.string()),
+        ("reason", pa.string()), ("raw_payload", pa.binary()),
+        ("bucket", pa.int32()),
+    ])
 
 
 def _atomic_parquet(table, path: str) -> None:
@@ -100,156 +77,165 @@ def _atomic_parquet(table, path: str) -> None:
     os.replace(tmp, path)
 
 
-def fused_result_col(
-    *,
-    epoch: int,
-    slice_dir: str,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    seq_col: str = "log_offset",
-    op_col: str = "op",
-    delete_op: str = "D",
-) -> Column:
-    """The ``text`` column evaluated by the fused stage.
-
-    Apply to a DataFrame that already carries ``SYS_BUCKET`` and ``_reason``
-    (JVM-computed ``quarantine.reason_col`` — validation stays codegen'd
-    JVM work; the Python stage is the batch's critical resource and gets
-    ONLY the extraction). Filter on ``_reason`` AFTER this projection — Catalyst cannot push a predicate
-    through a projection containing a nondeterministic expression, so the
-    udf is guaranteed to see every row (dirty ones included) exactly once."""
-
-    @arrow_udf(RESULT_DDL)
-    def _fused(
-        it: Iterator[Tuple[pa.Array, pa.Array, pa.Array,
-                           pa.Array, pa.Array, pa.Array]]
-    ) -> Iterator[pa.Array]:
-        import numpy as np
-        import pyarrow.compute as pc
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        events_read = 0
-        bytes_in = 0
-        n_dirty = 0
-        by_bucket: dict[int, int] = {}
-        dirty_parts: list = []
-        for url, html, op, seq, bucket, reason in it:
-            events_read += len(url)
-            bytes_in += int(pc.sum(pc.binary_length(html)).as_py() or 0)
-            dirty = pc.fill_null(pc.is_valid(reason), False)
-            any_dirty = pc.any(dirty).as_py()
-            if any_dirty:
-                db = bucket.filter(dirty).cast("int32")
-                for bk, n in zip(*np.unique(
-                        db.to_numpy(zero_copy_only=False), return_counts=True)):
-                    by_bucket[int(bk)] = by_bucket.get(int(bk), 0) + int(n)
-                n_dirty += len(db)
-                dirty_parts.append(pa.table(
-                    {
-                        # nullable int64: a foreign WAL may carry null
-                        # offsets on exactly the rows that are dirty
-                        "log_offset": seq.filter(dirty).cast("int64"),
-                        "epoch": pa.array([epoch] * len(db), "int32"),
-                        "url": url.filter(dirty).cast("string"),
-                        "reason": reason.filter(dirty).cast("string"),
-                        "raw_payload": html.filter(dirty).cast("binary"),
-                        "bucket": db,
-                    },
-                    schema=_dirty_schema(),
-                ))
-            # tombstones carry no payload: null html => null text, as the
-            # streaming replay's when(is_del, NULL) before extraction; dirty
-            # rows are filtered downstream, their text is never read
-            drop = pc.or_(pc.fill_null(pc.equal(op, delete_op), False), dirty)
-            masked = pc.if_else(drop, pa.scalar(None, html.type), html)
-            yield extract_text_arrow(masked)
-
-        # ---- end-of-task flush: side-write dirty rows + this task's stats
-        os.makedirs(os.path.join(slice_dir, "_stats"), exist_ok=True)
-        if dirty_parts:
-            _atomic_parquet(
-                pa.concat_tables(dirty_parts),
-                os.path.join(slice_dir, f"part-{pid:05d}.parquet"))
-        stats = pa.table(
-            {
-                "task": pa.array([pid], "int32"),
-                "events_read": pa.array([events_read], "int64"),
-                "n_dirty": pa.array([n_dirty], "int64"),
-                "bytes_in": pa.array([bytes_in], "int64"),
-                "dirty_by_bucket": pa.array([json.dumps(by_bucket)], "string"),
-            },
-            schema=_stats_schema(),
-        )
-        _atomic_parquet(stats, os.path.join(slice_dir, "_stats", f"part-{pid:05d}.parquet"))
-
-    # asNondeterministic is LOAD-BEARING twice over: (1) it stops Catalyst
-    # pushing the downstream dirty filter below this projection (the udf must
-    # see every row once — its side files ARE the quarantine), and (2) it
-    # stops CollapseProject duplicating the expression into multiple
-    # ArrowEvalPython nodes (a second post-filter evaluation would see only
-    # clean rows and overwrite the stats flush with dirty=0; caught by
-    # test_fused_single_python_eval_in_plan).
-    return _fused.asNondeterministic()(
-        F.col(key), F.col("html"), F.col(op_col), F.col(seq_col),
-        F.col(SYS_BUCKET), F.col("_reason"),
-    )
-
-
-def apply_fused(
+def write_stage(
     df: DataFrame,
     *,
     epoch: int,
     slice_dir: str,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    seq_col: str = "log_offset",
-    op_col: str = "op",
-    delete_op: str = "D",
-    reason_fn=None,
+    table_path: str,
+    rel_dir: str,
+    phys: StructType,
+    key: str,
+    ts_col: str,
+    seq_col: str,
+    op_col: str,
+    codec: str,
 ) -> DataFrame:
-    """Valid rows of ``df`` with ``text`` attached (and tombstone html nulled),
-    quarantine/stats side-written per task. ``df`` must carry ``SYS_BUCKET``.
-    ``reason_fn``: swappable validity rule (ReplayConfig.validity_rule);
-    default is the engine rule ``quarantine.reason_col``."""
-    from .quarantine import reason_col
+    """The writer stage over ``df`` (see the module docstring), one row of
+    ``RESULT_DDL`` per written file and per task; collect it to run it.
 
-    res = fused_result_col(
-        epoch=epoch, slice_dir=slice_dir, key=key, ts_col=ts_col,
-        seq_col=seq_col, op_col=op_col, delete_op=delete_op,
-    )
-    is_del = F.col(op_col) == F.lit(delete_op)
-    out = (
-        df.withColumn("_reason", (reason_fn or reason_col)(op_col, delete_op))
-        .withColumn("text", res)
-        .filter(F.col("_reason").isNull())
-        .withColumn("html", F.when(is_del, None).otherwise(F.col("html")))
-        .drop("_reason")
-    )
-    return out
+    ``df`` carries the batch's columns plus ``SYS_BUCKET``, ``_reason``,
+    ``_n`` and ``_nbytes``, already hash-partitioned by the table's layout
+    (``LakeTable._layout``). Files go to ``table_path/rel_dir/_bucket=B/``
+    with the physical schema ``phys``, compressed with ``codec``."""
+    target = to_arrow_schema(phys)
+    result = to_arrow_schema(StructType.fromDDL(RESULT_DDL))
+    # min/max only where a reader prunes on them: the key (lookup's IN
+    # pushdown), the ts (skipping's footer stats) and the narrow columns.
+    # Wide string/binary payload (html, text) min/max cost ~8% of a
+    # 250-row tail file's bytes at zstd level 3.
+    options = {
+        "compression": codec,
+        "compression_level": ZSTD_LEVEL if codec == "zstd" else None,
+        "write_statistics": [
+            f.name for f in target if f.name == key
+            or not (pa.types.is_string(f.type) or pa.types.is_binary(f.type))],
+    }
+    out_root = os.path.join(table_path, rel_dir)
+
+    def write_task(batches):
+        from collections import Counter
+
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        from ..lake.skipping import TsRange
+        from .extract import extract_text_arrow
+
+        ctx = TaskContext.get()
+        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
+        events_read = bytes_in = n_dirty = 0
+        by_bucket: Counter = Counter()
+        dirty_parts: list = []
+        files: dict[int, list] = {}  # bucket -> [writer, rel path, rows, TsRange]
+        try:
+            for rb in batches:
+                events_read += int(pc.sum(rb.column("_n")).as_py() or 0)
+                bytes_in += int(pc.sum(rb.column("_nbytes")).as_py() or 0)
+                dirty = pc.is_valid(rb.column("_reason"))
+                if pc.any(dirty).as_py():
+                    d = rb.filter(dirty)
+                    db = d.column(SYS_BUCKET).cast("int32")
+                    by_bucket.update(db.to_pylist())
+                    n_dirty += d.num_rows
+                    dirty_parts.append(pa.table({
+                        # nullable int64: a foreign WAL may carry null
+                        # offsets on exactly the rows that are dirty
+                        "log_offset": d.column(seq_col).cast("int64"),
+                        "epoch": pa.array([epoch] * d.num_rows, "int32"),
+                        "url": d.column(key).cast("string"),
+                        "reason": d.column("_reason").cast("string"),
+                        "raw_payload": d.column("html").cast("binary"),
+                        "bucket": db,
+                    }, schema=_dirty_schema()))
+                    rb = rb.filter(pc.invert(dirty))
+                if rb.num_rows == 0:
+                    continue
+                # tombstones carry no payload: null html => null text; a null
+                # op is no delete, and its _deleted stays null (Spark's `=`)
+                deleted = pc.equal(rb.column(op_col), "D")
+                is_del = pc.fill_null(deleted, False)
+                any_del = pc.any(is_del).as_py()
+                src = dict(zip(rb.schema.names, rb.columns))
+                html = src["html"]
+                if any_del:
+                    html = pc.if_else(is_del, pa.scalar(None, html.type), html)
+                src["text"] = extract_text_arrow(html)
+                cols = []
+                for f in target:
+                    if f.name == SYS_OFFSET:
+                        c = src[seq_col].cast(pa.int64())
+                    elif f.name == SYS_DELETED:
+                        c = deleted
+                    elif f.name not in src:
+                        c = pa.nulls(rb.num_rows, f.type)
+                    else:
+                        c = src[f.name]
+                        if c.type != f.type:
+                            c = c.cast(f.type)
+                        if any_del and f.name not in (key, ts_col):
+                            c = pc.if_else(is_del, pa.scalar(None, f.type), c)
+                    cols.append(c)
+                out = pa.Table.from_arrays(cols, schema=target)
+                bk = rb.column(SYS_BUCKET).to_numpy(zero_copy_only=False)
+                buckets = np.unique(bk)
+                for b in buckets:
+                    part = out if len(buckets) == 1 else out.filter(pa.array(bk == b))
+                    b = int(b)
+                    if b not in files:
+                        rel = (f"{rel_dir}/{SYS_BUCKET}={b}/"
+                               f"part-{pid:05d}-{attempt}.parquet")
+                        os.makedirs(os.path.join(out_root, f"{SYS_BUCKET}={b}"),
+                                    exist_ok=True)
+                        files[b] = [pq.ParquetWriter(
+                            os.path.join(table_path, rel), target, **options),
+                            rel, 0, TsRange()]
+                    entry = files[b]
+                    entry[0].write_table(part)
+                    entry[2] += part.num_rows
+                    entry[3].add(part.column(ts_col))
+        finally:
+            for entry in files.values():
+                entry[0].close()
+        if dirty_parts:
+            os.makedirs(slice_dir, exist_ok=True)
+            _atomic_parquet(
+                pa.concat_tables(dirty_parts),
+                os.path.join(slice_dir, f"part-{pid:05d}.parquet"))
+        rows = [dict(bucket=b, path=rel, rows=n, ts_min=rng.value()[0],
+                     ts_max=rng.value()[1])
+                for b, (_w, rel, n, rng) in sorted(files.items())]
+        rows.append(dict(events_read=events_read, n_dirty=n_dirty,
+                         bytes_in=bytes_in, dirty_by_bucket=json.dumps(by_bucket)))
+        yield pa.RecordBatch.from_pylist(rows, schema=result)
+
+    return df.mapInArrow(write_task, RESULT_DDL)
 
 
-def read_slice_stats(slice_dir: str) -> dict:
-    """Driver-side aggregation of the slice's per-task stats files."""
-    import pyarrow.parquet as pq
+def summarize(rows: list) -> dict:
+    """The batch's files and counts from the stage's collected rows:
+    ``written`` {bucket: [rel path]}, ``stats`` {rel path: (ts_min,
+    ts_max)}, ``rows_per_bucket``, ``applied``, and the summed
+    ``events_read``, ``n_dirty``, ``bytes_in`` and ``dirty_by_bucket``."""
+    from collections import Counter
 
-    d = os.path.join(slice_dir, "_stats")
-    events_read = n_dirty = bytes_in = 0
-    by_bucket: dict[int, int] = {}
-    if os.path.isdir(d):
-        for fn in sorted(os.listdir(d)):
-            if not fn.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(d, fn))
-            events_read += int(sum(t.column("events_read").to_pylist()))
-            n_dirty += int(sum(t.column("n_dirty").to_pylist()))
-            bytes_in += int(sum(t.column("bytes_in").to_pylist()))
-            for s in t.column("dirty_by_bucket").to_pylist():
-                for b, n in json.loads(s).items():
-                    by_bucket[int(b)] = by_bucket.get(int(b), 0) + int(n)
+    files = sorted((r for r in rows if r["path"] is not None),
+                   key=lambda r: r["path"])
+    tasks = [r for r in rows if r["path"] is None]
+    written: dict[int, list[str]] = {}
+    per_bucket: Counter = Counter()
+    dirty: Counter = Counter()
+    for r in files:
+        written.setdefault(r["bucket"], []).append(r["path"])
+        per_bucket[r["bucket"]] += r["rows"]
+    for r in tasks:
+        dirty.update({int(b): n for b, n in json.loads(r["dirty_by_bucket"]).items()})
     return {
-        "events_read": events_read,
-        "n_dirty": n_dirty,
-        "bytes_in": bytes_in,
-        "dirty_by_bucket": by_bucket,
+        "written": written,
+        "stats": {r["path"]: (r["ts_min"], r["ts_max"]) for r in files},
+        "rows_per_bucket": dict(per_bucket), "applied": sum(per_bucket.values()),
+        "dirty_by_bucket": dict(dirty),
+        **{k: sum(r[k] for r in tasks) for k in ("events_read", "n_dirty", "bytes_in")},
     }

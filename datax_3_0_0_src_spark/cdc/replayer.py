@@ -46,12 +46,13 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..lake.manifest import _atomic_write
 from ..lake.table import SYS_BUCKET, LakeTable, exchange_width
 from .dedup import dedup_lww
-from .quarantine import check_error_limits
+from .fused import summarize, write_stage
+from .quarantine import check_error_limits, reason_col
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -102,10 +103,9 @@ class ReplayConfig:
     extra_table_props: dict = field(default_factory=dict)
     # False: write all valid events as delta rows — the SAME last-writer-wins
     # (ts, offset) rule is applied at read/compact-time resolution, so the
-    # final state is identical (tested), and the batch's one exchange moves
-    # below the Arrow extraction (see _run_batch_fused). True adds a
-    # whole-batch LWW aggregation; worth it only when batches carry high
-    # duplicate ratios (delta size).
+    # final state is identical (tested). True adds a whole-batch LWW
+    # aggregation before the writer stage (see _writer_stage); worth it only
+    # when batches carry high duplicate ratios (delta size).
     dedup_per_batch: bool = False
     # pipeline N micro-batches concurrently (driver thread pool; Spark
     # schedules their jobs side by side). Safe because MOR delta layering is
@@ -710,28 +710,17 @@ class Replayer:
                 return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
         return self._run_batch_fused(batch_id, epoch, sub, lo, hi)
 
-    def _with_bucket(self, ev: DataFrame) -> DataFrame:
-        """ev plus the table's bucket id column (a null key buckets to -1)."""
-        k = F.col(self.cfg.key)
-        return ev.withColumn(SYS_BUCKET, F.when(k.isNull(), F.lit(-1)).otherwise(
-            F.pmod(F.xxhash64(k), F.lit(self.table.num_buckets)).cast("int")))
-
     def _run_batch_fused(
         self, batch_id: int, epoch: int, sub: int,
         lo: int | None, hi: int | None,
     ) -> BatchResult:
-        """One micro-batch, single pass: ONE scan carries validation,
-        quarantine + stats side-writes, Arrow extraction, and the MOR delta
-        write (cdc.fused). The error-limit gate runs as the merge's pre-commit hook:
-        counts only exist after the job, but an abort still commits nothing
-        (the written delta dir is an unreferenced orphan)."""
-        import shutil
-
+        """One micro-batch, single pass: ONE scan of the WAL slice, the
+        layout exchange and ONE writer stage (:meth:`_apply`) that
+        validates, quarantines, extracts and writes the delta files; the
+        driver commits exactly the files the stage returns."""
         cfg = self.cfg
         t0 = time.monotonic()
         tl: dict = {"batch": batch_id, "t0": t0}
-        from .fused import apply_fused, read_slice_stats
-
         if lo is not None:
             # file-pruned slice scan (offset predicate still applied — file
             # ranges overlap at boundaries); falls back to the epoch DF
@@ -739,73 +728,15 @@ class Replayer:
             if ev is None:
                 ev = self.read_epoch(epoch).drop("epoch")
             ev = ev.filter((F.col(cfg.seq_col) >= lo) & (F.col(cfg.seq_col) < hi))
+            rows = hi - lo
         else:
             ev = self.read_epoch(epoch).drop("epoch")
+            stats = self._epoch_stats_from_footers(epoch)
+            rows = stats[2] if stats else None
         tl["read_epoch_s"] = time.monotonic() - t0
-        nb = self.table.num_buckets
-        ev = self._with_bucket(ev)
-        pre_part = not cfg.dedup_per_batch
-        if pre_part:
-            # Place the batch's ONE wide-row exchange BEFORE the Arrow
-            # extraction stage (guide §2.3/§2.5, round-7): the WAL's
-            # offset-contiguous segments give a 2M-event slice only ~4
-            # populated row groups, so an extract riding the scan runs on
-            # ~4 cores no matter how wide the machine is (the measured
-            # cpu_frac 0.63 at 32 cores vs 0.92 at 8). Shuffling first on
-            # the merge's own (bucket, salt) layout (i) spreads the Python
-            # stage across the full shuffle-read width, (ii) ships html
-            # only — the extracted text (~40% of the wide bytes) never
-            # crosses an exchange — and (iii) lets the merge skip its own
-            # repartition (pre_partitioned=True): still exactly one
-            # exchange per batch, now on the cheap side of the UDF.
-            # Sized from the batch's row count (lake.table.exchange_width):
-            # a slice's offset span, a whole epoch's footer count, None
-            # (full width) when the footers lack offset stats.
-            if lo is not None:
-                rows = hi - lo
-            else:
-                stats = self._epoch_stats_from_footers(epoch)
-                rows = stats[2] if stats else None
-            ev = self.table._layout(ev, cfg.key, nb, rows)
-            tl["exchange_parts"] = exchange_width(
-                self.spark.sparkContext.defaultParallelism, nb, rows)
-
-        slice_dir = os.path.join(cfg.quarantine_dir, f"slice={epoch}-{sub}")
-        # idempotent re-run: a prior partial attempt may have left task files
-        # under a different partitioning — clear before the job (driver-side;
-        # concurrent batches touch distinct slice dirs)
-        shutil.rmtree(slice_dir, ignore_errors=True)
-        _t = time.monotonic()
-        enriched = apply_fused(
-            ev, epoch=epoch, slice_dir=slice_dir, key=cfg.key,
-            ts_col=cfg.ts_col, seq_col=cfg.seq_col, op_col=cfg.op_col,
-            reason_fn=cfg.validity_rule,
-        ).drop(SYS_BUCKET)
-        tl["fused_build_s"] = time.monotonic() - _t
-        if cfg.dedup_per_batch:
-            winners = dedup_lww(
-                enriched, key=cfg.key, ts_col=cfg.ts_col, seq_col=cfg.seq_col,
-                salt_partitions=cfg.salt_partitions,
-            )
-        else:
-            winners = enriched
-
-        def gate():
-            s = read_slice_stats(slice_dir)
-            check_error_limits(
-                s["n_dirty"], s["events_read"],
-                record_limit=cfg.error_record_limit,
-                percentage_limit=cfg.error_percentage_limit,
-            )
-
-        tl["plan_s"] = time.monotonic() - t0
-        stats = self.table.merge(
-            winners,
-            seq_col=cfg.seq_col,
-            op_col=cfg.op_col,
-            mode="mor",
-            pre_commit=gate,
-            pre_partitioned=pre_part,
+        out = self._apply(
+            ev, epoch=epoch, slice_name=f"{epoch}-{sub}", ckpt_epoch=batch_id,
+            rows=rows, tl=tl, gate=True,
             properties={
                 "last_batch_id": batch_id,
                 "last_epoch": epoch,
@@ -814,36 +745,11 @@ class Replayer:
                 **self._committed_prop_prunes(),
             },
         )
-        applied = stats.batch_rows
-        tl.update(stats.laps or {})
-        _t = time.monotonic()
-        sstats = read_slice_stats(slice_dir)
-        tl["slice_stats_s"] = time.monotonic() - _t
-        events_read = sstats["events_read"]
-        dirty_count = sstats["n_dirty"]
-
-        dur_ms = int((time.monotonic() - t0) * 1000)
-        win_per_bucket = stats.rows_per_bucket or {}
-        dirty_per_bucket = sstats["dirty_by_bucket"]
-        rows = []
-        for b in sorted(set(win_per_bucket) | {b for b in dirty_per_bucket if b >= 0}):
-            rows.append((
-                b, batch_id, epoch, 0, int(win_per_bucket.get(b, 0)),
-                0, int(dirty_per_bucket.get(b, 0)), 0, dur_ms,
-            ))
-        rows.append((
-            -1, batch_id, epoch, events_read, 0,
-            events_read - dirty_count - applied,
-            int(dirty_per_bucket.get(-1, 0)), sstats["bytes_in"], dur_ms,
-        ))
-        self._write_metrics_slice(rows, epoch, sub)
-
         res = BatchResult(
             batch_id=batch_id, epoch=epoch, sub=sub,
-            events_read=events_read, events_quarantined=dirty_count,
-            events_deduped=events_read - dirty_count - applied,
-            events_applied=applied, snapshot_version=stats.version,
-            duration_s=time.monotonic() - t0,
+            events_read=out["events_read"], events_quarantined=out["n_dirty"],
+            events_deduped=out["deduped"], events_applied=out["applied"],
+            snapshot_version=out["version"], duration_s=time.monotonic() - t0,
         )
         self._write_checkpoint(res)
         tl["total_s"] = res.duration_s
@@ -851,7 +757,117 @@ class Replayer:
         self.batch_timelines.append(tl)  # list.append is GIL-atomic
         return res
 
-    def _write_metrics_slice(self, rows: list[tuple], epoch: int, sub: "int | str") -> None:
+    def _writer_stage(
+        self, ev: DataFrame, *, epoch: int, slice_dir: str, rows: int | None,
+        tl: dict,
+    ) -> tuple[DataFrame, StructType]:
+        """The writer-stage frame over ``ev`` and the user schema its files
+        carry. The ONE exchange is the (bucket, salt) layout, sized from
+        ``rows`` (None: full width) and placed before the Python stage: the
+        WAL's offset-contiguous segments give a slice few populated row
+        groups, so a stage riding the scan would run on that many cores.
+        ``dedup_per_batch`` reduces the valid rows to their LWW winners
+        before it (each counting the events it stands for) and unions the
+        dirty rows back in."""
+        cfg = self.cfg
+        snap = self.table.snapshot()
+        user_schema = self.table.evolved_schema(
+            snap, StructType(ev.schema.fields + [StructField("text", StringType())]),
+            cfg.seq_col, cfg.op_col)
+        nb = self.table.num_buckets
+        # the events each row stands for and their html bytes (fused.py)
+        weights = {"_n": F.lit(1).cast("long"),
+                   "_nbytes": F.octet_length("html").cast("long")}
+        k = F.col(cfg.key)
+        ev = ev.withColumns({  # a null key buckets to -1
+            SYS_BUCKET: F.when(k.isNull(), F.lit(-1)).otherwise(
+                F.pmod(F.xxhash64(k), F.lit(nb)).cast("int")),
+            "_reason": (cfg.validity_rule or reason_col)(cfg.op_col, "D"),
+        })
+        if cfg.dedup_per_batch:
+            dirty = ev.filter(F.col("_reason").isNotNull())
+            ev = dedup_lww(
+                ev.filter(F.col("_reason").isNull()), key=cfg.key,
+                ts_col=cfg.ts_col, seq_col=cfg.seq_col,
+                salt_partitions=cfg.salt_partitions,
+                sums=weights,
+            ).unionByName(dirty.withColumns(weights))
+        else:
+            ev = ev.withColumns(weights)
+        ev = self.table._layout(ev, cfg.key, nb, rows)
+        tl["exchange_parts"] = exchange_width(
+            self.spark.sparkContext.defaultParallelism, nb, rows)
+        stage = write_stage(
+            ev, epoch=epoch, slice_dir=slice_dir, table_path=self.table.path,
+            rel_dir=LakeTable.delta_dir(snap),
+            phys=self.table._physical_schema(user_schema), key=cfg.key,
+            ts_col=cfg.ts_col, seq_col=cfg.seq_col, op_col=cfg.op_col,
+            codec=self.table.compression,
+        )
+        return stage, user_schema
+
+    def _apply(
+        self, ev: DataFrame, *, epoch: int, slice_name: str, ckpt_epoch: int,
+        rows: int | None, tl: dict, gate: bool, properties: dict,
+    ) -> dict:
+        """Run the writer stage over ``ev``, commit exactly the files it
+        returns and write lineage slice ``slice_name`` (keyed by
+        ``ckpt_epoch``) from the returned counts. With ``gate`` the error
+        limits run on those counts BEFORE the commit: an abort commits
+        nothing, and the written files stay orphans (``expire_snapshots``
+        reclaims them). Returns ``fused.summarize``'s counts plus
+        ``deduped`` and the new ``version``."""
+        import shutil
+
+        from ..lake import skipping
+
+        cfg = self.cfg
+        slice_dir = os.path.join(cfg.quarantine_dir, f"slice={slice_name}")
+        # idempotent re-run: a prior partial attempt may have left task files
+        # under a different partitioning — clear before the job (driver-side;
+        # concurrent batches touch distinct slice dirs)
+        shutil.rmtree(slice_dir, ignore_errors=True)
+        last = [time.monotonic()]
+
+        def lap(name: str) -> None:
+            now = time.monotonic()
+            tl[name], last[0] = now - last[0], now
+
+        stage, user_schema = self._writer_stage(
+            ev, epoch=epoch, slice_dir=slice_dir, rows=rows, tl=tl)
+        lap("fused_build_s")
+        tl["plan_s"] = time.monotonic() - tl["t0"]
+        collected = stage.collect()
+        lap("write_job")
+        got = summarize(collected)
+        lap("slice_stats_s")
+        if gate:
+            check_error_limits(
+                got["n_dirty"], got["events_read"],
+                record_limit=cfg.error_record_limit,
+                percentage_limit=cfg.error_percentage_limit,
+            )
+        lap("pre_commit")
+        skipping.write_dir_stats(
+            self.table.path, list(got["stats"]), cfg.ts_col,
+            precomputed=got["stats"])
+        lap("footers")
+        snap = self.table.commit_deltas(
+            got["written"], user_schema, batch_rows=got["applied"],
+            properties=properties)
+        lap("commit_cas")
+        got["version"] = snap.version
+        got["deduped"] = got["events_read"] - got["n_dirty"] - got["applied"]
+        dur_ms = int((time.monotonic() - tl["t0"]) * 1000)
+        wins, dirty = got["rows_per_bucket"], got["dirty_by_bucket"]
+        self._write_metrics_slice([
+            (b, ckpt_epoch, epoch, 0, wins.get(b, 0), 0, dirty.get(b, 0), 0, dur_ms)
+            for b in sorted(set(wins) | {b for b in dirty if b >= 0})
+        ] + [(-1, ckpt_epoch, epoch, got["events_read"], 0, got["deduped"],
+              dirty.get(-1, 0), got["bytes_in"], dur_ms)], slice_name)
+        return got
+
+    def _write_metrics_slice(self, rows: list[tuple], slice_name: str) -> None:
         """Lineage slice write: tiny table, driver-side pyarrow (no Spark job)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -870,7 +886,7 @@ class Replayer:
                 "merge_duration_ms": pa.array(cols[8], pa.int64()),
             }
         )
-        mpath = os.path.join(self.cfg.metrics_dir, f"slice={epoch}-{sub}")
+        mpath = os.path.join(self.cfg.metrics_dir, f"slice={slice_name}")
         os.makedirs(mpath, exist_ok=True)
         pq.write_table(mtable, os.path.join(mpath, "part-0.parquet"))
 
@@ -881,8 +897,7 @@ class Replayer:
     def quarantine(self) -> DataFrame:
         # basePath: slice= (and, in work dirs written by the retired two-job
         # batch pipeline, _bucket=) partition levels under the root; fused
-        # slices keep bucket as a data column and hide their _stats sidecars
-        # behind the underscore prefix. A run with zero dirty rows has no
+        # slices keep bucket as a data column. A run with zero dirty rows has no
         # data files at all — return a typed empty frame. One stable schema
         # regardless of layout: the old layout's `_bucket` partition column
         # is renamed to `bucket` so consumers see the same column name the
@@ -917,8 +932,7 @@ class Replayer:
         Driver-side pyarrow — quarantine data is small by construction
         (dirty rows are the exception) and slices are independent, so a
         thread pool covers the sandbox and the same per-slice fold could be
-        shipped to executors unchanged at larger audit volumes. Stats
-        sidecars (``_stats``) are left untouched (read per batch by name).
+        shipped to executors unchanged at larger audit volumes.
 
         Crash-safe without transactions: per slice, (1) write the folded
         file to a tmp name, (2) atomically write a ``_fold-G.json`` marker
@@ -1016,8 +1030,6 @@ class Replayer:
         import glob as _glob
         import shutil
 
-        from .fused import apply_fused, read_slice_stats
-
         cfg = self.cfg
         q = self.quarantine().filter(F.col("log_offset").isNotNull())
         if epochs is not None:
@@ -1057,35 +1069,20 @@ class Replayer:
                         & (F.col("epoch") == epoch))
                 .select(F.col("log_offset").alias("_rq_off")).distinct()
             )
-            ev = self._with_bucket(self.read_epoch(epoch).drop("epoch").join(
-                offs, F.col(cfg.seq_col) == F.col("_rq_off"), "leftsemi"))
-            slice_dir = os.path.join(
-                cfg.quarantine_dir, f"slice={epoch}-rq{gen}")
-            shutil.rmtree(slice_dir, ignore_errors=True)
-            enriched = apply_fused(
-                ev, epoch=epoch, slice_dir=slice_dir, key=cfg.key,
-                ts_col=cfg.ts_col, seq_col=cfg.seq_col, op_col=cfg.op_col,
-                reason_fn=cfg.validity_rule,
-            ).drop(SYS_BUCKET)
-            stats = self.table.merge(
-                enriched, seq_col=cfg.seq_col, op_col=cfg.op_col, mode="mor",
+            ev = self.read_epoch(epoch).drop("epoch").join(
+                offs, F.col(cfg.seq_col) == F.col("_rq_off"), "leftsemi")
+            out = self._apply(
+                ev, epoch=epoch, slice_name=f"{epoch}-rq{gen}", ckpt_epoch=-gen,
+                rows=None, tl={"t0": time.monotonic()}, gate=False,
                 properties={f"requeued:{epoch}:rq{gen}": "1"},
             )
-            sstats = read_slice_stats(slice_dir)
-            applied = stats.batch_rows
-            dur_ms = 0
-            self._write_metrics_slice(
-                [(-1, -gen, epoch, sstats["events_read"], applied,
-                  sstats["events_read"] - sstats["n_dirty"] - applied,
-                  sstats["n_dirty"], sstats["bytes_in"], dur_ms)],
-                epoch, f"rq{gen}")
             # Drop the epoch's previous slices — EXCEPT rows whose
             # log_offset is null (foreign WALs): those were filtered out of
             # the requeue above and must stay quarantined, so each old slice
             # is rewritten in place to keep only its null-offset rows (file
             # deleted when none remain, dir deleted when empty). Idempotent:
             # re-running the filter is a no-op, so a crash mid-cleanup just
-            # resumes. ``_stats`` sidecars of retained slices stay (audit).
+            # resumes.
             import pyarrow.compute as _pc
             import pyarrow.parquet as _pq
 
@@ -1112,9 +1109,9 @@ class Replayer:
                     shutil.rmtree(d, ignore_errors=True)
             results.append({
                 "epoch": epoch, "generation": gen,
-                "events_requeued": sstats["events_read"],
-                "events_applied": applied,
-                "events_still_dirty": sstats["n_dirty"],
-                "snapshot_version": stats.version,
+                "events_requeued": out["events_read"],
+                "events_applied": out["applied"],
+                "events_still_dirty": out["n_dirty"],
+                "snapshot_version": out["version"],
             })
         return results

@@ -5,8 +5,9 @@ manifest stays the single source of correctness; everything here is
 advisory — a missing or stale sidecar only costs pruning, never rows):
 
 - **ts stats** (`_stats.json`, one per immutable write dir): min/max of the
-  table's ts column per data file, harvested from the parquet footers that
-  the MOR commit already opens for row counts — zero extra I/O on the hot
+  table's ts column per data file, returned by the tasks that wrote the
+  files (the replay writer stage, the rewrite fold) or harvested from the
+  footers the MOR merge opens for row counts — zero extra I/O on the hot
   apply path. Written AFTER the data files and BEFORE the manifest commit,
   so a crashed attempt's stats die with its orphan dir. CDC delta files are
   naturally time-clustered (each micro-batch covers a slice of WAL time),
@@ -106,6 +107,34 @@ def footer_stats(path: str, ts_col: str):
     if not ok:
         lo = hi = None
     return md.num_rows, lo, hi
+
+
+class TsRange:
+    """Running ts (min, max) of a file as a writer appends its row groups,
+    equal to :func:`footer_stats`' reading of the finished file: epoch
+    micros, or (None, None) once a row group holds no non-null ts or the
+    column is neither a ``us`` timestamp nor an integer."""
+
+    def __init__(self):
+        self.lo = self.hi = None
+        self.ok = True
+
+    def add(self, col) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = col.type
+        mm = (pc.min_max(col.cast(pa.int64())).as_py()
+              if pa.types.is_timestamp(t) or pa.types.is_integer(t) else {})
+        if mm.get("min") is None:
+            self.ok = False
+        elif self.lo is None:
+            self.lo, self.hi = mm["min"], mm["max"]
+        else:
+            self.lo, self.hi = min(self.lo, mm["min"]), max(self.hi, mm["max"])
+
+    def value(self) -> tuple[int | None, int | None]:
+        return (self.lo, self.hi) if self.ok else (None, None)
 
 
 def write_dir_stats(

@@ -329,8 +329,6 @@ class MergeStats:
     batch_rows: int
     batch_deletes: int
     new_files: int
-    rows_per_bucket: dict | None = None  # bucket -> batch rows applied there
-    laps: dict | None = None  # phase -> seconds (write job, footers, commit)
 
 
 class LakeTable:
@@ -409,6 +407,19 @@ class LakeTable:
             list(user_schema.fields)
             + [StructField(SYS_OFFSET, LongType(), True), StructField(SYS_DELETED, BooleanType(), True)]
         )
+
+    @staticmethod
+    def evolved_schema(snap: Snapshot, batch_schema: StructType,
+                       seq_col: str, op_col: str | None) -> StructType:
+        """Additive schema evolution: ``snap``'s user columns, then the
+        batch's columns the table lacks (nullable). The sequence and op
+        columns and the system columns never become user columns."""
+        old = StructType.fromJson(__import__("json").loads(snap.schema_json))
+        reserved = {seq_col, op_col, SYS_OFFSET, SYS_DELETED, SYS_BUCKET}
+        return StructType(list(old.fields) + [
+            StructField(f.name, f.dataType, True) for f in batch_schema.fields
+            if f.name not in old.fieldNames() and f.name not in reserved
+        ])
 
     @property
     def key(self) -> str:
@@ -887,8 +898,6 @@ class LakeTable:
         delete_op: str = "D",
         properties: dict | None = None,
         mode: str | None = None,
-        pre_commit=None,
-        pre_partitioned: bool = False,
     ) -> MergeStats:
         """MERGE INTO: last-writer-wins upsert/delete by key.
 
@@ -911,39 +920,14 @@ class LakeTable:
         read()/compact()). Default comes from the table property
         ``merge_mode`` (itself defaulting to "cow").
 
-        ``pre_commit``: optional zero-arg callable invoked AFTER the batch's
-        data files are written but BEFORE the manifest commit. Raising from it
-        aborts the merge with NO new snapshot — the written files become
-        unreferenced orphans (reclaimed by ``expire_snapshots``). This is the
-        hook for post-scan validation gates (e.g. the CDC error-record limit,
-        whose counts only exist once the single-pass job has run).
-
-        ``pre_partitioned`` (MOR only): the caller guarantees ``batch`` is
-        already hash-partitioned by ``(bucket, salt)`` with the layout
-        :meth:`_layout` would produce, so the merge skips its own exchange.
-        The CDC replayer uses this to place the batch's ONE wide-row shuffle
-        *before* the Arrow extraction stage (guide §2.3/§2.5: the exchange
-        then carries html only — no extracted text — and the Python stage
-        runs in the shuffle-read stage at full core width instead of being
-        capped by the WAL's row-group count).
         """
         snap = self.snapshot()
         mode = mode or snap.properties.get("merge_mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
         key, ts_col, nb = snap.properties["key"], snap.properties["ts_col"], snap.num_buckets
-        old_schema = StructType.fromJson(__import__("json").loads(snap.schema_json))
-
-        # --- additive schema evolution ---------------------------------
-        reserved = {seq_col, op_col, SYS_OFFSET, SYS_DELETED, SYS_BUCKET}
+        user_schema = self.evolved_schema(snap, batch.schema, seq_col, op_col)
         batch_fields = {f.name: f for f in batch.schema.fields}
-        new_fields = [
-            f for f in batch.schema.fields
-            if f.name not in old_schema.fieldNames() and f.name not in reserved
-        ]
-        user_schema = StructType(list(old_schema.fields) + [
-            StructField(f.name, f.dataType, True) for f in new_fields
-        ])
         phys = self._physical_schema(user_schema)
 
         # --- normalize the batch to physical shape ---------------------
@@ -975,8 +959,7 @@ class LakeTable:
         # rows, which thrashes at high core counts — see cdc/replayer.py)
         s = s.withColumn(SYS_BUCKET, self._bucket_expr(key))
         if mode == "mor":
-            return self._merge_mor(snap, s, key, user_schema, properties,
-                                   pre_commit, pre_partitioned)
+            return self._merge_mor(snap, s, key, user_schema, properties)
         agg = s.groupBy(SYS_BUCKET).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col(SYS_DELETED).cast("long")).alias("d"),
@@ -985,8 +968,6 @@ class LakeTable:
         batch_deletes = int(sum(r["d"] for r in agg))
         touched = sorted(per_bucket)
         batch_rows = int(sum(per_bucket.values()))
-        if not touched and pre_commit is not None:
-            pre_commit()
         if not touched:  # empty batch: still commit a (metadata-only) snapshot
             new_snap = Snapshot(
                 version=snap.version + 1, parent=snap.version,
@@ -997,7 +978,7 @@ class LakeTable:
                 dvs=dict(snap.dvs),
             )
             write_snapshot(self.path, new_snap)
-            return MergeStats(new_snap.version, 0, 0, 0, 0, {})
+            return MergeStats(new_snap.version, 0, 0, 0, 0)
 
         touched_files = [f for b in touched for f in snap.bucket_files(b)]
         touched_deltas = [f for b in touched for f in snap.bucket_deltas(b)]
@@ -1061,8 +1042,6 @@ class LakeTable:
                 f"the batch re-evaluated to other keys than its planning pass "
                 f"(non-deterministic input?)"
             )
-        if pre_commit is not None:
-            pre_commit()  # raising here aborts with no snapshot (orphan files)
         new_files: dict[str, list[str]] = {
             b: list(fs) for b, fs in snap.files.items() if int(b) not in touched
         }
@@ -1090,7 +1069,7 @@ class LakeTable:
             dvs=new_dvs,
         )
         write_snapshot(self.path, new_snap)
-        return MergeStats(version, len(touched), batch_rows, batch_deletes, n_new, per_bucket)
+        return MergeStats(version, len(touched), batch_rows, batch_deletes, n_new)
 
     def _written_buckets(self, out_dir: str, rel_dir: str) -> dict[int, list[str]]:
         """{bucket: sorted file list} for a just-written partitioned dir."""
@@ -1112,13 +1091,11 @@ class LakeTable:
     def _layout(self, s: DataFrame, key: str, nb: int,
                 rows: int | None = None) -> DataFrame:
         """The controlled-file-layout exchange: hash-partition on
-        ``(bucket, salt)`` so the partitioned write makes ~write_salt files
-        per touched bucket (without it every upstream task spills a file
-        into every bucket dir it saw). Factored out so the CDC replayer can
-        apply the SAME layout *before* its Arrow extraction stage and tell
-        merge() to skip this exchange (``pre_partitioned=True``). ``rows``,
-        the batch's row count when the caller knows it, sizes the exchange
-        (see :func:`exchange_width`)."""
+        ``(bucket, salt)`` so a write makes ~write_salt files per touched
+        bucket (without it every upstream task spills a file into every
+        bucket dir it saw). The MOR merge and the CDC replayer's writer
+        stage both write behind it. ``rows``, the batch's row count when the
+        caller knows it, sizes the exchange (see :func:`exchange_width`)."""
         par = self.spark.sparkContext.defaultParallelism
         write_salt = max(1, par // nb)
         return s.repartition(
@@ -1134,72 +1111,63 @@ class LakeTable:
         key: str,
         user_schema: StructType,
         properties: dict | None,
-        pre_commit=None,
-        pre_partitioned: bool = False,
     ) -> MergeStats:
         """Merge-on-read apply: write the (pre-deduped) batch as per-bucket
-        delta files and commit. No table reads, no join — per-batch cost is
+        delta files with Spark's writer and commit them
+        (:meth:`commit_deltas`). No table reads, no join — per-batch cost is
         O(batch) regardless of table size; resolution happens in
-        read()/compact(). Per-bucket row counts come from the parquet footers
-        (driver-side metadata, no extra Spark job).
-
-        CONCURRENCY-SAFE: the delta dir name carries a unique token (never
-        contended) and the manifest commit is an optimistic-retry loop — a
-        loser re-reads the latest snapshot and re-layers only its own files,
-        so disjoint micro-batches can be applied by concurrent committers
-        (delta layering is order-free: LWW is resolved from (ts, offset) in
-        the data, not from commit order). A crashed attempt's orphan dir is
-        unreferenced and reclaimed by expire_snapshots."""
-        import time as _time
-
-        nb = snap.num_buckets
-        rel_dir = f"data/d{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, rel_dir)
-        laps: dict[str, float] = {}
-        _t = _time.monotonic()
-
-        # controlled layout: ~write_salt files per touched bucket — unless the
-        # caller already holds this exact partitioning (see _layout)
-        if not pre_partitioned:
-            s = self._layout(s, key, nb)
-        s.write.option("compression", self.compression).mode("errorifexists").partitionBy(SYS_BUCKET).parquet(out_dir)
-        laps["write_job"] = _time.monotonic() - _t
-        _t = _time.monotonic()
-
+        read()/compact(). The row count and ts stats come from the parquet
+        footers (driver-side metadata, no extra Spark job)."""
         from concurrent.futures import ThreadPoolExecutor
 
         from . import skipping
 
+        rel_dir = self.delta_dir(snap)
+        out_dir = os.path.join(self.path, rel_dir)
+        s = self._layout(s, key, snap.num_buckets)
+        s.write.option("compression", self.compression).mode("errorifexists").partitionBy(SYS_BUCKET).parquet(out_dir)
         written = self._written_buckets(out_dir, rel_dir)
-        # footer reads are tiny but add up serially (buckets × salt files per
-        # batch, pure driver latency between the write job and the commit);
-        # read them in a small thread pool — metadata-only, I/O-bound. The
-        # same opens also harvest per-file ts min/max for the data-skipping
-        # sidecar (skipping.py) — stats on the hot path cost zero extra I/O.
-        flat = [(b, f) for b, fs in written.items() for f in fs]
-        per_bucket: dict[int, int] = {b: 0 for b in written}
+        files = [f for fs in written.values() for f in fs]
         ts_col = snap.properties["ts_col"]
-        pre_stats: dict[str, tuple] = {}
-        if flat:
-            with ThreadPoolExecutor(max_workers=min(8, len(flat))) as pool:
-                for (b, f), (n, lo, hi) in zip(flat, pool.map(
-                    lambda bf: skipping.footer_stats(
-                        os.path.join(self.path, bf[1]), ts_col),
-                    flat,
-                )):
-                    per_bucket[b] += int(n)
-                    pre_stats[f] = (lo, hi)
-            skipping.write_dir_stats(
-                self.path, [f for _b, f in flat], ts_col,
-                precomputed=pre_stats)
-        batch_rows = int(sum(per_bucket.values()))
+        # footer reads are tiny but add up serially: a small thread pool
+        with ThreadPoolExecutor(max_workers=min(8, len(files) or 1)) as pool:
+            footers = dict(zip(files, pool.map(lambda f: skipping.footer_stats(
+                os.path.join(self.path, f), ts_col), files)))
+        skipping.write_dir_stats(self.path, files, ts_col, precomputed={
+            f: (lo, hi) for f, (_n, lo, hi) in footers.items()})
+        batch_rows = sum(int(n) for n, _lo, _hi in footers.values())
+        new_snap = self.commit_deltas(
+            written, user_schema, batch_rows=batch_rows, properties=properties)
+        return MergeStats(new_snap.version, len(written), batch_rows, -1,
+                          len(files))
+
+    @staticmethod
+    def delta_dir(snap: Snapshot) -> str:
+        """A fresh table-relative dir for one write attempt's delta files.
+        The unique token means two writers that both read version N never
+        collide on files: the manifest CAS stays the ONLY contention point,
+        and a crashed attempt's dir is an unreferenced orphan that
+        expire_snapshots reclaims."""
+        return f"data/d{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
+
+    def commit_deltas(
+        self,
+        written: dict[int, list[str]],
+        user_schema: StructType,
+        *,
+        batch_rows: int,
+        properties: dict | None = None,
+    ) -> Snapshot:
+        """Layer ``written`` ({bucket: [table-relative delta file]}) onto the
+        table as one MOR commit, evolving its schema to ``user_schema``.
+
+        CONCURRENCY-SAFE: an optimistic-retry CAS (:meth:`_commit_cas`) — a
+        loser re-reads the latest snapshot and re-layers only its own files,
+        so disjoint micro-batches can be committed by concurrent writers
+        (delta layering is order-free: LWW is resolved from (ts, offset) in
+        the data, not from commit order). Committing no file still makes a
+        snapshot carrying ``properties``."""
         n_new = sum(len(fs) for fs in written.values())
-        laps["footers"] = _time.monotonic() - _t
-        _t = _time.monotonic()
-        if pre_commit is not None:
-            pre_commit()  # raising here aborts with no snapshot (orphan files)
-        laps["pre_commit"] = _time.monotonic() - _t
-        _t = _time.monotonic()
 
         def layer(base: Snapshot) -> Snapshot:
             # re-derive evolution against the freshest schema
@@ -1213,7 +1181,7 @@ class LakeTable:
             return Snapshot(
                 version=base.version + 1, parent=base.version,
                 schema_json=StructType(merged_fields).json(),
-                num_buckets=nb, files=dict(base.files),
+                num_buckets=base.num_buckets, files=dict(base.files),
                 properties=_merged_props(base.properties, properties),
                 summary={
                     "touched_buckets": len(written),
@@ -1226,10 +1194,7 @@ class LakeTable:
                 dvs=dict(base.dvs),
             )
 
-        new_snap = self._commit_cas(layer, "MOR commit")
-        laps["commit_cas"] = _time.monotonic() - _t
-        return MergeStats(new_snap.version, len(written), batch_rows, -1, n_new,
-                          per_bucket, laps)
+        return self._commit_cas(layer, "MOR commit")
 
     # ------------------------------------------------------------- append
     def append(self, df: DataFrame, *, properties: dict | None = None) -> MergeStats:
@@ -1319,7 +1284,7 @@ class LakeTable:
                 if snap.bucket_deltas(b) and (buckets is None or b in buckets)
             )
             if not todo:
-                return MergeStats(snap.version, 0, 0, 0, 0, {})
+                return MergeStats(snap.version, 0, 0, 0, 0)
             return self._fold_dv(snap, todo)
         todo = sorted(
             b for b in candidates
@@ -1327,7 +1292,7 @@ class LakeTable:
             and (buckets is None or b in buckets)
         )
         if not todo:
-            return MergeStats(snap.version, 0, 0, 0, 0, {})
+            return MergeStats(snap.version, 0, 0, 0, 0)
         return self._compact_local(snap, todo, target_files_per_bucket)
 
     def _compact_local(
@@ -1385,6 +1350,8 @@ class LakeTable:
             import pandas as pd
             import pyarrow as pa
             import pyarrow.parquet as pq
+
+            from .skipping import TsRange
 
             def cast_to(t: "pa.Table", target: "pa.Schema") -> "pa.Table":
                 """Align a file's table to the unified output schema: missing
@@ -1457,7 +1424,8 @@ class LakeTable:
                     del file_w, row_w
                     d = os.path.join(out_root, f"{SYS_BUCKET}={b}")
                     os.makedirs(d, exist_ok=True)
-                    names, writer, written = [], None, 0
+                    # per output file: [name, rows, ts range] for its stats
+                    outs, writer, written = [], None, 0
                     try:
                         for i, p in enumerate(paths):
                             rows = by_file.get(i)
@@ -1469,8 +1437,8 @@ class LakeTable:
                             pos = 0
                             while pos < len(t):
                                 if writer is None:
-                                    name = f"part-{len(names):05d}.parquet"
-                                    names.append(name)
+                                    name = f"part-{len(outs):05d}.parquet"
+                                    outs.append([name, 0, TsRange()])
                                     writer = pq.ParquetWriter(
                                         os.path.join(d, name), target,
                                         compression=codec,
@@ -1478,6 +1446,8 @@ class LakeTable:
                                 room = per - (written % per) if per else len(t)
                                 chunk = t.slice(pos, room)
                                 writer.write_table(chunk)
+                                outs[-1][1] += len(chunk)
+                                outs[-1][2].add(chunk.column(ts_col))
                                 written += len(chunk)
                                 pos += len(chunk)
                                 if per and written % per == 0:
@@ -1486,12 +1456,19 @@ class LakeTable:
                     finally:
                         if writer is not None:
                             writer.close()
-                    yield pd.DataFrame({"bucket": [b], "n_files": [len(names)],
-                                        "rows": [total]})
+                    yield pd.DataFrame({
+                        "bucket": [b] * len(outs),
+                        "file": [f"{rel_dir}/{SYS_BUCKET}={b}/{o[0]}" for o in outs],
+                        "rows": [o[1] for o in outs],
+                        "ts_min": pd.array([o[2].value()[0] for o in outs], "Int64"),
+                        "ts_max": pd.array([o[2].value()[1] for o in outs], "Int64"),
+                    }, columns=["bucket", "file", "rows", "ts_min", "ts_max"])
 
-        # Range partitioning on the distinct bucket ids spreads buckets
-        # evenly across tasks (hash repartition would collide ~40% of buckets
-        # together). One task per core (up to one bucket each): the round-5
+        # parallelize cuts the sorted specs into n_tasks contiguous, even
+        # bucket runs with no sampling job (repartitionByRange sampled the
+        # specs first: three Spark jobs a fold instead of one), and hash
+        # repartitioning would collide ~40% of buckets together. One task
+        # per core (up to one bucket each): the round-5
         # fold lab (BENCH_local_r5_fold_lab.json, BENCH.md) showed
         # the old max(8, cores//3) cap was the fold's anti-scaling culprit —
         # 16M events fold in 25.6s with 10 tasks at 32 cores but 12.6s with
@@ -1502,20 +1479,19 @@ class LakeTable:
         par = self.spark.sparkContext.defaultParallelism
         n_tasks = min(len(specs), max(1, par))
         spec_df = self.spark.createDataFrame(
-            specs, "bucket int, files string, lww boolean"
-        ).repartitionByRange(n_tasks, "bucket")
-        stats = spec_df.mapInPandas(fold_bucket, "bucket int, n_files int, rows long") \
-            .collect()  # driver-side: one row per bucket (metadata only)
-        written = {
-            int(r["bucket"]): [
-                f"{rel_dir}/{SYS_BUCKET}={int(r['bucket'])}/part-{i:05d}.parquet"
-                for i in range(int(r["n_files"]))
-            ]
-            for r in stats
-        }
+            self.spark.sparkContext.parallelize(specs, n_tasks),
+            "bucket int, files string, lww boolean")
+        out = spec_df.mapInPandas(
+            fold_bucket,
+            "bucket int, file string, rows long, ts_min long, ts_max long",
+        ).collect()  # driver-side: one row per output file (metadata only)
+        written: dict[int, list[str]] = {}
+        for r in out:
+            written.setdefault(int(r["bucket"]), []).append(r["file"])
         from . import skipping
         skipping.write_dir_stats(
-            self.path, [f for fs in written.values() for f in fs], ts_col)
+            self.path, [r["file"] for r in out], ts_col,
+            precomputed={r["file"]: (r["ts_min"], r["ts_max"]) for r in out})
         return self._commit_fold(todo, folded_files, folded_deltas, written)
 
     def _fold_dv(self, snap: Snapshot, todo: list[int]) -> MergeStats:
@@ -1598,8 +1574,9 @@ class LakeTable:
 
         par = self.spark.sparkContext.defaultParallelism
         n_tasks = min(len(specs), max(1, par))
-        spec_df = self.spark.createDataFrame(specs, "bucket int, files string") \
-            .repartitionByRange(n_tasks, "bucket")
+        spec_df = self.spark.createDataFrame(  # one job: see _compact_local
+            self.spark.sparkContext.parallelize(specs, n_tasks),
+            "bucket int, files string")
         stats = spec_df.mapInPandas(
             dv_bucket, "bucket int, n_losers long, dv_file string").collect()
         dv_written = {
@@ -1670,7 +1647,7 @@ class LakeTable:
             )
 
         new_snap = self._commit_cas(layer, "DV fold commit")
-        return MergeStats(new_snap.version, len(todo), 0, 0, n_new, {})
+        return MergeStats(new_snap.version, len(todo), 0, 0, n_new)
 
     def _commit_fold(
         self,
@@ -1719,7 +1696,7 @@ class LakeTable:
             )
 
         new_snap = self._commit_cas(layer, "compact commit")
-        return MergeStats(new_snap.version, len(todo), 0, 0, n_new, {})
+        return MergeStats(new_snap.version, len(todo), 0, 0, n_new)
 
     def rebucket(
         self,
@@ -1815,7 +1792,7 @@ class LakeTable:
             ) from None
         return MergeStats(
             new_snap.version, len(written), 0, 0,
-            sum(len(fs) for fs in written.values()), {},
+            sum(len(fs) for fs in written.values()),
         )
 
     def expire_snapshots(self, keep_last: int = 2) -> int:

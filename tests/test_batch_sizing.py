@@ -208,13 +208,13 @@ def test_run_and_requeue_leave_session_conf_unchanged(spark, tmp_path):
             log_dir=log_dir, work_dir=str(tmp_path / name / "work"),
             table_path=str(tmp_path / name / "pages"), num_buckets=NB,
             max_concurrent_batches=conc))
-        merge = rep.table.merge
+        commit = rep.table.commit_deltas
 
         def spy(*a, **kw):  # the tuned split size is live for the batch job
             seen.append(spark.conf.get(SPLIT_CONF))
-            return merge(*a, **kw)
+            return commit(*a, **kw)
 
-        rep.table.merge = spy
+        rep.table.commit_deltas = spy
         return rep
 
     before = dict(spark.conf.getAll)

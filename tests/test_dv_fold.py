@@ -311,3 +311,19 @@ def test_dv_same_bucket_conflict_detected(spark, tmp_path):
     t.compact(strategy="local", target_files_per_bucket=1)  # rewrite wins
     with pytest.raises(RuntimeError, match="concurrent compaction"):
         t._fold_dv(stale, todo)
+
+
+@pytest.mark.parametrize("strategy", ["dv", "local"])
+def test_fold_submits_one_spark_job(spark, tmp_path, strategy):
+    """A fold is ONE Spark job: its bucket specs are cut into contiguous
+    task runs with no range-partitioner sampling jobs in front."""
+    t = seed_mor(spark, str(tmp_path / strategy), nb=8)
+    sc, group = spark.sparkContext, f"fold-{strategy}-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        t.compact(strategy=strategy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert state(t) == EXPECTED

@@ -1,14 +1,20 @@
-"""Single-pass (fused) micro-batch pipeline: oracle parity, quarantine/stats
-side-write correctness, pre-commit error-limit abort, resume, and the
-one-python-eval plan invariant."""
+"""Single-pass (fused) micro-batch pipeline: oracle parity, quarantine
+side-write and returned-count correctness, pre-commit error-limit abort,
+resume, the writer stage's one-Python-node plan, and the commit of exactly
+the files the writer stage returns."""
 
 from __future__ import annotations
+
+import glob
+import os
+import threading
+import time
 
 import numpy as np
 import pytest
 
 from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
-from datax_3_0_0_src_spark.cdc.oracle import gen_events_pdf, validate_pd
+from datax_3_0_0_src_spark.cdc.oracle import expected_pages, gen_events_pdf, validate_pd
 from datax_3_0_0_src_spark.cdc.quarantine import ErrorLimitExceeded
 from datax_3_0_0_src_spark.cdc.replayer import ReplayConfig, Replayer
 
@@ -59,10 +65,12 @@ def test_fused_error_limit_aborts_before_commit(spark, log_and_work):
                error_percentage_limit=None)
     with pytest.raises(ErrorLimitExceeded):
         rep.run()
-    # the pre-commit gate fired after the write but before the manifest
-    # commit: no snapshot beyond the empty v0, no checkpoints
+    # the gate fired on the writer stage's returned counts, after its files
+    # were written but before the manifest commit: no snapshot beyond the
+    # empty v0, no checkpoints, the written files unreferenced orphans
     assert rep.table.snapshot().version == 0
     assert rep.committed_pairs() == set()
+    assert glob.glob(os.path.join(table, "data", "d*", "_bucket=*", "*.parquet"))
 
 
 def test_first_failed_batch_stops_the_schedule(spark, log_and_work):
@@ -73,17 +81,24 @@ def test_first_failed_batch_stops_the_schedule(spark, log_and_work):
     conc = dict(max_events_per_batch=500, max_concurrent_batches=2)
     rep = make(spark, log_dir, work, table, **conc)
     assert len(rep.plan_batches()) >= 6
-    merge = rep.table.merge
+    commit = rep.table.commit_deltas
+    failed0 = threading.Event()
 
     class Boom(RuntimeError):
         pass
 
     def failing(*a, **kw):
         if kw["properties"]["last_batch_id"] == 0:
+            failed0.set()
             raise Boom("batch 0")
-        return merge(*a, **kw)
+        # a sibling commits only after batch 0 failed at its commit (as
+        # behind a slow batch 0); the grace lets batch 0's thread stop the
+        # schedule before the sibling's pool thread frees up
+        assert failed0.wait(120)
+        time.sleep(0.5)
+        return commit(*a, **kw)
 
-    rep.table.merge = failing
+    rep.table.commit_deltas = failing
     with pytest.raises(Boom):
         rep.run()
     assert len(rep.committed_pairs()) <= 1
@@ -106,28 +121,128 @@ def test_fused_resume_and_idempotent_rerun(spark, log_and_work):
 
 
 def test_fused_with_per_batch_dedup(spark, log_and_work):
+    """Per-batch dedup, plain and salted, runs through the same writer
+    stage: every count is exact — events read, quarantined, and deduped =
+    the valid events of a batch beyond its distinct keys."""
     log_dir, work, table = log_and_work
-    rep = make(spark, log_dir, work, table, dedup_per_batch=True)
-    rep.run()
-    assert_state_matches(rep, CFG)
+    ev = gen_events_pdf(CFG, np.arange(CFG.n_events))
+    valid = validate_pd(ev)
+    per_epoch = ev[valid].groupby("epoch")
+    for salt in (None, 3):
+        rep = make(spark, log_dir, f"{work}-{salt}", f"{table}-{salt}",
+                   dedup_per_batch=True, salt_partitions=salt)
+        results = rep.run()
+        assert_state_matches(rep, CFG)
+        assert [r.events_read for r in results] == \
+            list(ev.groupby("epoch").size())
+        assert [r.events_quarantined for r in results] == \
+            list((~valid).groupby(ev["epoch"]).sum())
+        assert [r.events_applied for r in results] == \
+            list(per_epoch["url"].nunique())
+        assert [r.events_deduped for r in results] == \
+            list(per_epoch.size() - per_epoch["url"].nunique())
+        m = rep.metrics().toPandas()
+        assert m["events_deduped"].sum() == sum(r.events_deduped for r in results)
+        assert m["bytes_in"].sum() == sum(
+            len(h) for h in ev["html"] if h is not None)
 
 
 def test_fused_single_python_eval_in_plan(spark, log_and_work):
-    """Both struct-field references (filter on .reason, project .text) must
-    resolve to ONE ArrowEvalPython node — a duplicated evaluation would run
-    the whole extraction twice and double the quarantine side-write."""
-    from datax_3_0_0_src_spark.cdc.fused import apply_fused
-    from datax_3_0_0_src_spark.lake.table import SYS_BUCKET
+    """A batch's plan is ONE Python node (the writer stage's MapInArrow, no
+    Arrow/batch eval UDF) behind ONE exchange (the bucket layout): every row
+    crosses into Python once, and the quarantine side-write happens once."""
+    log_dir, work, table = log_and_work
+    for dedup in (False, True):
+        rep = make(spark, log_dir, work, f"{table}-{dedup}", dedup_per_batch=dedup)
+        stage, _ = rep._writer_stage(
+            rep.read_epoch(0).drop("epoch"), epoch=0,
+            slice_dir=work + "/probe", rows=None, tl={})
+        plan = stage._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert "EvalPython" not in plan, plan
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        # per-batch dedup adds its aggregation's key exchange
+        assert len(exchanges) == (2 if dedup else 1), plan
+
+
+def test_committed_deltas_are_exactly_the_returned_files(
+        spark, log_and_work, monkeypatch):
+    """The commit layers exactly the files the writer stage's collected rows
+    name — no listing — with their returned ts ranges as the stats sidecar
+    (equal to the footers), and lookup() and changes() see them."""
+    from datax_3_0_0_src_spark.cdc import replayer as rp
+    from datax_3_0_0_src_spark.lake import skipping
+
+    log_dir, work, table = log_and_work
+    named, real = [], rp.summarize
+
+    def spy(rows):
+        named.extend(r["path"] for r in rows if r["path"] is not None)
+        return real(rows)
+
+    monkeypatch.setattr(rp, "summarize", spy)
+    rep = make(spark, log_dir, work, table, max_events_per_batch=500)
+    results = rep.run()
+    deltas = rep.table.snapshot().all_deltas()
+    assert named and len(set(named)) == len(named)
+    assert sorted(deltas) == sorted(named)
+    on_disk = {os.path.relpath(p, table) for p in glob.glob(
+        os.path.join(table, "data", "*", "_bucket=*", "*.parquet"))}
+    assert on_disk == set(named)
+    stats = skipping.load_stats(table, named)
+    for f in named:
+        _n, lo, hi = skipping.footer_stats(os.path.join(table, f), "warc_ts")
+        assert stats[f] == [lo, hi] and lo is not None
+
+    exp = expected_pages(CFG).set_index("url")
+    urls = list(exp.index[:: max(1, len(exp) // 5)])
+    got = {r["url"]: r["text"] for r in rep.table.lookup(urls).collect()}
+    assert got == {u: exp.loc[u, "text"] for u in urls}
+    ch = rep.table.changes(0).toPandas()
+    assert len(ch) == sum(r.events_applied for r in results)
+    assert set(ch["_commit_version"]) == {r.snapshot_version for r in results}
+
+
+def test_writer_task_failure_commits_no_duplicate(spark, log_and_work, monkeypatch):
+    """A writer task that fails after writing its files (attempt 0) fails
+    its batch with nothing of it committed; the re-run writes fresh,
+    attempt-unique files and commits only those: no (url, offset) is
+    layered twice, the failed attempt's files stay unreferenced orphans, and
+    the state matches the oracle. (A local master makes one attempt per
+    task, so the retry here is the batch's re-run.)"""
     from pyspark.sql import functions as F
 
-    log_dir, work, _table = log_and_work
-    df = (
-        spark.read.parquet(log_dir + "/epoch=0")
-        .withColumn(SYS_BUCKET, F.lit(0))
-    )
-    out = apply_fused(df, epoch=0, slice_dir=work + "/probe")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 1, plan
+    from datax_3_0_0_src_spark.cdc import fused
+
+    log_dir, work, table = log_and_work
+    marker = work + "_marker"
+
+    def fail_first(tbl, path, _real=fused._atomic_parquet, _marker=marker):
+        # runs in a Python worker: the first call anywhere fails its task
+        # after the task wrote (and closed) its delta files
+        try:
+            os.close(os.open(_marker, os.O_CREAT | os.O_EXCL))
+        except FileExistsError:
+            return _real(tbl, path)
+        raise RuntimeError("injected writer-task failure")
+
+    monkeypatch.setattr(fused, "_atomic_parquet", fail_first)
+    conc = dict(max_concurrent_batches=1)
+    with pytest.raises(Exception, match="injected writer-task failure"):
+        make(spark, log_dir, work, table, **conc).run()
+    assert os.path.exists(marker)
+    orphans = {os.path.relpath(p, table) for p in glob.glob(
+        os.path.join(table, "data", "*", "_bucket=*", "*.parquet"))}
+    assert orphans
+
+    resumed = make(spark, log_dir, work, table, **conc)
+    resumed.run()
+    assert_state_matches(resumed, CFG)
+    deltas = resumed.table.snapshot().all_deltas()
+    assert not set(deltas) & orphans
+    df = spark.read.parquet(*[f"{table}/{f}" for f in deltas])
+    assert df.groupBy("url", "_lww_offset").count() \
+        .filter(F.col("count") > 1).count() == 0
 
 
 def test_quarantine_requeue_after_rule_fix(spark, log_and_work):
@@ -160,12 +275,16 @@ def test_quarantine_requeue_after_rule_fix(spark, log_and_work):
     # rule fixed: a new replayer over the SAME work/table dirs, default rule
     fixed = make(spark, log_dir, work, table)
     out = fixed.requeue_quarantined()
-    assert sum(r["events_applied"] for r in out) > 0
     assert_state_matches(fixed, CFG)  # state == replay-without-the-bad-rule
 
     # only intrinsically dirty rows remain, re-quarantined in rq slices
     ev = gen_events_pdf(CFG, np.arange(CFG.n_events))
     n_dirty = int((~validate_pd(ev)).sum())
+    # every quarantined row is re-read; the overtight ones apply, the rest
+    # stay dirty
+    assert sum(r["events_applied"] for r in out) == n_overtight
+    assert sum(r["events_still_dirty"] for r in out) == n_dirty
+    assert sum(r["events_requeued"] for r in out) == n_overtight + n_dirty
     q1 = fixed.quarantine()
     assert q1.count() == n_dirty
     reasons = {r["reason"] for r in q1.select("reason").distinct().collect()}
@@ -292,15 +411,15 @@ def test_concurrent_exactly_once_kill_soak(spark, log_and_work):
 
             rep._write_checkpoint = ckpt
         else:
-            orig_merge, calls = rep.table.merge, []
+            orig_commit, calls = rep.table.commit_deltas, []
 
-            def merge(*a, _o=orig_merge, _c=calls, _t=target, **kw):
+            def commit(*a, _o=orig_commit, _c=calls, _t=target, **kw):
                 _c.append(1)
                 if len(_c) - 1 == _t:
-                    raise Kill(f"kill pre-merge call {_t}")
+                    raise Kill(f"kill pre-commit call {_t}")
                 return _o(*a, **kw)
 
-            rep.table.merge = merge
+            rep.table.commit_deltas = commit
         try:
             rep.run()
             # pre_merge kill on an already-planned batch can land after all
@@ -383,15 +502,15 @@ def test_overlapped_dv_fold_kill_soak(spark, log_and_work):
 
             rep._write_checkpoint = ckpt
         else:
-            orig_merge, calls = rep.table.merge, []
+            orig_commit, calls = rep.table.commit_deltas, []
 
-            def merge(*a, _o=orig_merge, _c=calls, _t=target, **kw):
+            def commit(*a, _o=orig_commit, _c=calls, _t=target, **kw):
                 _c.append(1)
                 if len(_c) - 1 == _t:
-                    raise Kill(f"kill pre-merge call {_t}")
+                    raise Kill(f"kill pre-commit call {_t}")
                 return _o(*a, **kw)
 
-            rep.table.merge = merge
+            rep.table.commit_deltas = commit
         try:
             rep.run()
         except (Kill, RuntimeError):

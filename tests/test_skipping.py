@@ -260,3 +260,18 @@ def test_dv_folded_read_builds_without_jobs(spark, tmp_table_dir):
     assert n_jobs <= 2
     assert {r["url"]: (r["warc_ts"], r["text"]) for r in lk} == {
         k: full[k] for k in URLS_A[:3]}
+
+
+def test_rewrite_fold_stats_equal_footers(spark, tmp_table_dir):
+    """The rewrite fold's tasks return each output file's ts range, and the
+    stats sidecar written from them equals what the footers say."""
+    from datax_3_0_0_src_spark.lake.skipping import footer_stats, load_stats
+
+    t = _fill(spark, make_table(spark, tmp_table_dir))
+    t.compact(strategy="local", target_files_per_bucket=2)
+    files = t.snapshot().all_files()
+    assert files
+    stats = load_stats(tmp_table_dir, files)
+    for f in files:
+        _n, lo, hi = footer_stats(os.path.join(tmp_table_dir, f), "warc_ts")
+        assert lo is not None and stats[f] == [lo, hi], f
