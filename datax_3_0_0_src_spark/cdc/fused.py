@@ -49,11 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from ..lake.table import SYS_BUCKET, SYS_DELETED, SYS_OFFSET
-
-# zstd level of the delta files: parquet-mr's default, the level Spark's
-# writer used for them (at pyarrow's default, 1, they were 8% larger)
-ZSTD_LEVEL = 3
+from ..lake.table import SYS_BUCKET, SYS_DELETED, SYS_OFFSET, parquet_options
 
 RESULT_DDL = (
     "bucket int, path string, rows long, ts_min long, ts_max long, "
@@ -100,17 +96,7 @@ def write_stage(
     with the physical schema ``phys``, compressed with ``codec``."""
     target = to_arrow_schema(phys)
     result = to_arrow_schema(StructType.fromDDL(RESULT_DDL))
-    # min/max only where a reader prunes on them: the key (lookup's IN
-    # pushdown), the ts (skipping's footer stats) and the narrow columns.
-    # Wide string/binary payload (html, text) min/max cost ~8% of a
-    # 250-row tail file's bytes at zstd level 3.
-    options = {
-        "compression": codec,
-        "compression_level": ZSTD_LEVEL if codec == "zstd" else None,
-        "write_statistics": [
-            f.name for f in target if f.name == key
-            or not (pa.types.is_string(f.type) or pa.types.is_binary(f.type))],
-    }
+    options = parquet_options(target, key, codec)
     out_root = os.path.join(table_path, rel_dir)
 
     def write_task(batches):
@@ -217,8 +203,11 @@ def write_stage(
 def summarize(rows: list) -> dict:
     """The batch's files and counts from the stage's collected rows:
     ``written`` {bucket: [rel path]}, ``stats`` {rel path: (ts_min,
-    ts_max)}, ``rows_per_bucket``, ``applied``, and the summed
-    ``events_read``, ``n_dirty``, ``bytes_in`` and ``dirty_by_bucket``."""
+    ts_max)}, ``rows_per_bucket``, ``applied``, the summed
+    ``events_read``, ``n_dirty``, ``bytes_in`` and ``dirty_by_bucket``, and
+    the writer-task balance: ``writer_tasks`` (one counts row each),
+    ``empty_writer_tasks`` (tasks that read no event) and
+    ``max_task_events``."""
     from collections import Counter
 
     files = sorted((r for r in rows if r["path"] is not None),
@@ -238,4 +227,7 @@ def summarize(rows: list) -> dict:
         "rows_per_bucket": dict(per_bucket), "applied": sum(per_bucket.values()),
         "dirty_by_bucket": dict(dirty),
         **{k: sum(r[k] for r in tasks) for k in ("events_read", "n_dirty", "bytes_in")},
+        "writer_tasks": len(tasks),
+        "empty_writer_tasks": sum(1 for r in tasks if r["events_read"] == 0),
+        "max_task_events": max((r["events_read"] for r in tasks), default=0),
     }

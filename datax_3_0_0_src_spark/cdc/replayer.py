@@ -187,17 +187,18 @@ class Replayer:
     def __init__(self, spark: SparkSession, cfg: ReplayConfig):
         self.spark = spark
         self.cfg = cfg
-        # per-batch phase timelines: reviewable serial breakdown, surfaced by
-        # bench.py into the artifact
+        # per-batch phase timelines (and writer-task counts): reviewable
+        # serial breakdown, surfaced by bench.py into the artifact
         self.batch_timelines: list[dict] = []
         # per-epoch DataFrame memo: WAL epoch dirs are immutable once logged
         # (segments roll to NEW epoch dirs), so the listing + footer schema
         # inference resolved at spark.read.parquet() time stays valid for the
         # Replayer's lifetime. Without this, every offset-slice batch of the
-        # same epoch re-runs the discovery — and past the 32-file
-        # parallel-discovery threshold that is a SPARK JOB which queues
-        # behind executor-saturating write jobs (profiled: 1.2s -> 10s per
-        # batch as the pipeline saturates; 26s of a 70s 8-core wall).
+        # same epoch re-runs the discovery, and its schema inference is a
+        # SPARK JOB (one task; past the 1024-file parallel-discovery
+        # threshold the listing is one more) which queues behind
+        # executor-saturating write jobs (profiled: 1.2s -> 10s per batch as
+        # the pipeline saturates; 26s of a 70s 8-core wall).
         self._epoch_df_cache: dict[int, DataFrame] = {}
         # per-epoch [(file, min_offset, max_offset)] from the footer pass —
         # drives per-slice FILE pruning (_slice_df). Written once per epoch
@@ -613,7 +614,8 @@ class Replayer:
             pending = pending[:stop_after_batches]
         self._tune_scan_splits([p[1] for p in pending])
         # pre-warm the epoch DataFrame memo while executors are IDLE: the
-        # first discovery of a >32-file epoch runs a listing job, and
+        # first read of any epoch runs Spark's schema-inference job (one
+        # task; an epoch of more than 1024 files also a listing job), and
         # submitted after the write pipeline fills it waits seconds in the
         # scheduler queue (profiled) — here it runs on an empty cluster
         for e in dict.fromkeys(p[1] for p in pending):
@@ -765,7 +767,9 @@ class Replayer:
         carry. The ONE exchange is the (bucket, salt) layout, sized from
         ``rows`` (None: full width) and placed before the Python stage: the
         WAL's offset-contiguous segments give a slice few populated row
-        groups, so a stage riding the scan would run on that many cores.
+        groups, so a stage riding the scan would run on that many cores. A
+        batch of at most ``ROWS_PER_TASK`` rows has no layout exchange: its
+        writer stage is one task (``exchange_parts`` 1) that also scans.
         ``dedup_per_batch`` reduces the valid rows to their LWW winners
         before it (each counting the events it stands for) and unions the
         dirty rows back in."""
@@ -840,6 +844,8 @@ class Replayer:
         collected = stage.collect()
         lap("write_job")
         got = summarize(collected)
+        for k in ("writer_tasks", "empty_writer_tasks", "max_task_events"):
+            tl[k] = got[k]
         lap("slice_stats_s")
         if gate:
             check_error_limits(

@@ -58,17 +58,28 @@ SYS_OFFSET = "_lww_offset"   # sequence number of the winning event (LWW tiebrea
 SYS_DELETED = "_deleted"     # tombstone flag
 SYS_BUCKET = "_bucket"       # partition-directory column (not stored inside files)
 
-# Rows one task of a batch's layout exchange must carry before a wider plan
-# (a second wave of tasks) is used. Every task of the post-exchange stage
+# Rows a task of a batch's writer stage is sized for. Every task of the stage
 # pays a fixed Python-worker cost whatever its row count: at local[4], one
 # wave of four warm extract-UDF tasks of 1k rows runs 0.10-0.12 s longer than
 # the same job without Python. It was 0.29-0.31 s while Spark's per-task
 # importlib.invalidate_caches() re-parsed every zip on the worker's path (the
 # package __init__ now re-reads only a changed archive). The extract kernel
-# clears ~300k rows/s, so a task pays for itself only from ~33k rows. Small
-# batches therefore run in one wave of ``par`` tasks (a 4k-event tail batch:
-# 1k rows a task at local[4]). The constant sits far below that break-even
-# on purpose, so large batches keep the full-width plan: 8192 = 2^13 is the
+# clears ~300k rows/s, so a task pays for itself only from ~33k rows.
+#
+# One-task rule: a batch of at most ROWS_PER_TASK known rows is not split at
+# all. Its scan, validity/bucket columns and writer stage run as one task in
+# one Spark job with no exchange, and that task writes one file per touched
+# bucket, the layout the exchange exists to produce. A larger batch fills
+# ROWS_PER_TASK rows a task, raised to one wave of ``par`` tasks and capped at
+# one task per (bucket, salt) pair. Measured crossover (one batch replayed into
+# 16 buckets at local[4], writer job median of 7, one task against four tasks
+# behind the exchange): 2k rows 0.079 vs 0.130 s, 4k 0.070 vs 0.110 s, 8k
+# 0.093 vs 0.108 s, 16k 0.139 vs 0.131 s, 32k 0.241 vs 0.159 s. One task wins
+# up to 8k rows and loses from 16k, so the bound sits at the crossover's low
+# side.
+#
+# As a per-task size the constant sits far below the ~33k-row break-even on
+# purpose, so large batches keep the full-width plan: 8192 = 2^13 is the
 # largest power of two under the per-task rows of the measured bulk plans
 # (150k-event slices over 16 buckets: 9.4k; 2M-event slices over 32
 # buckets: 62k).
@@ -76,19 +87,44 @@ ROWS_PER_TASK = 8192
 
 
 def exchange_width(par: int, nb: int, rows: int | None) -> int:
-    """Partition count of the ``(bucket, salt)`` layout exchange.
+    """Task count of a batch's writer stage over ``nb`` buckets at session
+    width ``par``.
 
-    The full width is ``nb * max(1, par // nb)``: one partition per
-    (bucket, salt) pair. With a known ``rows`` the width is what the batch
-    fills at ``ROWS_PER_TASK`` rows a task, raised to one wave of ``par``
-    tasks and capped at the full width; ``rows=None`` (size unknown) keeps
-    the full width. Hash partitioning on (bucket, salt) still sends each
-    pair to exactly one task, so the write makes the same files at any
-    width."""
+    ``rows`` at most ``ROWS_PER_TASK``: 1, one task and no exchange (see
+    :meth:`LakeTable._layout`). Larger ``rows``: the width the batch fills at
+    ``ROWS_PER_TASK`` rows a task, raised to one wave of ``par`` tasks and
+    capped at the full width ``nb * max(1, par // nb)``, one partition per
+    (bucket, salt) pair. ``rows=None`` (size unknown) keeps the full width.
+    Hash partitioning on (bucket, salt) sends each pair to exactly one task,
+    so the write makes the same files at any width."""
     full = max(nb * max(1, par // nb), 1)
     if rows is None:
         return full
+    if rows <= ROWS_PER_TASK:
+        return 1
     return min(full, max(par, -(-rows // ROWS_PER_TASK)))
+
+
+# zstd level of the engine's pyarrow-written data files: parquet-mr's
+# default, the level Spark's writer used for them (at pyarrow's default, 1,
+# they were 8% larger)
+ZSTD_LEVEL = 3
+
+
+def parquet_options(schema: "pa.Schema", key: str, codec: str) -> dict:
+    """``pq.ParquetWriter`` options of a data file with ``schema``: the
+    table's codec (zstd at ``ZSTD_LEVEL``), and min/max statistics only
+    where a reader prunes on them: the key (lookup's IN pushdown), the ts
+    (skipping's footer stats) and the other non-string/binary columns. Wide
+    string/binary payload (html, text) min/max cost ~8% of a 250-row tail
+    file's bytes at zstd level 3."""
+    return {
+        "compression": codec,
+        "compression_level": ZSTD_LEVEL if codec == "zstd" else None,
+        "write_statistics": [
+            f.name for f in schema if f.name == key
+            or not (pa.types.is_string(f.type) or pa.types.is_binary(f.type))],
+    }
 
 
 # XXH64 primes and the seed Spark's ``xxhash64`` uses (XxHash64 expression)
@@ -1095,11 +1131,16 @@ class LakeTable:
         bucket (without it every upstream task spills a file into every
         bucket dir it saw). The MOR merge and the CDC replayer's writer
         stage both write behind it. ``rows``, the batch's row count when the
-        caller knows it, sizes the exchange (see :func:`exchange_width`)."""
+        caller knows it, sizes the exchange (see :func:`exchange_width`); at
+        width 1 the frame is ``coalesce(1)``-ed instead: one task, no
+        shuffle, the same one file per touched bucket."""
         par = self.spark.sparkContext.defaultParallelism
+        width = exchange_width(par, nb, rows)
+        if width == 1:
+            return s.coalesce(1)
         write_salt = max(1, par // nb)
         return s.repartition(
-            exchange_width(par, nb, rows),
+            width,
             F.col(SYS_BUCKET),
             F.pmod(F.xxhash64(F.col(key)), F.lit(write_salt)),
         )
@@ -1441,7 +1482,7 @@ class LakeTable:
                                     outs.append([name, 0, TsRange()])
                                     writer = pq.ParquetWriter(
                                         os.path.join(d, name), target,
-                                        compression=codec,
+                                        **parquet_options(target, key, codec),
                                     )
                                 room = per - (written % per) if per else len(t)
                                 chunk = t.slice(pos, room)

@@ -8,10 +8,12 @@ import os
 from collections import Counter
 from types import SimpleNamespace
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
 from datax_3_0_0_src_spark.cdc.gen import write_event_log
+from datax_3_0_0_src_spark.cdc.oracle import gen_events_pdf, validate_pd
 from datax_3_0_0_src_spark.cdc.replayer import SPLIT_CONF, ReplayConfig, Replayer
 from datax_3_0_0_src_spark.lake.table import ROWS_PER_TASK, exchange_width
 
@@ -23,10 +25,13 @@ NB = 8
 
 # ------------------------------------------------------------- pure rules
 def test_exchange_width_rule():
-    assert exchange_width(4, 16, 4_000) == 4
+    # a batch one task can carry is not split: one task, no exchange
+    assert exchange_width(4, 16, 4_000) == 1
+    assert exchange_width(4, 16, 0) == 1
+    assert exchange_width(4, 16, ROWS_PER_TASK) == 1
+    assert exchange_width(4, 16, ROWS_PER_TASK + 1) == 4
     assert exchange_width(4, 16, 150_000) == 16
     assert exchange_width(4, 16, None) == 16
-    assert exchange_width(4, 16, 0) == 4
     assert exchange_width(4, 16, 8 * ROWS_PER_TASK) == 8
     assert exchange_width(4, 16, 8 * ROWS_PER_TASK + 1) == 9
     # the measured bulk plans keep their full width
@@ -39,7 +44,10 @@ def test_exchange_width_rule():
             for rows in (0, 1, 1_000, 4_000, 100_000, 10**7):
                 w = exchange_width(par, nb, rows)
                 assert 1 <= w <= today, (par, nb, rows, w)
-                assert w >= min(par, today), (par, nb, rows, w)
+                if rows <= ROWS_PER_TASK:
+                    assert w == 1, (par, nb, rows, w)
+                else:
+                    assert w >= min(par, today), (par, nb, rows, w)
 
 
 def _split_target(sizes, cap, par):
@@ -79,24 +87,24 @@ def _foreign_wal(src: str, dst: str) -> None:
                 pq.write_table(t, os.path.join(dst, d, f), write_statistics=False)
 
 
-def _replay_counting_tasks(spark, rep: Replayer, group: str) -> list[int]:
-    """run() under a job group; the task count of every stage the run
-    submitted (the batch threads inherit the caller's group)."""
+def _replay_counting_tasks(spark, rep: Replayer, group: str,
+                           **run_kw) -> tuple[list[int], list[list[int]]]:
+    """run(**run_kw) under a job group; the task count of every stage the
+    run submitted, and per job (in submission order) its stages' task counts
+    (the batch threads inherit the caller's group)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        rep.run()
+        rep.run(**run_kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     st = sc.statusTracker()
-    tasks = []
-    for j in st.getJobIdsForGroup(group):
-        for s in st.getJobInfo(j).stageIds:
-            info = st.getStageInfo(s)
-            if info is not None:
-                tasks.append(info.numTasks)
-    return tasks
+    jobs = []
+    for j in sorted(st.getJobIdsForGroup(group)):
+        infos = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+        jobs.append([i.numTasks for i in infos if i is not None])
+    return [n for job in jobs for n in job], jobs
 
 
 def _assert_one_delta_per_bucket_per_batch(rep: Replayer, n_batches: int):
@@ -115,7 +123,7 @@ def test_small_batches_run_one_wave(spark, tmp_path, cap):
         table_path=str(tmp_path / "pages"), num_buckets=NB,
         max_events_per_batch=cap, max_concurrent_batches=1))
     par = spark.sparkContext.defaultParallelism
-    tasks = _replay_counting_tasks(spark, rep, f"sizing-{tmp_path.name}")
+    tasks, _jobs = _replay_counting_tasks(spark, rep, f"sizing-{tmp_path.name}")
     assert_state_matches(rep, CFG)
     assert [tl["exchange_parts"] for tl in rep.batch_timelines] == [
         exchange_width(par, NB, CFG.events_per_epoch)] * 3
@@ -124,7 +132,9 @@ def test_small_batches_run_one_wave(spark, tmp_path, cap):
     _assert_one_delta_per_bucket_per_batch(rep, 3)
 
 
-def test_wal_without_offset_stats_keeps_full_width(spark, tmp_path):
+def test_wal_without_offset_stats_keeps_full_width(spark, tmp_path, monkeypatch):
+    from datax_3_0_0_src_spark.cdc import replayer as rp
+
     src, log_dir = str(tmp_path / "wal"), str(tmp_path / "foreign")
     write_event_log(spark, CFG, src, slices=4)
     _foreign_wal(src, log_dir)
@@ -132,14 +142,54 @@ def test_wal_without_offset_stats_keeps_full_width(spark, tmp_path):
         log_dir=log_dir, work_dir=str(tmp_path / "work"),
         table_path=str(tmp_path / "pages"), num_buckets=NB,
         max_events_per_batch=None, max_concurrent_batches=1))
+    per_task, real = [], rp.summarize
+
+    def spy(rows):  # each batch's per-task event counts
+        per_task.append([r["events_read"] for r in rows if r["path"] is None])
+        return real(rows)
+
+    monkeypatch.setattr(rp, "summarize", spy)
     par = spark.sparkContext.defaultParallelism
-    tasks = _replay_counting_tasks(spark, rep, f"sizing-{tmp_path.name}")
+    tasks, _jobs = _replay_counting_tasks(spark, rep, f"sizing-{tmp_path.name}")
     assert rep._epoch_stats_from_footers(0) is None
     assert_state_matches(rep, CFG)
     full = exchange_width(par, NB, None)
     assert [tl["exchange_parts"] for tl in rep.batch_timelines] == [full] * 3
     assert max(tasks) == full
     _assert_one_delta_per_bucket_per_batch(rep, 3)
+    # writer-task balance: one counts row per task of the full-width stage
+    assert [tl["writer_tasks"] for tl in rep.batch_timelines] == [full] * 3
+    assert [sum(n) for n in per_task] == [CFG.events_per_epoch] * 3
+    assert [(tl["empty_writer_tasks"], tl["max_task_events"])
+            for tl in rep.batch_timelines] == [
+        (n.count(0), max(n)) for n in per_task]
+
+
+def test_small_epoch_per_run_is_one_task_in_one_job(spark, tmp_path):
+    """A tail: one small epoch per run(). Its batch is one writer job of one
+    task (no shuffle-map job, no exchange), beside at most the epoch's
+    schema-inference job, and still makes one delta file per touched bucket
+    with the oracle's state and quarantine."""
+    log_dir = str(tmp_path / "wal")
+    write_event_log(spark, CFG, log_dir, slices=4)
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, work_dir=str(tmp_path / "work"),
+        table_path=str(tmp_path / "pages"), num_buckets=NB,
+        max_events_per_batch=None, max_concurrent_batches=1))
+    n_epochs = CFG.n_epochs
+    for e in range(n_epochs):
+        _tasks, jobs = _replay_counting_tasks(
+            spark, rep, f"tail-{tmp_path.name}-{e}", stop_after_batches=1)
+        # the writer job last, the schema-inference job (if any) before it
+        assert 1 <= len(jobs) <= 2 and all(j == [1] for j in jobs), jobs
+    assert len(rep.batch_timelines) == n_epochs
+    assert [(tl["exchange_parts"], tl["writer_tasks"], tl["empty_writer_tasks"],
+             tl["max_task_events"]) for tl in rep.batch_timelines] == [
+        (1, 1, 0, CFG.events_per_epoch)] * n_epochs
+    assert_state_matches(rep, CFG)
+    _assert_one_delta_per_bucket_per_batch(rep, n_epochs)
+    ev = gen_events_pdf(CFG, np.arange(CFG.n_events))
+    assert rep.quarantine().count() == int((~validate_pd(ev)).sum())
 
 
 def test_pool_jobs_carry_the_callers_job_group(spark, tmp_path):

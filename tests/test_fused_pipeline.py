@@ -120,10 +120,32 @@ def test_fused_resume_and_idempotent_rerun(spark, log_and_work):
     assert rep3.table.snapshot().version == v
 
 
+def _low_rows_per_task(monkeypatch):
+    """Size the test's small batches like large ones: the layout exchange
+    at more than one task (the default sends a 1k-event batch to one; at
+    the session width 4 and 8 buckets, 500 rows make 5 tasks, 1000 make 8)."""
+    from datax_3_0_0_src_spark.lake import table as lake_table
+
+    monkeypatch.setattr(lake_table, "ROWS_PER_TASK", 100)
+
+
 def test_fused_with_per_batch_dedup(spark, log_and_work):
     """Per-batch dedup, plain and salted, runs through the same writer
     stage: every count is exact — events read, quarantined, and deduped =
-    the valid events of a batch beyond its distinct keys."""
+    the valid events of a batch beyond its distinct keys. A 1k-event batch
+    is one writer task."""
+    _check_per_batch_dedup(spark, log_and_work, parts=1)
+
+
+def test_fused_with_per_batch_dedup_behind_the_exchange(
+        spark, log_and_work, monkeypatch):
+    """The same counts when the batch's writer stage runs behind the
+    layout exchange."""
+    _low_rows_per_task(monkeypatch)
+    _check_per_batch_dedup(spark, log_and_work, parts=8)
+
+
+def _check_per_batch_dedup(spark, log_and_work, *, parts):
     log_dir, work, table = log_and_work
     ev = gen_events_pdf(CFG, np.arange(CFG.n_events))
     valid = validate_pd(ev)
@@ -145,31 +167,48 @@ def test_fused_with_per_batch_dedup(spark, log_and_work):
         assert m["events_deduped"].sum() == sum(r.events_deduped for r in results)
         assert m["bytes_in"].sum() == sum(
             len(h) for h in ev["html"] if h is not None)
+        assert {tl["exchange_parts"] for tl in rep.batch_timelines} == {parts}
 
 
 def test_fused_single_python_eval_in_plan(spark, log_and_work):
     """A batch's plan is ONE Python node (the writer stage's MapInArrow, no
-    Arrow/batch eval UDF) behind ONE exchange (the bucket layout): every row
-    crosses into Python once, and the quarantine side-write happens once."""
+    Arrow/batch eval UDF) behind at most ONE exchange (the bucket layout;
+    none for a batch that fits one task): every row crosses into Python
+    once, and the quarantine side-write happens once."""
     log_dir, work, table = log_and_work
     for dedup in (False, True):
         rep = make(spark, log_dir, work, f"{table}-{dedup}", dedup_per_batch=dedup)
-        stage, _ = rep._writer_stage(
-            rep.read_epoch(0).drop("epoch"), epoch=0,
-            slice_dir=work + "/probe", rows=None, tl={})
-        plan = stage._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInArrow") == 1, plan
-        assert "EvalPython" not in plan, plan
-        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-        # per-batch dedup adds its aggregation's key exchange
-        assert len(exchanges) == (2 if dedup else 1), plan
+        # rows=None: full width; 1000 rows fit one task, which needs no
+        # layout exchange
+        for rows, layout in ((None, 1), (1_000, 0)):
+            stage, _ = rep._writer_stage(
+                rep.read_epoch(0).drop("epoch"), epoch=0,
+                slice_dir=work + "/probe", rows=rows, tl={})
+            plan = stage._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("MapInArrow") == 1, plan
+            assert "EvalPython" not in plan, plan
+            exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+            # per-batch dedup adds its aggregation's key exchange
+            assert len(exchanges) == layout + dedup, plan
 
 
 def test_committed_deltas_are_exactly_the_returned_files(
         spark, log_and_work, monkeypatch):
     """The commit layers exactly the files the writer stage's collected rows
     name — no listing — with their returned ts ranges as the stats sidecar
-    (equal to the footers), and lookup() and changes() see them."""
+    (equal to the footers), and lookup() and changes() see them. A
+    500-event batch is one writer task."""
+    _check_committed_deltas(spark, log_and_work, monkeypatch, parts=1)
+
+
+def test_committed_deltas_behind_the_exchange(spark, log_and_work, monkeypatch):
+    """The same commit of exactly the returned files when the batch's writer
+    stage runs behind the layout exchange."""
+    _low_rows_per_task(monkeypatch)
+    _check_committed_deltas(spark, log_and_work, monkeypatch, parts=5)
+
+
+def _check_committed_deltas(spark, log_and_work, monkeypatch, *, parts):
     from datax_3_0_0_src_spark.cdc import replayer as rp
     from datax_3_0_0_src_spark.lake import skipping
 
@@ -201,6 +240,7 @@ def test_committed_deltas_are_exactly_the_returned_files(
     ch = rep.table.changes(0).toPandas()
     assert len(ch) == sum(r.events_applied for r in results)
     assert set(ch["_commit_version"]) == {r.snapshot_version for r in results}
+    assert {tl["exchange_parts"] for tl in rep.batch_timelines} == {parts}
 
 
 def test_writer_task_failure_commits_no_duplicate(spark, log_and_work, monkeypatch):

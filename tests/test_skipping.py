@@ -275,3 +275,29 @@ def test_rewrite_fold_stats_equal_footers(spark, tmp_table_dir):
     for f in files:
         _n, lo, hi = footer_stats(os.path.join(tmp_table_dir, f), "warc_ts")
         assert lo is not None and stats[f] == [lo, hi], f
+
+
+def test_rewrite_fold_stats_only_on_pruned_columns(spark, tmp_table_dir):
+    """The rewrite fold writes with the replay's delta-writer options
+    (``lake.table.parquet_options``): min/max statistics on the key and the
+    ts, which lookups and skipping prune on, none on the wide html/text
+    payload."""
+    import pyarrow.parquet as pq
+
+    t = _fill(spark, make_table(spark, tmp_table_dir))
+    t.compact(strategy="local", target_files_per_bucket=2)
+    files = t.snapshot().all_files()
+    assert files
+    for f in files:
+        md = pq.ParquetFile(os.path.join(tmp_table_dir, f)).metadata
+        assert md.num_row_groups
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            cols = {rg.column(i).path_in_schema: rg.column(i)
+                    for i in range(rg.num_columns)}
+            assert {c.compression for c in cols.values()} == {"ZSTD"}, f
+            for name in ("url", "warc_ts"):
+                assert cols[name].is_stats_set, (f, name)
+                assert cols[name].statistics.has_min_max, (f, name)
+            for name in ("html", "text"):
+                assert not cols[name].is_stats_set, (f, name)
