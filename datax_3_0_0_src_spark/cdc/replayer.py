@@ -43,10 +43,12 @@ import re
 import threading
 import uuid
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StringType, StructField, StructType,
+)
 
 from ..lake.manifest import _atomic_write
 from ..lake.table import SYS_BUCKET, LakeTable, exchange_width
@@ -183,6 +185,99 @@ class BatchResult:
     duration_s: float
 
 
+@dataclass(frozen=True)
+class EpochFooters:
+    """One WAL epoch as its parquet footers describe it, from one
+    driver-side pass (``Replayer._epoch_footers``).
+
+    ``ranges`` holds each file's (min, max) offset and ``rows`` the epoch's
+    row count; both are None when a footer lacks min/max statistics for the
+    offset column (a foreign writer). ``schema`` is the Spark schema a read
+    of the epoch dir infers, built from the footers (:func:`_footer_schema`);
+    None leaves it to Spark's inference: the files disagree, a column is
+    INT96, or an Arrow type has no exact Spark reading."""
+
+    files: tuple[str, ...]
+    nbytes: int
+    ranges: tuple[tuple[int, int], ...] | None
+    rows: int | None
+    schema: StructType | None
+
+
+# the footer key under which Spark's parquet writer stores the row schema as
+# JSON; Spark's reader prefers it to the parquet schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _offset_range(md, seq: str) -> tuple[int, int] | None:
+    """(min, max) of column ``seq`` over a footer's row groups; None when
+    the column is absent or a row group lacks min/max statistics."""
+    names = [md.schema.column(i).name for i in range(md.num_columns)]
+    if seq not in names:
+        return None
+    idx = names.index(seq)
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (int(lo), int(hi))
+
+
+def _exact_arrow_type(t) -> bool:
+    """Whether Spark's parquet reader types a column pyarrow wrote from
+    Arrow type ``t`` the way ``from_arrow_type`` converts ``t``. Not for a
+    zone-less timestamp (TIMESTAMP_NTZ or TIMESTAMP by session setting),
+    nanoseconds, unsigned or nested types."""
+    import pyarrow.types as T
+
+    if T.is_timestamp(t):
+        return t.tz is not None and t.unit != "ns"
+    return any(f(t) for f in (
+        T.is_boolean, T.is_signed_integer, T.is_float32, T.is_float64,
+        T.is_string, T.is_large_string, T.is_binary, T.is_large_binary,
+        T.is_date32, T.is_decimal128))
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every level nullable, as Spark's file sources read it."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _footer_schema(pf) -> StructType | None:
+    """The Spark schema a read of the parquet file ``pf`` infers, from its
+    footer alone: Spark's own schema JSON where a Spark writer left it (the
+    reader prefers it too), else the Arrow schema through
+    ``from_arrow_schema``. None for an INT96 column and for Arrow types that
+    conversion does not reproduce (:func:`_exact_arrow_type`)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    md = pf.metadata
+    if any(md.schema.column(i).physical_type == "INT96"
+           for i in range(md.num_columns)):
+        return None
+    spark_json = (md.metadata or {}).get(SPARK_SCHEMA_KEY)
+    try:
+        if spark_json is not None:
+            schema = StructType.fromJson(json.loads(spark_json))
+        elif all(_exact_arrow_type(f.type) for f in pf.schema_arrow):
+            schema = from_arrow_schema(pf.schema_arrow)
+        else:
+            return None
+    except (ValueError, KeyError, TypeError):
+        return None
+    return _nullable(schema)
+
+
 class Replayer:
     def __init__(self, spark: SparkSession, cfg: ReplayConfig):
         self.spark = spark
@@ -190,25 +285,14 @@ class Replayer:
         # per-batch phase timelines (and writer-task counts): reviewable
         # serial breakdown, surfaced by bench.py into the artifact
         self.batch_timelines: list[dict] = []
-        # per-epoch DataFrame memo: WAL epoch dirs are immutable once logged
-        # (segments roll to NEW epoch dirs), so the listing + footer schema
-        # inference resolved at spark.read.parquet() time stays valid for the
-        # Replayer's lifetime. Without this, every offset-slice batch of the
-        # same epoch re-runs the discovery, and its schema inference is a
-        # SPARK JOB (one task; past the 1024-file parallel-discovery
-        # threshold the listing is one more) which queues behind
-        # executor-saturating write jobs (profiled: 1.2s -> 10s per batch as
-        # the pipeline saturates; 26s of a 70s 8-core wall).
-        self._epoch_df_cache: dict[int, DataFrame] = {}
-        # per-epoch [(file, min_offset, max_offset)] from the footer pass —
-        # drives per-slice FILE pruning (_slice_df). Written once per epoch
-        # by plan_batches or _tune_scan_splits, before the batch pool starts.
-        self._epoch_file_stats: dict[int, list[tuple[str, int, int]]] = {}
-        # per-epoch (min_offset, max_offset, rows) from the same footer pass,
-        # None when the footers lack offset stats: plan_batches, the split
-        # tuning and the exchange sizing all reuse one pass per epoch
-        self._epoch_stats: dict[int, tuple[int, int, int] | None] = {}
-        self._epoch_cache_lock = threading.Lock()
+        # per-epoch footer record (EpochFooters): WAL epoch dirs are
+        # immutable once logged (segments roll to NEW epoch dirs), so one
+        # footer pass per epoch serves the Replayer's lifetime: plan_batches,
+        # the split tuning, the exchange sizing, slice file pruning and
+        # read_epoch's schema all read it. Filled before the batch pool
+        # starts (plan_batches, _tune_scan_splits, the run() pre-warm).
+        self._epochs: dict[int, EpochFooters] = {}
+        self._epoch_lock = threading.Lock()
         # (epoch, sub) pairs whose checkpoint file is durable: filled from one
         # checkpoint-dir read per run (last_committed_batch), then extended by
         # _write_checkpoint, so a commit prunes its committed:* keys without
@@ -270,18 +354,20 @@ class Replayer:
                 plan.append((bid, e, 0, None, None))
                 bid += 1
                 continue
-            stats = self._epoch_stats_from_footers(e)
-            if stats is None:
+            meta = self._epoch_footers(e)
+            if meta is None or meta.ranges is None:
                 # footers lack min/max stats for the offset column (foreign
-                # writer): one tiny Spark agg job as the fallback
-                df = self.spark.read.parquet(self._epoch_path(e))
-                row = df.agg(
+                # writer): a tiny Spark aggregation as the fallback, over the
+                # epoch read with the schema its footers still give
+                row = self.read_epoch(e).agg(
                     F.min(seq).alias("lo"), F.max(seq).alias("hi"),
                     F.count(F.lit(1)).alias("n"),
                 ).collect()[0]
                 lo, hi, n = row["lo"], row["hi"], int(row["n"])
             else:
-                lo, hi, n = stats
+                lo = min(flo for flo, _ in meta.ranges)
+                hi = max(fhi for _, fhi in meta.ranges)
+                n = meta.rows
             if n == 0:
                 plan.append((bid, e, 0, None, None))
                 bid += 1
@@ -302,8 +388,8 @@ class Replayer:
                 # nature, and the sketch keeps each slice within ~0.1% of cap.
                 subs = -(-n // cap)
                 probs = [s_ / subs for s_ in range(1, subs)]
-                df = self.spark.read.parquet(self._epoch_path(e))
-                qs = df.stat.approxQuantile(seq, probs, 0.001) if probs else []
+                qs = (self.read_epoch(e).stat.approxQuantile(seq, probs, 0.001)
+                      if probs else [])
                 inner = sorted({int(q) for q in qs if lo < int(q) <= hi})
                 bounds = [lo] + inner + [hi + 1]
             for s in range(len(bounds) - 1):
@@ -314,94 +400,74 @@ class Replayer:
     def _epoch_path(self, epoch: int) -> str:
         return os.path.join(self.cfg.log_dir, f"epoch={epoch}")
 
-    def _epoch_stats_from_footers(self, epoch: int) -> tuple[int, int, int] | None:
-        """(min_offset, max_offset, row_count) for an epoch from its parquet
-        FOOTERS — driver-side metadata reads, no Spark job. The offset column's
-        per-row-group min/max statistics are written by every standard parquet
-        writer (incl. this engine's WAL writer); None when any footer lacks
-        them (foreign writer) and the caller falls back to a Spark agg.
+    def _epoch_footers(self, epoch: int) -> EpochFooters | None:
+        """The epoch's :class:`EpochFooters` from ONE pass over its parquet
+        footers: driver-side metadata reads, no Spark job. None for a
+        missing or empty epoch dir (not memoized).
 
         Scale note: this is O(files) driver-side metadata, same order as the
         split planning Spark itself must do to scan the epoch; at 10^8-event
         epochs the WAL segment count stays in the hundreds (writers roll
-        segments by size), so plan time stays sub-second where the agg-job
-        path paid a full scheduler round trip per epoch.
+        segments by size), so plan time stays sub-second where an agg job
+        paid a full scheduler round trip per epoch.
 
-        Memoized per epoch (epoch dirs are immutable once logged); a missing
-        or empty dir is not memoized."""
+        Memoized per epoch (epoch dirs are immutable once logged)."""
         import pyarrow.parquet as pq
 
-        if epoch in self._epoch_stats:
-            return self._epoch_stats[epoch]
+        meta = self._epochs.get(epoch)
+        if meta is not None:
+            return meta
         p = self._epoch_path(epoch)
-        seq = self.cfg.seq_col
-        lo = hi = None
-        n = 0
-        fstats: list[tuple[str, int, int]] = []
         try:
-            files = [f for f in sorted(os.listdir(p)) if f.endswith(".parquet")]
+            entries = sorted((f.path, f.stat().st_size) for f in os.scandir(p)
+                             if f.name.endswith(".parquet"))
         except OSError:
             return None
-        if not files:
+        if not entries:
             return None
+        seq = self.cfg.seq_col
 
-        def file_stats(fn: str) -> tuple[str, int, int, int] | None:
-            md = pq.ParquetFile(os.path.join(p, fn)).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            try:
-                idx = names.index(seq)
-            except ValueError:
-                return None
-            flo = fhi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                flo = st.min if flo is None else min(flo, st.min)
-                fhi = st.max if fhi is None else max(fhi, st.max)
-            if flo is None:
-                return None
-            return os.path.join(p, fn), int(flo), int(fhi), int(md.num_rows)
+        def read(path: str):
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+                return _offset_range(md, seq), md.num_rows, _footer_schema(pf)
 
         # footer opens are tiny I/O-bound metadata reads but they add up
         # SERIALLY at plan time (hundreds of files x row groups, before any
         # executor can work) — a small thread pool cuts this serial floor
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(8, len(files))) as pool:
-            per_file = list(pool.map(file_stats, files))
-        if any(fs is None for fs in per_file):
-            self._epoch_stats[epoch] = None
-            return None
-        for fs in per_file:
-            path, flo, fhi, rows = fs
-            n += rows
-            fstats.append((path, flo, fhi))
-            lo = flo if lo is None else min(lo, flo)
-            hi = fhi if hi is None else max(hi, fhi)
-        # per-file offset ranges for slice-level FILE pruning (complete sets
-        # only): a rate-capped slice touches slice/epoch of the files; a
-        # per-batch scan built from just those files schedules zero no-op
-        # splits (the whole-epoch DF would dispatch epoch/slice times more
-        # tasks per job once splits are slice-sized — pure scheduler tax)
-        self._epoch_file_stats[epoch] = fstats
-        self._epoch_stats[epoch] = (int(lo), int(hi), int(n))
-        return self._epoch_stats[epoch]
+        with ThreadPoolExecutor(max_workers=min(8, len(entries))) as pool:
+            per_file = list(pool.map(read, [f for f, _ in entries]))
+        ranges = [r for r, _, _ in per_file]
+        schemas = [sc for _, _, sc in per_file]
+        known = all(r is not None for r in ranges)
+        meta = EpochFooters(
+            files=tuple(f for f, _ in entries),
+            nbytes=sum(n for _, n in entries),
+            ranges=tuple(ranges) if known else None,
+            rows=sum(n for _, n, _ in per_file) if known else None,
+            # files that disagree leave the choice to Spark's inference
+            schema=schemas[0] if all(sc == schemas[0] for sc in schemas) else None,
+        )
+        with self._epoch_lock:
+            return self._epochs.setdefault(epoch, meta)
 
     def _slice_df(self, epoch: int, lo: int, hi: int) -> DataFrame | None:
         """A DataFrame over ONLY the epoch files whose offset range overlaps
-        [lo, hi) — driver-side file pruning from the footer stats gathered at
-        plan time. None when stats are unavailable (foreign writer) — the
-        caller falls back to the whole-epoch DF + predicate. Uses the
-        memoized epoch DF's schema: no listing job, no footer re-inference."""
-        fstats = self._epoch_file_stats.get(epoch)
-        if not fstats:
+        [lo, hi) — driver-side file pruning from the footer ranges gathered
+        at plan time: a rate-capped slice touches slice/epoch of the files,
+        so its scan schedules no no-op splits. None when the ranges are
+        unavailable (foreign writer) — the caller falls back to the
+        whole-epoch DF + predicate."""
+        meta = self._epoch_footers(epoch)
+        if meta is None or meta.ranges is None:
             return None
-        files = [p for p, flo, fhi in fstats if fhi >= lo and flo < hi]
+        files = [f for f, (flo, fhi) in zip(meta.files, meta.ranges)
+                 if fhi >= lo and flo < hi]
         if not files:
             return None
-        schema = self.read_epoch(epoch).drop("epoch").schema
-        return self.spark.read.schema(schema).parquet(*files)
+        return self.spark.read.schema(self._epoch_schema(epoch)).parquet(*files)
 
     def _split_target(self, sizes: list[tuple[int, int | None]]) -> int | None:
         """maxPartitionBytes for this run's scans, from (bytes, rows) per
@@ -431,46 +497,38 @@ class Replayer:
             slice_b = min(slice_b, int(cap * (tot_b / tot_r)))
         return min(max(slice_b // par, 4 << 20), 128 << 20)
 
-    def _epoch_bytes_rows(self, epoch: int) -> tuple[int, int | None] | None:
-        """(total bytes, total rows) of an epoch dir — driver-side metadata.
-        Row counts ride the memoized footer pass (None without offset
-        stats)."""
-        p = self._epoch_path(epoch)
-        try:
-            size = sum(
-                os.path.getsize(os.path.join(p, f))
-                for f in os.listdir(p) if f.endswith(".parquet")
-            )
-        except OSError:
-            return None
-        stats = self._epoch_stats_from_footers(epoch)
-        return size, (stats[2] if stats else None)
-
     def _tune_scan_splits(self, epochs: list[int]) -> None:
         """Size parquet splits once per entry point so each rate-capped slice
         of these epochs scans ~par-wide (see _split_target); the entry point
         restores the caller's value (_split_conf_scoped). Driver-side
-        metadata only."""
-        sizes = [br for e in set(epochs)
-                 if (br := self._epoch_bytes_rows(e)) is not None]
-        target = self._split_target(sizes)
+        metadata only: the epochs' footer records."""
+        metas = [m for e in set(epochs) if (m := self._epoch_footers(e))]
+        target = self._split_target([(m.nbytes, m.rows) for m in metas])
         if target:
             self.spark.conf.set(SPLIT_CONF, str(target))
 
-    def read_epoch(self, epoch: int) -> DataFrame:
-        """One WAL segment; its files' own schema (=> additive evolution
-        surfaces naturally when later segments carry new columns).
+    def _epoch_schema(self, epoch: int) -> StructType:
+        """The epoch's Spark schema: from its footer record, else (see
+        :class:`EpochFooters`) from Spark's schema inference — a one-task
+        Spark job, run once per epoch: its result is memoized in the
+        record."""
+        meta = self._epoch_footers(epoch)
+        if meta is not None and meta.schema is not None:
+            return meta.schema
+        schema = self.spark.read.parquet(self._epoch_path(epoch)).schema
+        if meta is not None:
+            with self._epoch_lock:
+                self._epochs[epoch] = replace(meta, schema=schema)
+        return schema
 
-        Memoized per epoch (see __init__): the file index + schema are
-        resolved once per epoch instead of once per offset-slice batch.
-        Safe because WAL epoch dirs are immutable once logged — requeue and
-        resume re-read the same frozen file set. Sets no session conf."""
-        with self._epoch_cache_lock:
-            df = self._epoch_df_cache.get(epoch)
-            if df is None:
-                df = self.spark.read.parquet(self._epoch_path(epoch))
-                self._epoch_df_cache[epoch] = df
-        return df.withColumn("epoch", F.lit(epoch))
+    def read_epoch(self, epoch: int) -> DataFrame:
+        """One WAL epoch's rows under its files' own schema (=> additive
+        evolution surfaces naturally when later segments carry new columns).
+
+        The schema comes from the memoized footer record, so building the
+        frame submits no Spark job. Sets no session conf."""
+        return self.spark.read.schema(self._epoch_schema(epoch)).parquet(
+            self._epoch_path(epoch))
 
     # ---------------------------------------------------------- checkpoints
     def _ckpt_path(self, epoch: int, sub: int) -> str:
@@ -613,13 +671,13 @@ class Replayer:
         if stop_after_batches is not None:
             pending = pending[:stop_after_batches]
         self._tune_scan_splits([p[1] for p in pending])
-        # pre-warm the epoch DataFrame memo while executors are IDLE: the
-        # first read of any epoch runs Spark's schema-inference job (one
-        # task; an epoch of more than 1024 files also a listing job), and
-        # submitted after the write pipeline fills it waits seconds in the
-        # scheduler queue (profiled) — here it runs on an empty cluster
+        # every pending epoch now has its footer record; resolve the schemas
+        # the footers do not give (EpochFooters.schema) while executors are
+        # IDLE: Spark's inference job for them, submitted after the write
+        # pipeline fills the executors, waits seconds in the scheduler queue
+        # (profiled). An epoch whose footers give the schema submits nothing.
         for e in dict.fromkeys(p[1] for p in pending):
-            self.read_epoch(e)
+            self._epoch_schema(e)
 
         def carry(fn):
             # pool threads run their Spark jobs under the caller's local
@@ -728,13 +786,13 @@ class Replayer:
             # ranges overlap at boundaries); falls back to the epoch DF
             ev = self._slice_df(epoch, lo, hi)
             if ev is None:
-                ev = self.read_epoch(epoch).drop("epoch")
+                ev = self.read_epoch(epoch)
             ev = ev.filter((F.col(cfg.seq_col) >= lo) & (F.col(cfg.seq_col) < hi))
             rows = hi - lo
         else:
-            ev = self.read_epoch(epoch).drop("epoch")
-            stats = self._epoch_stats_from_footers(epoch)
-            rows = stats[2] if stats else None
+            ev = self.read_epoch(epoch)
+            meta = self._epoch_footers(epoch)
+            rows = meta.rows if meta else None
         tl["read_epoch_s"] = time.monotonic() - t0
         out = self._apply(
             ev, epoch=epoch, slice_name=f"{epoch}-{sub}", ckpt_epoch=batch_id,
@@ -1075,7 +1133,7 @@ class Replayer:
                         & (F.col("epoch") == epoch))
                 .select(F.col("log_offset").alias("_rq_off")).distinct()
             )
-            ev = self.read_epoch(epoch).drop("epoch").join(
+            ev = self.read_epoch(epoch).join(
                 offs, F.col(cfg.seq_col) == F.col("_rq_off"), "leftsemi")
             out = self._apply(
                 ev, epoch=epoch, slice_name=f"{epoch}-rq{gen}", ckpt_epoch=-gen,

@@ -95,14 +95,25 @@ def exchange_width(par: int, nb: int, rows: int | None) -> int:
     ``ROWS_PER_TASK`` rows a task, raised to one wave of ``par`` tasks and
     capped at the full width ``nb * max(1, par // nb)``, one partition per
     (bucket, salt) pair. ``rows=None`` (size unknown) keeps the full width.
-    Hash partitioning on (bucket, salt) sends each pair to exactly one task,
-    so the write makes the same files at any width."""
+    The layout numbers the pairs and sends each to exactly one task
+    (:func:`_pair_task`), so the write makes the same files at any width."""
     full = max(nb * max(1, par // nb), 1)
     if rows is None:
         return full
     if rows <= ROWS_PER_TASK:
         return 1
     return min(full, max(par, -(-rows // ROWS_PER_TASK)))
+
+
+def _pair_task(bucket, key, salt: int, width: int):
+    """The writer task, of ``width``, of a row's (bucket, salt) pair for
+    ``repartitionById``: pair ``bucket * salt + pmod(xxhash64(key), salt)``
+    modulo ``width``. At the full width ``nb * salt`` pairs and tasks map one
+    to one; hashing the pair instead (``repartition(width, bucket, salt)``)
+    collided and left tasks empty. The outer pmod keeps the null-key bucket
+    -1 in range."""
+    pair = bucket * F.lit(salt) + F.pmod(F.xxhash64(key), F.lit(salt))
+    return F.pmod(pair, F.lit(width)).cast("int")
 
 
 # zstd level of the engine's pyarrow-written data files: parquet-mr's
@@ -1126,11 +1137,11 @@ class LakeTable:
 
     def _layout(self, s: DataFrame, key: str, nb: int,
                 rows: int | None = None) -> DataFrame:
-        """The controlled-file-layout exchange: hash-partition on
-        ``(bucket, salt)`` so a write makes ~write_salt files per touched
-        bucket (without it every upstream task spills a file into every
-        bucket dir it saw). The MOR merge and the CDC replayer's writer
-        stage both write behind it. ``rows``, the batch's row count when the
+        """The controlled-file-layout exchange: partition on the
+        ``(bucket, salt)`` pair (:func:`_pair_task`) so a write makes
+        ~write_salt files per touched bucket (without it every upstream task
+        spills a file into every bucket dir it saw). The MOR merge and the
+        CDC replayer's writer stage both write behind it. ``rows``, the batch's row count when the
         caller knows it, sizes the exchange (see :func:`exchange_width`); at
         width 1 the frame is ``coalesce(1)``-ed instead: one task, no
         shuffle, the same one file per touched bucket."""
@@ -1138,12 +1149,8 @@ class LakeTable:
         width = exchange_width(par, nb, rows)
         if width == 1:
             return s.coalesce(1)
-        write_salt = max(1, par // nb)
-        return s.repartition(
-            width,
-            F.col(SYS_BUCKET),
-            F.pmod(F.xxhash64(F.col(key)), F.lit(write_salt)),
-        )
+        return s.repartitionById(
+            width, _pair_task(F.col(SYS_BUCKET), F.col(key), max(1, par // nb), width))
 
     def _merge_mor(
         self,
@@ -1786,13 +1793,9 @@ class LakeTable:
             SYS_BUCKET,
             F.pmod(F.xxhash64(F.col(key)), F.lit(new_num_buckets)).cast("int"),
         )
-        salt = (
-            F.pmod(F.xxhash64(F.col(key)), F.lit(n_out))
-            if n_out > 1 else F.lit(0)
-        )
-        df = df.withColumn("_salt", salt).repartition(
-            new_num_buckets * n_out, F.col(SYS_BUCKET), F.col("_salt")
-        ).drop("_salt")
+        width = new_num_buckets * n_out
+        df = df.repartitionById(
+            width, _pair_task(F.col(SYS_BUCKET), F.col(key), n_out, width))
         rel_dir = f"data/r{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
         out_dir = os.path.join(self.path, rel_dir)
         df.write.option("compression", self.compression).mode(

@@ -1,6 +1,6 @@
-"""Per-batch sizing of the replay's layout exchange, the memoized footer pass,
-the scan-split estimate, and the session conf staying untouched by runs and
-reads."""
+"""Per-batch sizing of the replay's layout exchange, the memoized footer pass
+and the epoch schema it carries, the scan-split estimate, and the session conf
+staying untouched by runs and reads."""
 
 from __future__ import annotations
 
@@ -9,10 +9,13 @@ from collections import Counter
 from types import SimpleNamespace
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from datax_3_0_0_src_spark.cdc.gen import write_event_log
+from datax_3_0_0_src_spark.cdc.gen import EventGenConfig, write_event_log
 from datax_3_0_0_src_spark.cdc.oracle import gen_events_pdf, validate_pd
 from datax_3_0_0_src_spark.cdc.replayer import SPLIT_CONF, ReplayConfig, Replayer
 from datax_3_0_0_src_spark.lake.table import ROWS_PER_TASK, exchange_width
@@ -87,15 +90,33 @@ def _foreign_wal(src: str, dst: str) -> None:
                 pq.write_table(t, os.path.join(dst, d, f), write_statistics=False)
 
 
-def _replay_counting_tasks(spark, rep: Replayer, group: str,
-                           **run_kw) -> tuple[list[int], list[list[int]]]:
-    """run(**run_kw) under a job group; the task count of every stage the
-    run submitted, and per job (in submission order) its stages' task counts
-    (the batch threads inherit the caller's group)."""
+# perfbench's WAL shape: pyarrow-written segments, no Spark schema JSON
+PB_SCHEMA = pa.schema([("log_offset", pa.int64()), ("op", pa.string()),
+                       ("url", pa.string()),
+                       ("warc_ts", pa.timestamp("us", tz="UTC")),
+                       ("html", pa.binary()), ("lang", pa.string())])
+
+
+def _pyarrow_wal(dst: str, **write_kw) -> None:
+    """CFG's events as a pyarrow-written WAL, four files per epoch."""
+    ev = gen_events_pdf(CFG, np.arange(CFG.n_events))
+    for e, part in ev.groupby("epoch"):
+        d = os.path.join(dst, f"epoch={e}")
+        os.makedirs(d)
+        for i, idx in enumerate(np.array_split(np.arange(len(part)), 4)):
+            t = pa.Table.from_pandas(part.iloc[idx][PB_SCHEMA.names],
+                                     schema=PB_SCHEMA, preserve_index=False)
+            pq.write_table(t, os.path.join(d, f"part-{i:05d}.parquet"),
+                           row_group_size=256, **write_kw)
+
+
+def _jobs_of(spark, group: str, fn) -> list[list[int]]:
+    """fn() under a job group; per job it submitted (in submission order)
+    its stages' task counts (pool threads inherit the caller's group)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        rep.run(**run_kw)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -104,6 +125,14 @@ def _replay_counting_tasks(spark, rep: Replayer, group: str,
     for j in sorted(st.getJobIdsForGroup(group)):
         infos = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
         jobs.append([i.numTasks for i in infos if i is not None])
+    return jobs
+
+
+def _replay_counting_tasks(spark, rep: Replayer, group: str,
+                           **run_kw) -> tuple[list[int], list[list[int]]]:
+    """run(**run_kw) under a job group; the task count of every stage the
+    run submitted, and per job its stages' task counts."""
+    jobs = _jobs_of(spark, group, lambda: rep.run(**run_kw))
     return [n for job in jobs for n in job], jobs
 
 
@@ -151,7 +180,7 @@ def test_wal_without_offset_stats_keeps_full_width(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(rp, "summarize", spy)
     par = spark.sparkContext.defaultParallelism
     tasks, _jobs = _replay_counting_tasks(spark, rep, f"sizing-{tmp_path.name}")
-    assert rep._epoch_stats_from_footers(0) is None
+    assert rep._epoch_footers(0).ranges is None
     assert_state_matches(rep, CFG)
     full = exchange_width(par, NB, None)
     assert [tl["exchange_parts"] for tl in rep.batch_timelines] == [full] * 3
@@ -165,11 +194,74 @@ def test_wal_without_offset_stats_keeps_full_width(spark, tmp_path, monkeypatch)
         (n.count(0), max(n)) for n in per_task]
 
 
+def test_full_width_writer_tasks_all_get_rows(spark, tmp_path):
+    """A full-width replay touching every bucket gives every writer task
+    rows: the layout maps (bucket, salt) pairs onto tasks one to one, where
+    hashing the pair collided and left tasks empty."""
+    nb = 16
+    src, log_dir = str(tmp_path / "wal"), str(tmp_path / "foreign")
+    write_event_log(spark, CFG, src, slices=4)
+    _foreign_wal(src, log_dir)  # no row counts: full width
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, work_dir=str(tmp_path / "work"),
+        table_path=str(tmp_path / "pages"), num_buckets=nb,
+        max_events_per_batch=None, max_concurrent_batches=1))
+    rep.run()
+    assert_state_matches(rep, CFG)
+    full = exchange_width(spark.sparkContext.defaultParallelism, nb, None)
+    assert full == nb
+    deltas = [f for fs in rep.table.snapshot().deltas.values() for f in fs]
+    per_batch = Counter(f.split("/")[1] for f in deltas)
+    assert sorted(per_batch.values()) == [nb] * CFG.n_epochs  # every bucket
+    assert [(tl["writer_tasks"], tl["empty_writer_tasks"])
+            for tl in rep.batch_timelines] == [(full, 0)] * CFG.n_epochs
+
+
+def test_rate_capped_plan_on_foreign_wal(spark, tmp_path):
+    """Without offset stats the rate-capped planner aggregates each epoch
+    (no schema-inference job beside it: the footers give the schema even
+    without stats) and plans the slices the footer stats give; offset gaps
+    add the quantile sketch's aggregation."""
+    src, log_dir = str(tmp_path / "wal"), str(tmp_path / "foreign")
+    write_event_log(spark, CFG, src, slices=4)
+    _foreign_wal(src, log_dir)
+
+    def planner(wal: str) -> Replayer:
+        return Replayer(spark, ReplayConfig(
+            log_dir=wal, work_dir=str(tmp_path / "work"),
+            table_path=str(tmp_path / "pages"), num_buckets=NB,
+            max_events_per_batch=300))
+
+    expected = planner(src).plan_batches()
+    got: list = []
+    jobs = _jobs_of(spark, f"plan-{tmp_path.name}",
+                    lambda: got.extend(planner(log_dir).plan_batches()))
+    assert got == expected and len(got) == 4 * CFG.n_epochs
+    # per epoch one min/max/count aggregation: its scan job and, under
+    # AQE, its final stage as a job of its own
+    assert [len(j) for j in jobs] == [1, 2] * CFG.n_epochs, jobs
+
+    # offset gaps (every other offset, one epoch) take the quantile path
+    gap_dir = str(tmp_path / "gaps" / "epoch=0")
+    os.makedirs(gap_dir)
+    t = pq.read_table(os.path.join(log_dir, "epoch=0"))
+    t = t.filter(pc.equal(pc.bit_wise_and(t.column("log_offset"), 1), 0))
+    pq.write_table(t, os.path.join(gap_dir, "part-0.parquet"),
+                   write_statistics=False)
+    got.clear()
+    jobs = _jobs_of(spark, f"gaps-{tmp_path.name}",
+                    lambda: got.extend(planner(str(tmp_path / "gaps")).plan_batches()))
+    assert [len(j) for j in jobs] == [1, 2, 1, 2], jobs  # + the quantile sketch
+    bounds = [lo for *_, lo, _ in got] + [got[-1][-1]]
+    assert len(got) == 2 and bounds[0] == 0 and bounds[-1] == CFG.events_per_epoch - 1
+    assert bounds == sorted(bounds)
+
+
 def test_small_epoch_per_run_is_one_task_in_one_job(spark, tmp_path):
     """A tail: one small epoch per run(). Its batch is one writer job of one
-    task (no shuffle-map job, no exchange), beside at most the epoch's
-    schema-inference job, and still makes one delta file per touched bucket
-    with the oracle's state and quarantine."""
+    task (no shuffle-map job, no exchange, no schema-inference job: the
+    schema comes from the footers), and still makes one delta file per
+    touched bucket with the oracle's state and quarantine."""
     log_dir = str(tmp_path / "wal")
     write_event_log(spark, CFG, log_dir, slices=4)
     rep = Replayer(spark, ReplayConfig(
@@ -180,8 +272,7 @@ def test_small_epoch_per_run_is_one_task_in_one_job(spark, tmp_path):
     for e in range(n_epochs):
         _tasks, jobs = _replay_counting_tasks(
             spark, rep, f"tail-{tmp_path.name}-{e}", stop_after_batches=1)
-        # the writer job last, the schema-inference job (if any) before it
-        assert 1 <= len(jobs) <= 2 and all(j == [1] for j in jobs), jobs
+        assert jobs == [[1]], jobs
     assert len(rep.batch_timelines) == n_epochs
     assert [(tl["exchange_parts"], tl["writer_tasks"], tl["empty_writer_tasks"],
              tl["max_task_events"]) for tl in rep.batch_timelines] == [
@@ -223,17 +314,88 @@ def test_footer_pass_memoized_per_epoch(spark, tmp_path, monkeypatch):
         log_dir=log_dir, work_dir=str(tmp_path / "work"),
         table_path=str(tmp_path / "pages"), num_buckets=NB))
     plan = rep.plan_batches()
-    first = {e: rep._epoch_stats_from_footers(e) for e in rep.log_epochs()}
-    assert all(s is not None and s[2] == CFG.events_per_epoch for s in first.values())
+    first = {e: rep._epoch_footers(e) for e in rep.log_epochs()}
+    assert all(m.rows == CFG.events_per_epoch and m.schema is not None
+               for m in first.values())
 
     def no_footer_reads(*a, **kw):
         raise AssertionError("footer re-read")
 
     monkeypatch.setattr(pq, "ParquetFile", no_footer_reads)
     assert rep.plan_batches() == plan
-    assert {e: rep._epoch_stats_from_footers(e) for e in first} == first
-    assert all(br[1] == CFG.events_per_epoch
-               for br in map(rep._epoch_bytes_rows, first))
+    assert {e: rep._epoch_footers(e) for e in first} == first
+    # reading an epoch opens no footer and submits no Spark job
+    frames = []
+    jobs = _jobs_of(spark, f"read-{tmp_path.name}", lambda: frames.extend(
+        rep.read_epoch(e) for e in first))
+    assert jobs == []
+    assert [df.schema for df in frames] == [m.schema for m in first.values()]
+    assert frames[0].count() == CFG.events_per_epoch
+
+
+# ------------------------------------------------------- epoch schema
+def _wal(spark, kind: str, dst: str) -> None:
+    if kind == "spark":  # with evolution: the last epoch adds fetch_status
+        write_event_log(spark, EventGenConfig(
+            **{**CFG.__dict__, "evo_epoch": CFG.n_epochs - 1}), dst, slices=4)
+    elif kind == "spark_not_null":  # the schema JSON says nullable=false
+        for e in range(CFG.n_epochs):
+            spark.range(e * 100, (e + 1) * 100).select(
+                F.col("id").alias("log_offset"),
+                F.array(F.col("id")).alias("ids"),
+            ).write.parquet(os.path.join(dst, f"epoch={e}"))
+    elif kind == "pyarrow":
+        _pyarrow_wal(dst)
+    else:
+        write_event_log(spark, CFG, dst + "-src", slices=4)
+        _foreign_wal(dst + "-src", dst)
+
+
+@pytest.mark.parametrize("kind", ["spark", "spark_not_null", "pyarrow", "foreign"])
+def test_footer_schema_is_sparks_inferred_schema(spark, tmp_path, kind):
+    log_dir = str(tmp_path / "wal")
+    _wal(spark, kind, log_dir)
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, work_dir=str(tmp_path / "work"),
+        table_path=str(tmp_path / "pages"), num_buckets=NB))
+    schemas = []
+    for e in rep.log_epochs():
+        meta = rep._epoch_footers(e)
+        assert meta.schema is not None
+        assert (meta.ranges is None) == (kind == "foreign")
+        assert meta.schema == spark.read.parquet(rep._epoch_path(e)).schema
+        schemas.append(meta.schema)
+    assert len(schemas) == CFG.n_epochs
+    if kind == "spark":
+        assert ["fetch_status" in s.fieldNames() for s in schemas] == [
+            False] * (CFG.n_epochs - 1) + [True]
+
+
+@pytest.mark.parametrize("case", ["int96", "files_disagree"])
+def test_epoch_schema_falls_back_to_inference(spark, tmp_path, case):
+    log_dir = str(tmp_path / "wal")
+    if case == "int96":  # Spark-written: its schema JSON names no INT96
+        conf = "spark.sql.parquet.outputTimestampType"
+        saved = spark.conf.get(conf)
+        spark.conf.set(conf, "INT96")
+        try:
+            write_event_log(spark, CFG, log_dir, slices=4)
+        finally:
+            spark.conf.set(conf, saved)
+    else:
+        _pyarrow_wal(log_dir)
+        f = os.path.join(log_dir, "epoch=0", "part-00003.parquet")
+        t = pq.read_table(f)
+        pq.write_table(t.append_column("fetch_status", pa.array(
+            [200] * t.num_rows, pa.int32())), f)
+    rep = Replayer(spark, ReplayConfig(
+        log_dir=log_dir, work_dir=str(tmp_path / "work"),
+        table_path=str(tmp_path / "pages"), num_buckets=NB))
+    assert rep._epoch_footers(0).schema is None
+    inferred = spark.read.parquet(rep._epoch_path(0)).schema
+    assert rep.read_epoch(0).schema == inferred
+    assert rep._epoch_footers(0).schema == inferred  # inferred once
+    assert rep.read_epoch(0).count() == CFG.events_per_epoch
 
 
 # ------------------------------------------------------- session conf

@@ -182,7 +182,7 @@ def test_fused_single_python_eval_in_plan(spark, log_and_work):
         # layout exchange
         for rows, layout in ((None, 1), (1_000, 0)):
             stage, _ = rep._writer_stage(
-                rep.read_epoch(0).drop("epoch"), epoch=0,
+                rep.read_epoch(0), epoch=0,
                 slice_dir=work + "/probe", rows=rows, tl={})
             plan = stage._jdf.queryExecution().executedPlan().toString()
             assert plan.count("MapInArrow") == 1, plan

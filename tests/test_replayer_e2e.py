@@ -408,9 +408,9 @@ def test_slice_file_pruning_parity_and_prunes(spark, tmp_path):
     # the footer stats were harvested and a mid-epoch slice really prunes:
     # epoch 0 holds offsets [0, 4000) over 4 files (8 range slices split
     # across 2 epochs), so a 1000-offset slice must read < all files
-    fstats = sliced._epoch_file_stats.get(0)
-    assert fstats, "plan-time footer stats missing"
+    meta = sliced._epoch_footers(0)
+    assert meta.ranges, "plan-time footer stats missing"
     df = sliced._slice_df(0, 1_000, 2_000)
     assert df is not None
     n_files = len(df.inputFiles())
-    assert 0 < n_files < len(fstats), (n_files, len(fstats))
+    assert 0 < n_files < len(meta.files), (n_files, len(meta.files))
