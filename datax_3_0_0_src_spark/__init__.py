@@ -15,7 +15,8 @@ The target is an Iceberg-style lake table of Common-Crawl-like web pages
 (url, warc_ts, html, text, lang) maintained by last-writer-wins replay of a
 binlog/WAL change-event log. Since no Iceberg runtime jars ship in this
 environment, ``lake/`` implements the required subset (atomic snapshot commits,
-copy-on-write MERGE, additive schema evolution, time travel) natively on parquet.
+LWW MERGE as delta commits plus bucket folds, additive schema evolution,
+time travel) natively on parquet.
 """
 
 import sys

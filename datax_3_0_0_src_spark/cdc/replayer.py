@@ -43,7 +43,7 @@ import re
 import threading
 import uuid
 import time
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -102,7 +102,6 @@ class ReplayConfig:
     ts_col: str = "warc_ts"
     seq_col: str = "log_offset"
     op_col: str = "op"
-    extra_table_props: dict = field(default_factory=dict)
     # False: write all valid events as delta rows — the SAME last-writer-wins
     # (ts, offset) rule is applied at read/compact-time resolution, so the
     # final state is identical (tested). True adds a whole-batch LWW
@@ -319,7 +318,6 @@ class Replayer:
                 key=cfg.key,
                 ts_col=cfg.ts_col,
                 num_buckets=cfg.num_buckets,
-                properties=dict(cfg.extra_table_props),
             )
         self.table.compression = cfg.file_compression
 

@@ -1,13 +1,13 @@
 """Incremental materialized-view maintenance over the change data feed.
 
 The consumer side of CDC: a downstream grouped aggregate (count / sum per
-group) kept in sync with a MOR LakeTable by reading ``LakeTable.changes``
-instead of rescanning the table. This is the classic warehouse pattern
-(Delta Live Tables / Flink retract-stream aggregation); the reference's
-analog is chained DataX jobs where a second job re-syncs a derived rollup
-after the base sync lands (job JSONs compose reader->writer stages;
-core/src/main/java/com/alibaba/datax/core/Engine.java drives one such stage
-per run) — here the rollup advances EXACTLY, per version range, without a
+group) kept in sync with a LakeTable (either merge mode) by reading
+``LakeTable.changes`` instead of rescanning the table. This is the classic
+warehouse pattern (Delta Live Tables / Flink retract-stream aggregation); the
+reference's analog is chained DataX jobs where a second job re-syncs a
+derived rollup after the base sync lands (job JSONs compose reader->writer
+stages; core/src/main/java/com/alibaba/datax/core/Engine.java drives one such
+stage per run) — here the rollup advances EXACTLY, per version range, without a
 full recompute.
 
 Why not apply feed rows directly to the aggregate? The feed carries

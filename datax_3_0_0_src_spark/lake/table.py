@@ -4,14 +4,13 @@ Implements the Iceberg subset the CDC engine needs, natively on parquet (no
 Iceberg jars ship in this environment):
 
 - atomic snapshot commits (manifest + pointer swap)            -> exactly-once sinks
-- MERGE INTO by key with LWW ordering, two strategies:
-    copy-on-write ("cow"): touched buckets are resolved and rewritten at merge
-      time — reads stay cheap, writes amplify by table_size/batch_size;
-    merge-on-read ("mor", Iceberg v2 style): the batch's winner rows land as
-      per-bucket DELTA files (write cost O(batch), zero table reads), and the
-      LWW resolution happens at read/compact time. This is what lets ingest
-      throughput scale with cores instead of being serialised on whole-table
-      rewrites (BENCH.md round-1 scaling analysis).
+- MERGE INTO by key with LWW ordering, one write path: the batch's rows land
+    as per-bucket DELTA files (Iceberg v2 merge-on-read; write cost O(batch),
+    zero table reads), which is what lets ingest throughput scale with cores
+    instead of being serialised on whole-table rewrites (BENCH.md round-1
+    scaling analysis). LWW resolves at read time or in a fold. A "mor" merge
+    stops at the delta commit; a "cow" merge follows it with a rewrite fold
+    of exactly the buckets it wrote, so reads of those buckets stay cheap.
 - hash-bucket layout: only buckets touched by a batch change    -> bounded write amp
 - additive schema evolution with null backfill                 -> ALTER TABLE ADD COLUMN
 - tombstoned deletes                                           -> late events can't resurrect rows
@@ -24,13 +23,13 @@ plugin-rdbms-util/src/main/java/com/alibaba/datax/plugin/rdbms/writer/util/Write
 and the commit protocol mirrors hdfswriter's temp-dir + rename
 (hdfswriter/.../HdfsHelper.java:207-243), upgraded to snapshot isolation.
 
-Scale design: a MERGE plans against the manifest only (driver-side KB of JSON),
-reads just the touched buckets' files (partition pruning by construction),
-shuffles once on the merge key (AQE skew-join splits hot keys), and rewrites
-only touched buckets. Untouched data is never read or written. Bucket count is
-chosen at table creation to keep per-bucket rewrite size ~file-group sized at
-the target scale (e.g. 4096 buckets for 100 TB => ~25 GB/bucket, subdivided
-into many parquet files by Spark's maxRecordsPerFile/partition count).
+Scale design: a MERGE writes only the batch (one exchange on the
+(bucket, salt) pair, one file per touched bucket and task) and commits it
+against the manifest (driver-side KB of JSON). A fold reads one bucket's file
+group per task with no exchange, because every file is bucket-pure. Untouched
+buckets are never read or written. Bucket count is chosen at table creation
+to keep per-bucket rewrite size ~file-group sized at the target scale (e.g.
+4096 buckets for 100 TB => ~25 GB/bucket).
 """
 
 from __future__ import annotations
@@ -40,7 +39,7 @@ import re
 import shutil
 import struct
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve here
 import pyarrow as pa  # module-level: arrow_udf type hints must resolve here
@@ -374,7 +373,6 @@ class MergeStats:
     version: int
     touched_buckets: int
     batch_rows: int
-    batch_deletes: int
     new_files: int
 
 
@@ -382,7 +380,7 @@ class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # Parquet codec for files THIS writer produces (deltas, COW bases,
+        # Parquet codec for files THIS writer produces (deltas, appends,
         # fold output). Readers never consult it — parquet files are
         # self-describing, so a table can mix codecs across generations.
         # zstd trades ~15-25% extra compress CPU for ~30-40% smaller files
@@ -843,19 +841,19 @@ class LakeTable:
     def changes(
         self, since_version: int, until_version: int | None = None
     ) -> DataFrame:
-        """Change data feed (Delta CDF / Iceberg changelog-scan equivalent)
-        for MOR-maintained tables: the row-level changes committed in
-        ``(since_version, until_version]``.
+        """Change data feed (Delta CDF / Iceberg changelog-scan equivalent):
+        the row-level changes merged in ``(since_version, until_version]``.
 
-        Zero extra storage: each MOR merge's delta files ARE the changelog
-        (upserts as rows, deletes as tombstone rows, the LWW (ts, offset)
-        attached), so the feed is the per-version set difference of delta
-        file lists — driver-side manifest JSON only — plus a parquet scan of
-        exactly the added files. Fold commits (rewrite or delete-vector) and
-        rebucket move data without adding logical changes and are skipped;
-        a COW merge in the range raises (it folds its changes into rewritten
-        base files and retains no row-level record). Requires the range's
-        manifests to still exist (``expire_snapshots`` keep window).
+        Zero extra storage: every merge commits its batch as delta files, and
+        those files ARE the changelog (upserts as rows, deletes as tombstone
+        rows, the LWW (ts, offset) attached), so the feed is the per-version
+        set difference of delta file lists — driver-side manifest JSON only —
+        plus a parquet scan of exactly the added files. Fold commits (rewrite
+        or delete-vector, including the fold a "cow" merge commits after its
+        delta commit) and rebucket move data without adding logical changes
+        and contribute nothing. Rows written by ``append()`` go straight to
+        the base and are not in the feed. Requires the range's manifests to
+        still exist (``expire_snapshots`` keep window).
 
         Output: the commit-time user columns (schema evolution null-backfills
         older commits) + ``_change_type`` ('upsert' | 'delete'),
@@ -884,13 +882,6 @@ class LakeTable:
             cur = set(s.all_deltas())
             added = sorted(cur - prev)
             prev = cur  # folds only REMOVE deltas — removals are not changes
-            summ = s.summary or {}
-            if summ.get("touched_buckets", 0) and summ.get("merge_mode") != "mor":
-                raise ValueError(
-                    f"v{v} is a copy-on-write merge: its row-level changes "
-                    f"were folded into rewritten base files and cannot be "
-                    f"replayed — the changes feed requires MOR history"
-                )
             latest_schema_json = s.schema_json
             if added:
                 gens.setdefault(s.schema_json, []).extend(
@@ -944,7 +935,7 @@ class LakeTable:
         op_col: str | None = "op",
         delete_op: str = "D",
         properties: dict | None = None,
-        mode: str | None = None,
+        mode: str = "cow",
     ) -> MergeStats:
         """MERGE INTO: last-writer-wins upsert/delete by key.
 
@@ -961,21 +952,33 @@ class LakeTable:
           WHEN NOT MATCHED THEN INSERT * (or tombstone for op='D')
         where "newer" = (s.ts, s.seq) > (t.ts, t._lww_offset).
 
-        ``mode``: "cow" resolves and rewrites touched buckets now (cheap reads,
-        write amplification); "mor" appends the batch as per-bucket delta files
-        (O(batch) writes, zero table reads — resolution deferred to
-        read()/compact()). Default comes from the table property
-        ``merge_mode`` (itself defaulting to "cow").
+        Both modes write the batch as per-bucket delta files in one MOR
+        commit (:meth:`_merge_mor`: O(batch) writes, zero table reads). The
+        ``mode`` decides what follows:
 
+        - "mor": nothing. LWW resolution is deferred to read()/compact(),
+          and ``version`` is the delta commit's.
+        - "cow" (default): a "local" rewrite fold of exactly the buckets that
+          commit wrote (``compact(buckets=..., target_files_per_bucket=1)``),
+          so each touched bucket ends as one resolved base file with no
+          deltas and every untouched bucket keeps its files. That is a second
+          commit: ``version`` is the fold's, and the delta commit before it
+          is what ``changes()`` reports for this batch. The fold picks one
+          LWW winner per key over the whole bucket, so keys that
+          ``append()`` repeated in a touched bucket collapse to one row, as
+          ``read()`` already resolves them once a delta lands there.
+
+        The fold's commit rejects a concurrent fold of the same bucket. If
+        it loses that check, ``merge()`` raises after the delta commit has
+        landed: the batch is applied and reads resolve it, but its buckets
+        stay unfolded until a later ``compact()``.
         """
-        snap = self.snapshot()
-        mode = mode or snap.properties.get("merge_mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
-        key, ts_col, nb = snap.properties["key"], snap.properties["ts_col"], snap.num_buckets
+        snap = self.snapshot()
+        key, ts_col = snap.properties["key"], snap.properties["ts_col"]
         user_schema = self.evolved_schema(snap, batch.schema, seq_col, op_col)
         batch_fields = {f.name: f for f in batch.schema.fields}
-        phys = self._physical_schema(user_schema)
 
         # --- normalize the batch to physical shape ---------------------
         is_del = (
@@ -988,9 +991,6 @@ class LakeTable:
                 c = F.col(f.name)
                 if batch_fields[f.name].dataType != f.dataType:
                     c = c.cast(f.dataType)
-                # else: leave the bare attribute — a no-op cast would discard
-                # the batch's hash(key) output partitioning and force an extra
-                # shuffle in the merge join
             else:
                 c = F.lit(None).cast(f.dataType)
             if f.name not in (key, ts_col):
@@ -999,124 +999,12 @@ class LakeTable:
             cols.append(c.alias(f.name))
         cols.append(F.col(seq_col).cast("long").alias(SYS_OFFSET))
         cols.append(is_del.alias(SYS_DELETED))
-        s = batch.select(*cols)
-
-        # --- plan: touched buckets only --------------------------------
-        # (uncached: recomputing the batch twice beats caching wide binary
-        # rows, which thrashes at high core counts — see cdc/replayer.py)
-        s = s.withColumn(SYS_BUCKET, self._bucket_expr(key))
-        if mode == "mor":
-            return self._merge_mor(snap, s, key, user_schema, properties)
-        agg = s.groupBy(SYS_BUCKET).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(SYS_DELETED).cast("long")).alias("d"),
-        ).collect()
-        per_bucket = {int(r[SYS_BUCKET]): int(r["n"]) for r in agg}
-        batch_deletes = int(sum(r["d"] for r in agg))
-        touched = sorted(per_bucket)
-        batch_rows = int(sum(per_bucket.values()))
-        if not touched:  # empty batch: still commit a (metadata-only) snapshot
-            new_snap = Snapshot(
-                version=snap.version + 1, parent=snap.version,
-                schema_json=user_schema.json(), num_buckets=nb, files=dict(snap.files),
-                properties=_merged_props(snap.properties, properties),
-                summary={"touched_buckets": 0, "batch_rows": 0, "batch_deletes": 0},
-                deltas=dict(snap.deltas),
-                dvs=dict(snap.dvs),
-            )
-            write_snapshot(self.path, new_snap)
-            return MergeStats(new_snap.version, 0, 0, 0, 0)
-
-        touched_files = [f for b in touched for f in snap.bucket_files(b)]
-        touched_deltas = [f for b in touched for f in snap.bucket_deltas(b)]
-        touched_dvs = [f for b in touched for f in snap.bucket_dvs(b)]
-        e = self._read_files(touched_files + touched_deltas, phys)
-        if touched_dvs:
-            # DV-folded buckets carry masked losers in their base files —
-            # drop them before the full-outer resolve (which needs at most
-            # one live row per key)
-            e = self._apply_dvs(e, touched_dvs, touched_files + touched_deltas)
-        if touched_deltas:
-            # a COW merge onto MOR-layered buckets folds their deltas first
-            e = self._resolve_lww(e, key, ts_col)
-
-        # --- LWW full-outer resolve ------------------------------------
-        e, s = e.alias("e"), s.alias("s")
-        joined = e.join(s, F.col(f"e.{key}") == F.col(f"s.{key}"), "full_outer")
-        s_newer = F.col(f"s.{key}").isNotNull() & (
-            F.col(f"e.{key}").isNull()
-            | (F.col(f"s.{ts_col}") > F.col(f"e.{ts_col}"))
-            | ((F.col(f"s.{ts_col}") == F.col(f"e.{ts_col}"))
-               & (F.col(f"s.{SYS_OFFSET}") > F.col(f"e.{SYS_OFFSET}")))
-        )
-        out_cols = [
-            F.when(s_newer, F.col(f"s.{f.name}")).otherwise(F.col(f"e.{f.name}")).alias(f.name)
-            for f in phys.fields
-        ]
-        merged = joined.select(*out_cols).withColumn(SYS_BUCKET, self._bucket_expr(key))
-
-        # Controlled file layout: without this, every join task writes into
-        # every touched bucket => tasks x buckets tiny files, which compounds
-        # into slow snapshot scans. Repartition on (bucket, salt) so the commit
-        # produces ~salt files per bucket while keeping writes parallel.
-        par = self.spark.sparkContext.defaultParallelism
-        write_salt = max(1, par // max(1, len(touched)))
-        merged = merged.repartition(
-            max(len(touched) * write_salt, 1),
-            F.col(SYS_BUCKET),
-            F.pmod(F.xxhash64(F.col(key)), F.lit(write_salt)),
-        )
-
-        # --- write touched buckets, commit snapshot ---------------------
-        version = snap.version + 1
-        # unique dir per write attempt: two committers that both computed
-        # version N can never overwrite each other's files — the manifest's
-        # exclusive link stays the ONLY contention point (the loser's dir is
-        # an unreferenced orphan, reclaimed by expire_snapshots), and a
-        # crashed attempt's dir likewise never collides with the retry's
-        rel_dir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, rel_dir)
-        (merged.write.option("compression", self.compression).mode("errorifexists").partitionBy(SYS_BUCKET).parquet(out_dir))
-
-        written = self._written_buckets(out_dir, rel_dir)
-        from . import skipping
-        skipping.write_dir_stats(
-            self.path, [f for fs in written.values() for f in fs], ts_col)
-        stray = sorted(set(written) - set(touched))
-        if stray:
-            raise RuntimeError(
-                f"merge wrote buckets {stray} outside the planned set {touched} — "
-                f"the batch re-evaluated to other keys than its planning pass "
-                f"(non-deterministic input?)"
-            )
-        new_files: dict[str, list[str]] = {
-            b: list(fs) for b, fs in snap.files.items() if int(b) not in touched
-        }
-        n_new = 0
-        for b, fs in written.items():
-            new_files[str(b)] = fs
-            n_new += len(fs)
-        new_deltas = {
-            b: list(fs) for b, fs in snap.deltas.items() if int(b) not in touched
-        }
-        new_dvs = {  # rewritten buckets carry winners only — their DVs die
-            b: list(fs) for b, fs in snap.dvs.items() if int(b) not in touched
-        }
-        new_snap = Snapshot(
-            version=version, parent=snap.version,
-            schema_json=user_schema.json(), num_buckets=nb, files=new_files,
-            properties=_merged_props(snap.properties, properties),
-            summary={
-                "touched_buckets": len(touched),
-                "batch_rows": batch_rows,
-                "batch_deletes": batch_deletes,
-                "new_files": n_new,
-            },
-            deltas=new_deltas,
-            dvs=new_dvs,
-        )
-        write_snapshot(self.path, new_snap)
-        return MergeStats(version, len(touched), batch_rows, batch_deletes, n_new)
+        s = batch.select(*cols).withColumn(SYS_BUCKET, self._bucket_expr(key))
+        stats, written = self._merge_mor(snap, s, key, user_schema, properties)
+        if mode == "mor" or not written:
+            return stats
+        fold = self.compact(buckets=written, target_files_per_bucket=1)
+        return replace(stats, version=fold.version, new_files=fold.new_files)
 
     def _written_buckets(self, out_dir: str, rel_dir: str) -> dict[int, list[str]]:
         """{bucket: sorted file list} for a just-written partitioned dir."""
@@ -1159,13 +1047,14 @@ class LakeTable:
         key: str,
         user_schema: StructType,
         properties: dict | None,
-    ) -> MergeStats:
+    ) -> tuple[MergeStats, list[int]]:
         """Merge-on-read apply: write the (pre-deduped) batch as per-bucket
         delta files with Spark's writer and commit them
         (:meth:`commit_deltas`). No table reads, no join — per-batch cost is
         O(batch) regardless of table size; resolution happens in
         read()/compact(). The row count and ts stats come from the parquet
-        footers (driver-side metadata, no extra Spark job)."""
+        footers (driver-side metadata, no extra Spark job). Returns the
+        commit's stats and the sorted buckets it wrote."""
         from concurrent.futures import ThreadPoolExecutor
 
         from . import skipping
@@ -1186,8 +1075,8 @@ class LakeTable:
         batch_rows = sum(int(n) for n, _lo, _hi in footers.values())
         new_snap = self.commit_deltas(
             written, user_schema, batch_rows=batch_rows, properties=properties)
-        return MergeStats(new_snap.version, len(written), batch_rows, -1,
-                          len(files))
+        stats = MergeStats(new_snap.version, len(written), batch_rows, len(files))
+        return stats, sorted(written)
 
     @staticmethod
     def delta_dir(snap: Snapshot) -> str:
@@ -1234,9 +1123,7 @@ class LakeTable:
                 summary={
                     "touched_buckets": len(written),
                     "batch_rows": batch_rows,
-                    "batch_deletes": -1,
                     "new_files": n_new,
-                    "merge_mode": "mor",
                 },
                 deltas=new_deltas,
                 dvs=dict(base.dvs),
@@ -1257,7 +1144,7 @@ class LakeTable:
             .withColumn(SYS_BUCKET, self._bucket_expr(key))
         )
         version = snap.version + 1
-        rel_dir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"  # see merge()
+        rel_dir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"  # see delta_dir()
         out_dir = os.path.join(self.path, rel_dir)
         out.write.option("compression", self.compression).mode("errorifexists").partitionBy(SYS_BUCKET).parquet(out_dir)
         new_files = {b: list(fs) for b, fs in snap.files.items()}
@@ -1279,7 +1166,7 @@ class LakeTable:
             dvs=dict(snap.dvs),
         )
         write_snapshot(self.path, new_snap)
-        return MergeStats(version, 0, 0, 0, n_new)
+        return MergeStats(version, 0, 0, n_new)
 
     # --------------------------------------------------------- maintenance
     def compact(self, *, target_files_per_bucket: int = 1,
@@ -1332,7 +1219,7 @@ class LakeTable:
                 if snap.bucket_deltas(b) and (buckets is None or b in buckets)
             )
             if not todo:
-                return MergeStats(snap.version, 0, 0, 0, 0)
+                return MergeStats(snap.version, 0, 0, 0)
             return self._fold_dv(snap, todo)
         todo = sorted(
             b for b in candidates
@@ -1340,7 +1227,7 @@ class LakeTable:
             and (buckets is None or b in buckets)
         )
         if not todo:
-            return MergeStats(snap.version, 0, 0, 0, 0)
+            return MergeStats(snap.version, 0, 0, 0)
         return self._compact_local(snap, todo, target_files_per_bucket)
 
     def _compact_local(
@@ -1695,7 +1582,7 @@ class LakeTable:
             )
 
         new_snap = self._commit_cas(layer, "DV fold commit")
-        return MergeStats(new_snap.version, len(todo), 0, 0, n_new)
+        return MergeStats(new_snap.version, len(todo), 0, n_new)
 
     def _commit_fold(
         self,
@@ -1744,7 +1631,7 @@ class LakeTable:
             )
 
         new_snap = self._commit_cas(layer, "compact commit")
-        return MergeStats(new_snap.version, len(todo), 0, 0, n_new)
+        return MergeStats(new_snap.version, len(todo), 0, n_new)
 
     def rebucket(
         self,
@@ -1835,7 +1722,7 @@ class LakeTable:
                 "rebucket is exclusive; retry when the table is quiet"
             ) from None
         return MergeStats(
-            new_snap.version, len(written), 0, 0,
+            new_snap.version, len(written), 0,
             sum(len(fs) for fs in written.values()),
         )
 

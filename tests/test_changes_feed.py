@@ -1,10 +1,8 @@
 """LakeTable.changes — the change-data-feed consumer API (Delta CDF /
 Iceberg changelog-scan equivalent): per-version row-level changes derived
-from the MOR delta-file lists, fold-transparent, COW-rejecting."""
+from the delta-file lists, fold-transparent, COW merges included."""
 
 from __future__ import annotations
-
-import pytest
 
 from test_dv_fold import seed_mor
 from test_lake_table import batch, make_table
@@ -48,15 +46,19 @@ def test_changes_skips_folds_and_crosses_them(spark, tmp_path):
     assert len(rows_of(t.changes(0))) == 10
 
 
-def test_changes_rejects_cow_history(spark, tmp_path):
+def test_changes_reports_cow_merge_at_its_delta_commit(spark, tmp_path):
+    """A COW merge commits its batch as delta files (v4) and then folds the
+    touched bucket (v5): the batch's rows appear at the delta commit's
+    version and the fold commit adds nothing to the feed."""
     t = seed_mor(spark, str(tmp_path / "t"))
-    t.merge(batch(spark, [
+    stats = t.merge(batch(spark, [
         ("c", "2024-01-06T00:00:00", "<c>", "C9", "de", 60, "U"),
     ]), mode="cow")
-    with pytest.raises(ValueError, match="copy-on-write"):
-        t.changes(0)
-    # a range that STOPS before the COW commit still works
-    assert len(rows_of(t.changes(0, 3))) == 9
+    assert stats.version == 5
+    assert t.snapshot(5).summary.get("compacted_buckets") == 1
+    assert rows_of(t.changes(3)) == [(4, "c", "upsert", 60)]
+    assert rows_of(t.changes(4, 5)) == []
+    assert len(rows_of(t.changes(0))) == 10
 
 
 def test_changes_single_scan_over_many_commits(spark, tmp_path):

@@ -79,6 +79,22 @@ def test_refresh_across_folds_and_with_measure(spark, tmp_path):
     assert_mv_equals_full(t, mv, new_head)
 
 
+def test_refresh_across_cow_merge(spark, tmp_path):
+    """A COW merge is a delta commit plus a fold: a refresh over its range
+    sees the batch through the delta commit and stays exact."""
+    t = seed_mor(spark, str(tmp_path / "t"))
+    head = t.snapshot().version
+    mv = refresh_group_agg(t, None, 0, head, group_cols=["lang"])
+    stats = t.merge(batch(spark, [
+        ("d", "2024-03-01T00:00:00", "<d>", "D1", "en", 97, "U"),
+        ("f", "2024-03-01T00:00:01", "<f>", "F0", "de", 98, "I"),
+    ]), mode="cow")
+    assert stats.version == head + 2  # delta commit, then the fold
+    mv = refresh_group_agg(t, mv, head, stats.version, group_cols=["lang"])
+    assert_mv_equals_full(t, mv, stats.version)
+    assert dict(mv_rows(mv)) == {"de": 2, "en": 3}
+
+
 def test_sum_measure_over_evolved_numeric_column(spark, tmp_path):
     """sum(measure) MV where the measure column arrived via additive schema
     evolution — pre-evolution rows contribute NULL (ignored by sum), and the

@@ -95,7 +95,7 @@ def test_lake_writer_merge_mode(spark, tmp_path):
                    "parameter": {"path": p, "key": "url", "tsCol": "warc_ts",
                                  "schema": None}},
     })
-    assert stats.version == 1
+    assert stats.version == 2  # the delta commit (v1), then its fold (v2)
     t = LakeTable.load(spark, p)
     assert t.read().count() == 1
 

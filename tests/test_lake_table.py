@@ -1,4 +1,5 @@
-"""LakeTable: snapshot commits, COW merge, LWW, tombstones, evolution, time travel."""
+"""LakeTable: snapshot commits, COW and MOR merges, LWW, tombstones, evolution,
+time travel."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from pyspark.sql.types import (
 )
 
 from datax_3_0_0_src_spark.lake import LakeTable
+from datax_3_0_0_src_spark.lake.table import xxhash64
 
 TS = lambda s: dt.datetime.fromisoformat(s)  # noqa: E731
 
@@ -110,9 +112,56 @@ def test_cow_touches_only_dirty_buckets(spark, tmp_table_dir):
     files_v1 = dict(t.snapshot().files)
     stats = t.merge(batch(spark, [("u0", "2024-01-02T00:00:00", "<x>", "T0b", "en", 99, "U")]))
     assert stats.touched_buckets == 1
-    files_v2 = dict(t.snapshot().files)
-    changed = [b for b in files_v1 if files_v1[b] != files_v2.get(b)]
-    assert len(changed) == 1  # 7 of 8 buckets' files reused verbatim
+    hit = str(xxhash64("u0", StringType()) % 8)
+    snap = t.snapshot()
+    files_v2 = dict(snap.files)
+    assert files_v2[hit] != files_v1[hit]
+    # the 7 untouched buckets' file lists are reused verbatim
+    assert ({b: fs for b, fs in files_v2.items() if b != hit}
+            == {b: fs for b, fs in files_v1.items() if b != hit})
+    # the touched bucket was folded: no deltas left, at most one base file
+    assert not snap.all_deltas()
+    assert len(snap.bucket_files(int(hit))) <= 1
+
+
+def test_cow_merge_commits_delta_layer_then_fold(spark, tmp_table_dir):
+    """A COW merge is two snapshots: the MOR delta commit, then the fold of
+    the buckets it wrote. merge() returns the fold's version."""
+    t = make_table(spark, tmp_table_dir)
+    stats = t.merge(batch(spark, [
+        ("a", "2024-01-01T00:00:00", "<x>", "A1", "en", 0, "I"),
+        ("b", "2024-01-01T00:00:01", "<x>", "B1", "en", 1, "I"),
+    ]))
+    assert stats.version == 2 == t.snapshot().version
+    assert stats.batch_rows == 2
+    layer, fold = t.snapshot(1), t.snapshot(2)
+    assert layer.files == {} and layer.all_deltas()
+    assert layer.summary["batch_rows"] == 2
+    assert fold.summary["compacted_buckets"] == stats.touched_buckets
+    assert not fold.all_deltas() and fold.all_files()
+    assert stats.new_files == len(fold.all_files())
+    assert state(t, version=1) == state(t, version=2)
+
+
+def test_cow_merge_collapses_appended_duplicates_in_touched_bucket(
+        spark, tmp_table_dir):
+    """append() may leave repeated keys in a bucket. A COW merge that
+    touches the bucket folds it with one LWW winner per key, the rows read()
+    resolves once a delta lands there."""
+    from collections import Counter
+
+    t = make_table(spark, tmp_table_dir, nb=1)
+    t.append(batch(spark, [
+        ("a", "2024-01-01T00:00:00", "<a>", "A1", "en", 0, "I"),
+        ("a", "2024-01-01T00:00:01", "<a>", "A2", "en", 1, "I"),
+        ("b", "2024-01-01T00:00:02", "<b>", "B1", "en", 2, "I"),
+        ("b", "2024-01-01T00:00:03", "<b>", "B2", "en", 3, "I"),
+    ]).drop("log_offset", "op"))
+    assert t.read().count() == 4  # blind append keeps every row
+    t.merge(batch(spark, [("a", "2024-01-02T00:00:00", "<a>", "A3", "en", 4, "U")]))
+    rows = t.read().collect()
+    assert Counter(r["url"] for r in rows) == {"a": 1, "b": 1}
+    assert {r["url"]: r["text"] for r in rows} == {"a": "A3", "b": "B2"}
 
 
 def test_schema_evolution_additive_null_backfill(spark, tmp_table_dir):
@@ -130,13 +179,40 @@ def test_schema_evolution_additive_null_backfill(spark, tmp_table_dir):
 
 def test_time_travel_and_expire(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir)
-    t.merge(batch(spark, [("a", "2024-01-01T00:00:00", "<x>", "V1", "en", 0, "I")]))
-    t.merge(batch(spark, [("a", "2024-01-01T00:01:00", "<x>", "V2", "en", 1, "U")]))
-    assert state(t, version=1)["a"][1] == "V1"
-    assert state(t, version=2)["a"][1] == "V2"
+    v1 = t.merge(batch(spark, [("a", "2024-01-01T00:00:00", "<x>", "V1", "en", 0, "I")])).version
+    v2 = t.merge(batch(spark, [("a", "2024-01-01T00:01:00", "<x>", "V2", "en", 1, "U")])).version
+    assert state(t, version=v1)["a"][1] == "V1"
+    assert state(t, version=v2)["a"][1] == "V2"
     removed = t.expire_snapshots(keep_last=1)
     assert removed >= 1
     assert state(t)["a"][1] == "V2"  # current still intact
+
+
+def test_expire_reclaims_cow_merge_delta_layer(spark, tmp_table_dir):
+    """The delta files a COW merge commits before its fold are garbage once
+    the fold is the only kept snapshot: expire unlinks them and removes
+    their write dir, so the extra commit leaks no storage."""
+    import os
+
+    t = make_table(spark, tmp_table_dir)
+    t.merge(batch(spark, [("a", "2024-01-01T00:00:00", "<x>", "A1", "en", 0, "I"),
+                          ("b", "2024-01-01T00:00:01", "<x>", "B1", "en", 1, "I")]))
+    layer = t.snapshot(1).all_deltas()
+    assert layer
+    delta_dirs = {f.split("/")[1] for f in layer}
+    assert all(d.startswith("d") for d in delta_dirs)
+    removed = t.expire_snapshots(keep_last=1)
+    assert removed == len(layer)
+    data = os.path.join(t.path, "data")
+    assert not delta_dirs & set(os.listdir(data))
+    live = set(t.snapshot().all_files())
+    on_disk = {
+        os.path.relpath(os.path.join(root, fn), t.path)
+        for root, _d, fns in os.walk(data) for fn in fns if fn.endswith(".parquet")
+    }
+    assert on_disk == live
+    assert state(t) == {"a": (TS("2024-01-01T00:00:00"), "A1"),
+                        "b": (TS("2024-01-01T00:00:01"), "B1")}
 
 
 def test_merge_properties_carry_epoch(spark, tmp_table_dir):
@@ -273,15 +349,6 @@ def test_mor_schema_evolution_and_time_travel(spark, tmp_table_dir):
     v1 = t.read(version=1)
     assert v1.schema.fieldNames() == ["url", "warc_ts", "html", "text", "lang"]
     assert [r["url"] for r in v1.collect()] == ["a"]
-
-
-def test_mor_default_via_table_property(spark, tmp_table_dir):
-    t = LakeTable.create(
-        spark, tmp_table_dir, PAGES_SCHEMA, key="url", ts_col="warc_ts",
-        num_buckets=4, properties={"merge_mode": "mor"},
-    )
-    t.merge(batch(spark, [("a", "2024-01-01T00:00:00", "<x>", "A1", "en", 0, "I")]))
-    assert t.snapshot().files == {} and t.snapshot().all_deltas()
 
 
 def test_cow_merge_onto_mor_deltas_folds_them(spark, tmp_table_dir):
