@@ -137,23 +137,29 @@ def write_snapshot(table_dir: str, snap: Snapshot) -> None:
 
 
 def current_version(table_dir: str) -> int | None:
-    ptr = os.path.join(_meta_dir(table_dir), CURRENT_PTR)
-    if not os.path.exists(ptr):
-        # pointer may lag a committed manifest after a crash between the two
-        # writes; recover by scanning manifest names (driver-side, cheap).
-        meta = _meta_dir(table_dir)
+    """The newest committed version: the pointer, then ``stat`` of
+    ``v{ptr+1}``, ``v{ptr+2}``, ... until one is missing.
+
+    The pointer is advisory: a committer that crashed between its manifest
+    link and its pointer swap leaves a newer manifest behind, and that
+    manifest wins. Versions above the pointer are dense (committers claim
+    ``v{head+1}`` by exclusive ``os.link``), so the probe stops at the first
+    gap and costs O(1) stats however many manifests ``_meta/`` holds. Only a
+    missing pointer (a crash before the first swap) lists ``_meta/``."""
+    meta = _meta_dir(table_dir)
+    try:
+        with open(os.path.join(meta, CURRENT_PTR)) as f:
+            v = int(f.read().strip())
+    except FileNotFoundError:
         if not os.path.isdir(meta):
             return None
         versions = [
             int(f[1:9]) for f in os.listdir(meta) if f.startswith("v") and f.endswith(".json")
         ]
         return max(versions) if versions else None
-    with open(ptr) as f:
-        ptr_v = int(f.read().strip())
-    # the pointer is advisory; a manifest committed after a crash wins
-    meta = _meta_dir(table_dir)
-    versions = [int(f[1:9]) for f in os.listdir(meta) if f.startswith("v") and f.endswith(".json")]
-    return max([ptr_v, *versions]) if versions else ptr_v
+    while os.path.exists(_manifest_path(table_dir, v + 1)):
+        v += 1
+    return v
 
 
 def read_snapshot(table_dir: str, version: int | None = None) -> Snapshot | None:

@@ -1,31 +1,25 @@
-"""Advisory data-skipping sidecars: per-file ts stats + per-bucket key blooms.
+"""Advisory data-skipping sidecars: per-file ts stats.
 
-Two file-skipping indices layered OUTSIDE the transactional core (the
+One file-skipping index layered OUTSIDE the transactional core (the
 manifest stays the single source of correctness; everything here is
 advisory — a missing or stale sidecar only costs pruning, never rows):
+**ts stats** (`_stats.json`, one per immutable write dir): min/max of the
+table's ts column per data file, returned by the tasks that wrote the files
+(the replay writer stage, the rewrite fold) or harvested from the footers
+the MOR merge opens for row counts — zero extra I/O on the hot apply path.
+Written AFTER the data files and BEFORE the manifest commit, so a crashed
+attempt's stats die with its orphan dir. CDC delta files are naturally
+time-clustered (each micro-batch covers a slice of WAL time), so
+`scan_ts_range` skips almost every file outside the window — the same
+metadata-based split pruning Iceberg plans from its manifest value ranges.
 
-- **ts stats** (`_stats.json`, one per immutable write dir): min/max of the
-  table's ts column per data file, returned by the tasks that wrote the
-  files (the replay writer stage, the rewrite fold) or harvested from the
-  footers the MOR merge opens for row counts — zero extra I/O on the hot
-  apply path. Written AFTER the data files and BEFORE the manifest commit,
-  so a crashed attempt's stats die with its orphan dir. CDC delta files are
-  naturally time-clustered (each micro-batch covers a slice of WAL time),
-  so `scan_ts_range` skips almost every file outside the window — the same
-  metadata-based split pruning Iceberg plans from its manifest value ranges.
-
-- **key blooms** (`_blooms/b{bucket}.parquet`, atomically replaced): a
-  blocked bloom filter per data/delta file over ``xxhash64(key)``, built by
-  one Spark job at MAINTENANCE time (compact cadence), exactly like
-  Iceberg's Puffin blobs — never on the ingest hot path. Point lookups
-  (`LakeTable.lookup`) then touch one bucket (hash pruning), probe the
-  bucket's bloom sidecar driver-side (KB–MB), and read only the files that
-  may hold the key. min/max CANNOT serve this: keys are hash-distributed
-  across a bucket, so every file's [min,max] spans the key space; the
-  bloom is the index with discriminating power. No false negatives by
-  construction: a file is only skipped when its own bloom row rejects
-  every probed key; files without a row (e.g. deltas layered after the
-  build) are always kept.
+Point lookups (`LakeTable.lookup`) need no sidecar: they hash their keys to
+buckets on the driver and read only those buckets' key columns there with
+pyarrow, so a lookup submits no Spark job. They keep no per-file key
+index: on the DV-folded table `cdc_point_lookup` reads, probing a per-file
+key bloom saved less time than the spread between lookups. min/max cannot
+serve point lookups either: keys are hash-distributed across a bucket, so
+every file's [min,max] spans the key space.
 
 Reference parity: DataX plans splits from driver-side metadata too (table
 ranges in RdbmsRangeSplitWrap, reference
@@ -33,19 +27,14 @@ plugin-rdbms-util/src/main/java/com/alibaba/datax/plugin/rdbms/util/RdbmsRangeSp
 but has no per-file skipping because it streams sources once; this module is
 what replaces full scans when the same data is SERVED back out of the lake.
 
-100 TB story: stats are O(files) driver JSON sharded per write dir (loaded
-only for candidate buckets); blooms are O(bucket) sidecars probed only for
-the buckets a lookup hashes to (1 bucket per key of 4096); the bloom BUILD
-is a single columnar scan of (key) with per-file Arrow-batched aggregation —
-the one full pass, amortized over every later point lookup, and restrictable
-to changed buckets via ``buckets=``.
+100 TB story: stats are O(files) driver JSON sharded per write dir, loaded
+only for candidate buckets.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from datetime import timezone
@@ -53,8 +42,6 @@ from datetime import timezone
 import numpy as np
 
 STATS_NAME = "_stats.json"
-BLOOM_DIR = "_blooms"
-_HASH_MUL = np.uint64(0x9E3779B97F4A7C15)  # odd step for double hashing
 
 
 # ---------------------------------------------------------------- ts stats
@@ -230,175 +217,4 @@ def prune_by_ts(
         if (hi_us is not None and s[0] > hi_us) or (lo_us is not None and s[1] < lo_us):
             continue
         kept.append(f)
-    return kept, len(rel_files) - len(kept)
-
-
-# ------------------------------------------------------------------ blooms
-def _bit_positions(h: np.ndarray, k: int, nbits: int) -> np.ndarray:
-    """(k, n) bit positions via double hashing of the 64-bit key hash.
-    Shared verbatim by build and probe => no false negatives possible."""
-    h = h.astype(np.uint64, copy=False)
-    h1 = h ^ (h >> np.uint64(33))
-    h2 = (h * _HASH_MUL) | np.uint64(1)
-    ks = np.arange(k, dtype=np.uint64)[:, None]
-    return ((h1[None, :] + ks * h2[None, :]) % np.uint64(nbits)).astype(np.int64)
-
-
-def _bloom_path(table_path: str, bucket: int) -> str:
-    return os.path.join(table_path, BLOOM_DIR, f"b{bucket:05d}.parquet")
-
-
-def build_blooms(
-    spark,
-    table,
-    *,
-    buckets: list[int] | None = None,
-    bits_per_key: int = 10,
-) -> dict[int, int]:
-    """Build per-file key blooms for the given buckets (default: all with
-    data) and atomically replace each bucket's sidecar. Returns
-    {bucket: files_covered}.
-
-    Two executor-side stages in one Spark job — the driver never holds a
-    bitmap (round-6 verdict item 4: the old driver collect pulled ~1.25 MB
-    of bloom per 128 MB file, a driver OOM at 800k-file scale):
-
-    1. per-FILE groups fold their key hashes into a power-of-two bitmap
-       (Arrow-batched pandas, numpy bit ops);
-    2. the per-file bloom rows shuffle to per-BUCKET groups, each of which
-       writes its own sidecar parquet (tmp + atomic rename — advisory data,
-       losing a race to a concurrent rebuild is harmless) and returns one
-       (bucket, files_covered) row.
-
-    The driver collects only those O(buckets) count rows. Executors write
-    directly to the table path — the same shared-FS reach _compact_local
-    already requires."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    snap = table.snapshot()
-    key = snap.properties["key"]
-    all_b = sorted({int(b) for b in set(snap.files) | set(snap.deltas)})
-    todo = all_b if buckets is None else [b for b in all_b if b in set(buckets)]
-    rel_by_bucket = {
-        b: snap.bucket_files(b) + snap.bucket_deltas(b) for b in todo
-    }
-    rel_all = [f for fs in rel_by_bucket.values() for f in fs]
-    if not rel_all:
-        return {}
-    paths = [os.path.join(table.path, f) for f in rel_all]
-    kbits = max(1, int(round(bits_per_key * 0.6931)))  # k = m/n * ln2
-    table_path = table.path
-    # bucket id comes from the file PATH (the write layout is bucket-pure),
-    # so stage-2 grouping never re-derives it from key hashes
-    want = {b: set(fs) for b, fs in rel_by_bucket.items()}
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Invariant: h must arrive as exact int64. If h were ever made
-        # nullable (e.g. a future guard that nulls bad keys), one NaN in a
-        # batch would demote the whole column to float64 and corrupt every
-        # |hash| >= 2^53 — the bloom would then disagree with lookup()'s
-        # exact int64 probe => FALSE NEGATIVES (silently missing rows).
-        # Guard rather than convert: precision is already gone by here.
-        if not pd.api.types.is_integer_dtype(pdf["h"].dtype):  # pragma: no cover
-            raise TypeError(f"bloom fold needs exact int64 hashes, got {pdf['h'].dtype}")
-        h = np.unique(pdf["h"].to_numpy(dtype=np.int64).view(np.uint64))
-        n = max(len(h), 1)
-        nbits = 1 << max(6, int(np.ceil(np.log2(n * bits_per_key))))
-        bitmap = np.zeros(nbits // 8, dtype=np.uint8)
-        pos = _bit_positions(h, kbits, nbits).ravel()
-        np.bitwise_or.at(bitmap, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-        # URI file path -> table-relative (same rule as _apply_dvs: all
-        # after the LAST "/data/" is inside the table's own data root)
-        rel = "data/" + pdf["fp"].iloc[0].split("/data/")[-1]
-        m = re.search(r"_bucket=(-?\d+)/", rel)
-        return pd.DataFrame(
-            {"b": [int(m.group(1)) if m else -1], "file": [rel],
-             "nkeys": [len(h)], "nbits": [nbits],
-             "k": [kbits], "bits": [bitmap.tobytes()]}
-        )
-
-    def write_sidecar(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        b = int(pdf["b"].iloc[0])
-        pdf = pdf.sort_values("file")
-        # only files the build's snapshot listed for this bucket: a row from
-        # a foreign path shape (regex miss) must not land in a sidecar
-        keep = pdf["file"].isin(want.get(b, set()))
-        pdf = pdf[keep]
-        if not len(pdf):
-            return pd.DataFrame({"b": pd.Series([], dtype="int32"),
-                                 "n_files": pd.Series([], dtype="int64")})
-        t = pa.table({
-            "file": pdf["file"].tolist(),
-            "nkeys": pa.array(pdf["nkeys"].tolist(), pa.int64()),
-            "nbits": pa.array(pdf["nbits"].tolist(), pa.int32()),
-            "k": pa.array(pdf["k"].tolist(), pa.int32()),
-            "bits": pa.array(pdf["bits"].tolist(), pa.binary()),
-        })
-        path = _bloom_path(table_path, b)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-        os.close(fd)
-        pq.write_table(t, tmp, compression="zstd")
-        os.replace(tmp, path)
-        return pd.DataFrame({"b": [b], "n_files": [len(pdf)]})
-
-    os.makedirs(os.path.join(table.path, BLOOM_DIR), exist_ok=True)
-    rows = (
-        spark.read.parquet(*paths)
-        .select(
-            # xxhash64 is non-nullable by construction (a null key hashes to
-            # the seed, 42 — verified), so the Arrow transfer lands in pandas
-            # as exact int64; null-key rows are indexed under 42, consistent
-            # with merge's bucketing, and lookup() drops None probes anyway
-            F.xxhash64(F.col(key)).alias("h"),
-            F.col("_metadata.file_path").alias("fp"),
-        )
-        .groupBy("fp")
-        .applyInPandas(
-            fold, "b int, file string, nkeys long, nbits int, k int, bits binary")
-        .groupBy("b")
-        .applyInPandas(write_sidecar, "b int, n_files long")
-        .collect()  # O(buckets) count rows only — never a bitmap
-    )
-    return {int(r["b"]): int(r["n_files"]) for r in rows}
-
-
-def probe_blooms(
-    table_path: str, bucket: int, rel_files: list[str], khashes: np.ndarray
-) -> tuple[list[str], int]:
-    """Keep the files of one bucket that may contain ANY of the probed key
-    hashes (int64 xxhash64 values). Files without a bloom row are kept.
-    Returns (kept, n_skipped)."""
-    import pyarrow.parquet as pq
-
-    path = _bloom_path(table_path, bucket)
-    if not os.path.exists(path) or len(rel_files) == 0 or len(khashes) == 0:
-        return list(rel_files), 0
-    try:
-        t = pq.read_table(path)
-    except (OSError, ValueError):
-        return list(rel_files), 0
-    rows = {
-        f: (nb, k, b)
-        for f, nb, k, b in zip(
-            t["file"].to_pylist(), t["nbits"].to_pylist(),
-            t["k"].to_pylist(), t["bits"].to_pylist(),
-        )
-    }
-    h = np.asarray(khashes, dtype=np.int64).view(np.uint64)
-    kept = []
-    for f in rel_files:
-        row = rows.get(f)
-        if row is None:
-            kept.append(f)
-            continue
-        nbits, k, bits = row
-        bitmap = np.frombuffer(bits, dtype=np.uint8)
-        pos = _bit_positions(h, k, nbits)  # (k, n)
-        present = (bitmap[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
-        if bool(present.all(axis=0).any()):  # some key passes all k probes
-            kept.append(f)
     return kept, len(rel_files) - len(kept)

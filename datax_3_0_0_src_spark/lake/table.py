@@ -34,6 +34,7 @@ to keep per-bucket rewrite size ~file-group sized at the target scale (e.g.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
@@ -210,39 +211,89 @@ def xxhash64(value, dtype: DataType) -> int:
         f"xxhash64: unsupported key {value!r} of type {dtype.simpleString()}")
 
 
+# null ts sorts at pandas' Timestamp.min, below every real timestamp
+_NS_FLOOR = pd.Timestamp.min.value
+_NS_PER_UNIT = {"s": 1_000_000_000, "ms": 1_000_000, "us": 1_000, "ns": 1}
+
+
+def _lww_ts_off(t: "pa.Table", ts_col: str):
+    """The LWW order columns of ``t`` as numpy int64: ts in epoch ns (null
+    ts at the floor) and offset (null or absent offset -1).
+
+    Called per file before any concat: a bucket can mix legacy INT96 files
+    (naive ns, values UTC instants) with engine-written us/UTC files, and
+    casting either to int64 yields the same UTC-instant epoch. Offsets stay
+    int64 end to end (``fill_null(-1)`` before numpy): a nullable int64
+    would become float64 and offsets >= 2^53 would lose precision there,
+    letting an equal-ts tiebreak pick a different winner than
+    ``_resolve_lww``'s exact long comparison."""
+    import numpy as np
+
+    if SYS_OFFSET in t.column_names:
+        off = (t.column(SYS_OFFSET).cast("int64").fill_null(-1)
+               .combine_chunks().to_numpy(zero_copy_only=False))
+    else:
+        off = np.full(len(t), -1, dtype=np.int64)
+    ts_arr = t.column(ts_col).combine_chunks()
+    scale = _NS_PER_UNIT.get(getattr(ts_arr.type, "unit", "ns"), 1)
+    ts = (ts_arr.cast(pa.int64()).fill_null(0)
+          .to_numpy(zero_copy_only=False)) * np.int64(scale)
+    if ts_arr.null_count:
+        ts[ts_arr.is_null().to_numpy(zero_copy_only=False)] = _NS_FLOOR
+    return ts, off
+
+
+def _lww_winners(codes, ts, off):
+    """The engine's LWW rule, shared by the folds and ``lookup``: for each
+    key code, the position of its row with the max (ts, offset), ties going
+    to the last position. ``ts`` and ``off`` come from :func:`_lww_ts_off`
+    (so null ts sits at the floor and null offset is -1), ``codes`` groups
+    equal keys. Integer lexsort, never an object-dtype sort of the keys."""
+    import numpy as np
+
+    # lexsort is stable, keys ascending, last key primary:
+    # order by (code, ts, off, position)
+    order = np.lexsort((off, ts, codes))
+    sc = codes[order]
+    is_last = np.empty(len(sc), dtype=bool)
+    if len(sc):
+        is_last[:-1] = sc[1:] != sc[:-1]
+        is_last[-1] = True
+    return order[is_last]
+
+
+def _key_codes(keys: "pa.ChunkedArray"):
+    """Group codes of a key column for :func:`_lww_winners`: Arrow's
+    ``dictionary_encode`` on the raw buffers (no Python str per key), null
+    keys all in group -1."""
+    return (keys.combine_chunks().dictionary_encode().indices.fill_null(-1)
+            .to_numpy(zero_copy_only=False))
+
+
 def _lww_winner_pick(paths: list, key: str, ts_col: str):
     """Pass-1 NARROW LWW winner pick over one bucket's parquet files (runs
-    inside executor tasks — pyarrow/pandas/numpy only, no Spark).
+    inside executor tasks — pyarrow/numpy only, no Spark).
 
-    Reads just (key, ts, offset) from each file, computes the per-key winner
-    as max (ts, coalesce(offset, -1)) with a last-concat-position tiebreak —
-    exactly the engine's LWW rule (see _resolve_lww) — via factorize codes +
-    integer lexsort (the measured fast path; keys are urls, an object-dtype
-    multi-key sort is the hotspot this avoids).
+    Reads just (key, ts, offset) from each file and picks the per-key
+    winner with :func:`_lww_winners` — exactly the engine's LWW rule (see
+    _resolve_lww).
 
     Returns ``(widx, file_all, row_all, schemas)``: ``widx`` indexes winner
     rows in the virtual concatenation of all files in ``paths`` order;
     ``file_all``/``row_all`` map every concat index to (file ordinal,
     within-file row position); ``schemas`` is each file's arrow schema.
 
-    Round-7: the key/ts columns stay in Arrow end to end — the previous
-    pandas path materialised every key as a Python str object and hashed
-    them with pd.factorize, which at 2M-row buckets was the DV fold's
-    superlinear hotspot (round-6 verdict item 3). ``dictionary_encode`` on
-    the raw Arrow string buffer produces the same grouping (code VALUES
-    differ, but the winner per group — and hence widx as a SET — is
-    identical; both downstream consumers are order-insensitive: _fold_dv
-    takes the complement, _compact_local re-sorts by (file, row)).
+    The key column stays in Arrow end to end: materialising every key as a
+    Python str and hashing them with pd.factorize was the DV fold's
+    superlinear hotspot at 2M-row buckets. ``dictionary_encode`` gives the
+    same grouping (code VALUES differ, but the winner per group — and hence
+    widx as a SET — is identical; both downstream consumers are
+    order-insensitive: _fold_dv takes the complement, _compact_local
+    re-sorts by (file, row)).
     """
     import numpy as np
-    import pandas as pd
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # null ts pinned to the same floor the pandas path used (Timestamp.min),
-    # so a null can never beat a real timestamp and ties behave identically
-    ns_floor = pd.Timestamp.min.value
-    unit_scale = {"s": 1_000_000_000, "ms": 1_000_000, "us": 1_000, "ns": 1}
     schemas = []
     k_chunks, ts_parts, off_parts, file_parts = [], [], [], []
     for i, p in enumerate(paths):
@@ -251,51 +302,88 @@ def _lww_winner_pick(paths: list, key: str, ts_col: str):
         want = [c for c in (key, ts_col, SYS_OFFSET)
                 if c in pf.schema_arrow.names]
         nt = pq.read_table(p, columns=want, use_threads=False)
-        # offsets stay int64 END TO END: fill_null(-1) before any numpy
-        # conversion — a nullable int64 would otherwise become float64 and
-        # offsets >= 2^53 would lose precision there, letting an equal-ts
-        # tiebreak pick a different winner than _resolve_lww's exact long
-        # comparison (round-6 advice #3)
-        if SYS_OFFSET in nt.column_names:
-            off_np = (nt.column(SYS_OFFSET).cast("int64").fill_null(-1)
-                      .combine_chunks().to_numpy(zero_copy_only=False))
-        else:
-            off_np = np.full(len(nt), -1, dtype=np.int64)
-        # ts -> int64 ns per file BEFORE concat (a bucket can mix legacy
-        # INT96 files — arrow-surfaced as naive ns, values UTC instants —
-        # with engine-written us/UTC files); casting tz-aware to int64
-        # yields the same UTC-instant epoch the old tz_convert path did
-        ts_arr = nt.column(ts_col).combine_chunks()
-        scale = unit_scale.get(getattr(ts_arr.type, "unit", "ns"), 1)
-        ts_np = (ts_arr.cast(pa.int64()).fill_null(0)
-                 .to_numpy(zero_copy_only=False)) * np.int64(scale)
-        if ts_arr.null_count:
-            null_np = ts_arr.is_null().to_numpy(zero_copy_only=False)
-            ts_np[null_np] = ns_floor
+        ts, off = _lww_ts_off(nt, ts_col)
         k_chunks.append(nt.column(key))
-        ts_parts.append(ts_np)
-        off_parts.append(off_np)
+        ts_parts.append(ts)
+        off_parts.append(off)
         file_parts.append(np.full(len(nt), i, dtype=np.int32))
-    k_all = pa.chunked_array(k_chunks).combine_chunks()
-    codes = (k_all.dictionary_encode().indices.fill_null(-1)
-             .to_numpy(zero_copy_only=False))
+    codes = _key_codes(pa.chunked_array(k_chunks))
     ts_all = np.concatenate(ts_parts)
     off_all = np.concatenate(off_parts)
     file_all = np.concatenate(file_parts)
     sizes = [len(a) for a in file_parts]
     row_all = np.concatenate(
         [np.arange(n, dtype=np.int64) for n in sizes])
-    del k_chunks, k_all, ts_parts, off_parts, file_parts
-    # lexsort is stable, keys ascending, last key primary:
-    # order by (code, ts, off, concat-position)
-    order = np.lexsort((off_all, ts_all, codes))
-    sc = codes[order]
-    is_last = np.empty(len(sc), dtype=bool)
-    if len(sc):
-        is_last[:-1] = sc[1:] != sc[:-1]
-        is_last[-1] = True
-    widx = order[is_last]
-    return widx, file_all, row_all, schemas
+    del k_chunks, ts_parts, off_parts, file_parts
+    return _lww_winners(codes, ts_all, off_all), file_all, row_all, schemas
+
+
+def _ts_kinds(phys: StructType) -> dict:
+    """{column: "utc" | "ntz"} of ``phys``'s timestamp columns, the engine
+    repr :func:`_norm_ts` normalises them to."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    return {
+        f.name: "utc" if isinstance(f.dataType, TimestampType) else "ntz"
+        for f in phys.fields
+        if isinstance(f.dataType, (TimestampType, TimestampNTZType))
+    }
+
+
+def _norm_ts(s: "pa.Schema", ts_kinds: dict) -> "pa.Schema":
+    """``s`` with its timestamp fields in the engine repr (us, UTC-or-naive
+    per ``ts_kinds``). Legacy INT96 files surface as naive ns (their values
+    are UTC instants); unconverted they would write TIMESTAMP(NANOS), which
+    Spark's reader rejects, and ``unify_schemas`` refuses to merge naive
+    with aware."""
+    for name, kind in ts_kinds.items():
+        if name in s.names:
+            want_t = pa.timestamp("us", tz="UTC" if kind == "utc" else None)
+            i = s.names.index(name)
+            s = s.set(i, s.field(i).with_type(want_t).remove_metadata())
+    return s
+
+
+def _unified_schema(schemas: list, ts_kinds: dict) -> "pa.Schema":
+    """One arrow schema for files of every evolution generation: their
+    timestamp fields normalised (:func:`_norm_ts`), then unified by name
+    (first-seen column order)."""
+    return pa.unify_schemas([_norm_ts(s, ts_kinds) for s in schemas],
+                            promote_options="permissive")
+
+
+def _cast_to(t: "pa.Table", target: "pa.Schema") -> "pa.Table":
+    """Align a file's table to ``target`` (:func:`_unified_schema`):
+    columns the file lacks (pre-evolution files) null-filled, the rest cast
+    to the target type (timestamp repr, string width)."""
+    cols = []
+    for f in target:
+        if f.name in t.column_names:
+            c = t.column(f.name)
+            if c.type != f.type:
+                c = c.cast(f.type)
+        else:
+            c = pa.nulls(len(t), f.type)
+        cols.append(c)
+    return pa.Table.from_arrays(cols, schema=target)
+
+
+def _take_rows(pf, pos) -> "pa.Table":
+    """Rows ``pos`` (sorted within-file positions) of the open parquet file
+    ``pf``, decoding only the row groups that hold them."""
+    import numpy as np
+
+    md = pf.metadata
+    sizes = np.array([md.row_group(g).num_rows for g in range(md.num_row_groups)],
+                     dtype=np.int64)
+    starts = np.concatenate(([0], np.cumsum(sizes)))
+    rg = np.searchsorted(starts, pos, side="right") - 1
+    groups = np.unique(rg)
+    # where each read group starts in the concatenation read_row_groups returns
+    read_at = np.concatenate(([0], np.cumsum(sizes[groups])[:-1]))
+    local = pos - starts[rg] + read_at[np.searchsorted(groups, rg)]
+    return pf.read_row_groups(groups.tolist(), use_threads=False).take(
+        pa.array(local))
 
 
 def _every_row(paths: list):
@@ -313,48 +401,47 @@ def _every_row(paths: list):
             [pf.schema_arrow for pf in pfs])
 
 
-# Python-worker-lifetime cache of loaded delete vectors, keyed by a bucket's
-# DV sidecar path tuple: {file_rel: sorted int64 positions}. Lives at module
-# level so reused workers keep it across tasks (guide §4.5); DV sidecar paths
-# are content-unique (uuid-suffixed dirs), so stale entries can never alias a
-# new fold's vectors — at most they linger until the worker dies.
-_DV_POS_CACHE: dict[tuple, dict] = {}
+# Loaded delete vectors kept per process, keyed by a bucket's DV sidecar
+# path tuple. Python workers are reused across tasks and the driver serves
+# lookups for as long as it runs, so the cache is bounded: an
+# LRU of DV_CACHE_SIZE buckets' vectors, at least one per bucket of the
+# measured tables (16 and 32 buckets), so a full scan of one of them never
+# reloads a sidecar. DV sidecar paths are content-unique (uuid-suffixed
+# dirs), so stale entries can never alias a new fold's vectors.
+DV_CACHE_SIZE = 64
 
 
+@functools.lru_cache(maxsize=DV_CACHE_SIZE)
 def _dv_positions_cached(dv_paths: tuple) -> dict:
     """{table-relative data file -> sorted np.int64 positions} for one
-    bucket's delete-vector sidecars (executor-side, cached per worker)."""
-    out = _DV_POS_CACHE.get(dv_paths)
-    if out is None:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    bucket's delete-vector sidecars. The dict is shared by every caller of
+    the same ``dv_paths``: read it, never mutate it."""
+    import numpy as np
+    import pyarrow.parquet as pq
 
-        out = {}
-        for p in dv_paths:
-            t = pq.read_table(p, use_threads=False)
-            fcol = t.column("file").combine_chunks()
-            if pa.types.is_dictionary(fcol.type):
-                idx = fcol.indices.to_numpy(zero_copy_only=False)
-                names = fcol.dictionary.to_pylist()
-            else:
-                idx, uniques = __import__("pandas").factorize(
-                    fcol.to_pandas())
-                names = list(uniques)
-            pos = t.column("pos").to_numpy(zero_copy_only=False)
-            order = np.argsort(idx, kind="stable")
-            fs, ps = idx[order], pos[order]
-            bounds = np.flatnonzero(np.diff(fs)) + 1
-            for code, chunk in zip(
-                fs[np.concatenate(([0], bounds))] if len(fs) else [],
-                np.split(ps, bounds),
-            ):
-                f = names[int(code)]
-                prev = out.get(f)
-                chunk = np.sort(chunk)
-                out[f] = chunk if prev is None else np.sort(
-                    np.concatenate([prev, chunk]))
-        _DV_POS_CACHE[dv_paths] = out
+    out = {}
+    for p in dv_paths:
+        t = pq.read_table(p, use_threads=False)
+        fcol = t.column("file").combine_chunks()
+        if pa.types.is_dictionary(fcol.type):
+            idx = fcol.indices.to_numpy(zero_copy_only=False)
+            names = fcol.dictionary.to_pylist()
+        else:
+            idx, uniques = pd.factorize(fcol.to_pandas())
+            names = list(uniques)
+        pos = t.column("pos").to_numpy(zero_copy_only=False)
+        order = np.argsort(idx, kind="stable")
+        fs, ps = idx[order], pos[order]
+        bounds = np.flatnonzero(np.diff(fs)) + 1
+        for code, chunk in zip(
+            fs[np.concatenate(([0], bounds))] if len(fs) else [],
+            np.split(ps, bounds),
+        ):
+            f = names[int(code)]
+            prev = out.get(f)
+            chunk = np.sort(chunk)
+            out[f] = chunk if prev is None else np.sort(
+                np.concatenate([prev, chunk]))
     return out
 
 
@@ -673,18 +760,6 @@ class LakeTable:
         return df
 
     # -------------------------------------------------- data-skipping reads
-    def build_key_blooms(
-        self, *, buckets: list[int] | None = None, bits_per_key: int = 10
-    ) -> dict[int, int]:
-        """Build/refresh the advisory per-file key blooms (skipping.py) for
-        point-lookup pruning. A maintenance op (compact cadence), never on
-        the ingest hot path — Iceberg's Puffin pattern. Returns
-        {bucket: files_covered}."""
-        from . import skipping
-
-        return skipping.build_blooms(
-            self.spark, self, buckets=buckets, bits_per_key=bits_per_key)
-
     def lookup(
         self,
         keys: list,
@@ -692,69 +767,73 @@ class LakeTable:
         version: int | None = None,
         include_deleted: bool = False,
     ) -> DataFrame:
-        """Pruned point lookup: current-state rows for the given key values.
+        """Point lookup: current-state rows for the given key values, read
+        on the driver with pyarrow. The result is a local DataFrame, so
+        ``lookup(...).collect()`` submits no Spark job.
 
-        Three skipping layers, all metadata/driver-side before the one scan:
-        bucket hashing (each key touches 1 of num_buckets file groups), the
-        bucket's bloom sidecar (per-file membership of xxhash64(key) — no
-        false negatives; files without a bloom row, e.g. deltas layered
-        after the last build, are always read), then an exact ``IN`` filter
-        pushed to the parquet scan. LWW stays exact under pruning because a
-        key's rows are confined to its bucket and blooms never skip a file
-        that holds the key. At 100 TB a 5-key lookup plans from KB of
-        manifest + bloom sidecar reads and scans a handful of files.
+        The lookup pins one snapshot and reads only the buckets its keys
+        hash to (:func:`xxhash64`, the JVM's bucket hash). Of each of their
+        base and delta files it decodes the key column alone and finds the
+        hit positions with ``pc.is_in``, less those the bucket's delete
+        vectors mask. It reads the physical columns only of files with hits,
+        and only the row groups holding them. Files of every evolution
+        generation align to the snapshot's schema as in the fold
+        (:func:`_unified_schema`, :func:`_cast_to`). When those buckets
+        hold deltas, the fold's LWW rule (:func:`_lww_winners`) keeps one
+        row per key; tombstones drop unless ``include_deleted``. LWW stays
+        exact because a key's rows are confined to its bucket.
 
-        Intended for point reads (up to ~thousands of keys — the key list
-        travels as an IN literal and is hashed on the driver by
-        :func:`xxhash64`, so the lookup submits only its scan and its LWW
-        resolve); for bulk key sets join against :meth:`read` instead.
-        Diagnostics land in ``self.last_prune``."""
+        Intended for point reads (up to ~thousands of keys); for bulk key
+        sets join against :meth:`read` instead. Diagnostics land in
+        ``self.last_prune`` (``bloom_skipped`` stays 0: no bloom index is
+        kept)."""
         import numpy as np
-
-        from . import skipping
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         snap = self.snapshot(version)
         user_schema = StructType.fromJson(__import__("json").loads(snap.schema_json))
         phys = self._physical_schema(user_schema)
+        phys_arrow = to_arrow_schema(phys)
         key, ts_col = snap.properties["key"], snap.properties["ts_col"]
         keys = [k for k in dict.fromkeys(keys) if k is not None]
-        if not keys:
-            self.last_prune = {"candidate_files": 0, "bloom_skipped": 0,
-                               "scanned_files": 0}
-            return self.spark.createDataFrame([], user_schema)
         ktype = user_schema[key].dataType
-        by_bucket: dict[int, list[int]] = {}
-        for k in keys:
-            h = xxhash64(k, ktype)
-            by_bucket.setdefault(h % snap.num_buckets, []).append(h)
-        files: list[str] = []
-        dfiles: list[str] = []
-        vfiles: list[str] = []
-        cand = skipped = 0
-        for b, hs in sorted(by_bucket.items()):
-            harr = np.array(hs, dtype=np.int64)
-            bf, bd = snap.bucket_files(b), snap.bucket_deltas(b)
-            cand += len(bf) + len(bd)
-            kept_f, s1 = skipping.probe_blooms(self.path, b, bf, harr)
-            kept_d, s2 = skipping.probe_blooms(self.path, b, bd, harr)
-            skipped += s1 + s2
-            files += kept_f
-            dfiles += kept_d
-            vfiles += snap.bucket_dvs(b)
-        self.last_prune = {"candidate_files": cand, "bloom_skipped": skipped,
-                           "scanned_files": len(files) + len(dfiles)}
-        df = self._read_files(files + dfiles, phys)
-        # exact IN filter FIRST (pushed into the parquet scan), THEN the DV
-        # positional mask — the two row-level predicates commute, and a
-        # python-UDF filter above the scan would otherwise block pushdown
-        df = df.filter(F.col(key).isin(keys))
-        if vfiles:
-            df = self._apply_dvs(df, vfiles, files + dfiles)
-        if dfiles:
-            df = self._resolve_lww(df, key, ts_col)
+        buckets = sorted({xxhash64(k, ktype) % snap.num_buckets for k in keys})
+        wanted = pa.array(keys, phys_arrow.field(key).type)
+        hits = []  # (open parquet file, sorted hit positions)
+        files_read = 0
+        lww = False
+        for b in buckets:
+            deltas = snap.bucket_deltas(b)
+            files = snap.bucket_files(b) + deltas
+            files_read += len(files)
+            lww = lww or bool(deltas)
+            dvs = tuple(os.path.join(self.path, f) for f in snap.bucket_dvs(b))
+            masked = _dv_positions_cached(dvs) if dvs else {}
+            for f in files:
+                pf = pq.ParquetFile(os.path.join(self.path, f))
+                kcol = pf.read(columns=[key], use_threads=False).column(key)
+                pos = np.flatnonzero(pc.is_in(
+                    kcol, value_set=wanted.cast(kcol.type)).to_numpy())
+                if f in masked:
+                    pos = pos[~np.isin(pos, masked[f])]
+                if len(pos):
+                    hits.append((pf, pos))
+        self.last_prune = {"candidate_files": files_read, "bloom_skipped": 0,
+                           "scanned_files": files_read}
+        target = _unified_schema(
+            [phys_arrow] + [pf.schema_arrow for pf, _ in hits], _ts_kinds(phys))
+        t = pa.concat_tables(
+            [_cast_to(_take_rows(pf, pos), target) for pf, pos in hits]
+            or [target.empty_table()])
+        if lww:
+            t = t.take(_lww_winners(
+                _key_codes(t.column(key)), *_lww_ts_off(t, ts_col)))
         if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-        return df.select(*user_schema.fieldNames())
+            t = t.filter(pc.invert(t.column(SYS_DELETED).fill_null(False)))
+        return self.spark.createDataFrame(
+            t.select(user_schema.fieldNames()), user_schema)
 
     def scan_ts_range(
         self,
@@ -1252,20 +1331,11 @@ class LakeTable:
         its file count."""
         import json as _json
 
-        from pyspark.sql.types import TimestampNTZType, TimestampType
-
         key, ts_col = snap.properties["key"], snap.properties["ts_col"]
         user_schema = StructType.fromJson(_json.loads(snap.schema_json))
         # Spark-compatible timestamp output: TimestampType must land as
-        # parquet TIMESTAMP(MICROS, adjustedToUTC) — legacy INT96 input files
-        # surface in Arrow as naive ns (their values ARE UTC instants), and
-        # writing those back unconverted yields TIMESTAMP(NANOS), which
-        # Spark's reader rejects
-        ts_kinds = {
-            f.name: "utc" if isinstance(f.dataType, TimestampType) else "ntz"
-            for f in self._physical_schema(user_schema).fields
-            if isinstance(f.dataType, (TimestampType, TimestampNTZType))
-        }
+        # parquet TIMESTAMP(MICROS, adjustedToUTC) (see _norm_ts)
+        ts_kinds = _ts_kinds(self._physical_schema(user_schema))
         folded_files = {b: set(snap.bucket_files(b)) for b in todo}
         folded_deltas = {b: set(snap.bucket_deltas(b)) for b in todo}
         rel_dir = f"data/c{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
@@ -1288,23 +1358,6 @@ class LakeTable:
 
             from .skipping import TsRange
 
-            def cast_to(t: "pa.Table", target: "pa.Schema") -> "pa.Table":
-                """Align a file's table to the unified output schema: missing
-                columns (pre-evolution files) null-filled, timestamp repr
-                normalised (legacy INT96 surfaces as naive ns — values are UTC
-                instants; unconverted they'd write TIMESTAMP(NANOS), which
-                Spark's reader rejects)."""
-                cols = []
-                for f in target:
-                    if f.name in t.column_names:
-                        c = t.column(f.name)
-                        if c.type != f.type:
-                            c = c.cast(f.type)
-                    else:
-                        c = pa.nulls(len(t), f.type)
-                    cols.append(c)
-                return pa.Table.from_arrays(cols, schema=target)
-
             for pdf in batches:
                 for b, files_json, lww in zip(
                         pdf["bucket"], pdf["files"], pdf["lww"]):
@@ -1320,26 +1373,8 @@ class LakeTable:
                     widx, file_all, row_all, schemas = (
                         _lww_winner_pick(paths, key, ts_col) if lww
                         else _every_row(paths))
-                    # unified output schema across evolution generations.
-                    # Timestamp fields are normalized to the engine repr
-                    # (us, UTC-or-naive per ts_kinds) in EVERY input schema
-                    # BEFORE unify: legacy INT96 files surface as naive ns
-                    # and unify_schemas refuses to merge naive-vs-aware, so
-                    # a bucket mixing generations would otherwise fail here
-                    def _norm_ts(s: "pa.Schema") -> "pa.Schema":
-                        for name, kind in ts_kinds.items():
-                            if name in s.names:
-                                want_t = pa.timestamp(
-                                    "us", tz="UTC" if kind == "utc" else None)
-                                i = s.names.index(name)
-                                s = s.set(
-                                    i,
-                                    s.field(i).with_type(want_t).remove_metadata())
-                        return s
-
-                    target = pa.unify_schemas(
-                        [_norm_ts(s) for s in schemas],
-                        promote_options="permissive")
+                    # unified output schema across evolution generations
+                    target = _unified_schema(schemas, ts_kinds)
                     # ---- pass 2 (streaming): one file in memory at a time;
                     # rows land in (file, row) order — identical to the old
                     # whole-bucket concat+take — and rotate across ~n_out
@@ -1366,7 +1401,7 @@ class LakeTable:
                             rows = by_file.get(i)
                             if rows is None or not len(rows):
                                 continue  # fully superseded file: never read wide
-                            t = cast_to(
+                            t = _cast_to(
                                 pq.read_table(p, use_threads=False), target
                             ).take(pa.array(np.sort(rows)))
                             pos = 0

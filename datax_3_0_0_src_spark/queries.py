@@ -212,10 +212,10 @@ _LOOKUP_READY: list[str] = []  # in-process build-once latch for the base table
 
 
 def _lookup_table(spark):
-    """Replay the deterministic WAL into a FOLDED + BLOOMED lake table —
-    shared base for the pruned-read queries (cdc_point_lookup,
-    cdc_ts_range_scan). Rebuilt once per process (the replay is seeded, the
-    fold/bloom build deterministic maintenance), reused by the second query."""
+    """Replay the deterministic WAL into a DV-FOLDED lake table — shared
+    base for the pruned-read queries (cdc_point_lookup, cdc_ts_range_scan).
+    Rebuilt once per process (the replay is seeded, the fold deterministic
+    maintenance), reused by the second query."""
     import shutil
 
     from .cdc.gen import EventGenConfig, write_event_log
@@ -242,22 +242,20 @@ def _lookup_table(spark):
     # maintenance that makes reads prunable: the DV MINOR fold resolves LWW
     # (ts pruning becomes safe per bucket) while keeping the per-batch
     # time-clustered delta files in place — a rewrite fold would coalesce
-    # each bucket's whole history into one file and kill ts pruning — then
-    # the bloom build adds point-lookup file skipping
+    # each bucket's whole history into one file and kill ts pruning
     rep.table.compact(strategy="dv")
-    rep.table.build_key_blooms()
     _LOOKUP_READY.append("ok")
     return rep.table
 
 
 def cdc_point_lookup(spark, sf_dir):
-    """Bloom-pruned point lookup (lake/skipping.py): serve current-state rows
-    for a key set out of the replayed lake table, planning from bucket
-    hashing + per-file key blooms instead of a full scan — the read-side
-    counterpart of the MOR ingest path (Iceberg Puffin-style index). The key
-    set is every state url whose hashed path ends in '77' (deterministic,
-    ~1/256 of keys); the oracle applies the same predicate to the replay's
-    LWW state."""
+    """Point lookup (LakeTable.lookup): serve current-state rows for a key
+    set out of the replayed, DV-folded lake table. The keys hash to their
+    buckets on the driver, which reads only those buckets' files with
+    pyarrow, masks delete-vector losers and picks LWW winners: the lookup
+    itself submits no Spark job. The key set is every state url whose
+    hashed path ends in '77' (deterministic, ~1/256 of keys); the oracle
+    applies the same predicate to the replay's LWW state."""
     t = _lookup_table(spark)
     keys = [r["url"] for r in
             t.read().filter(F.col("url").like("%77")).select("url").collect()]

@@ -510,8 +510,13 @@ def test_local_fold_mixed_int96_and_micros_files(spark, tmp_path):
         ("u1", "2026-01-01T09:00:00", "<html>old</html>", "old", "en", 3, "U"),
         ("u2", "2026-01-01T11:00:00", "<html>new</html>", "new", "en", 4, "U"),
     ]), mode="mor")
+    # the driver-side lookup aligns both reprs with the fold's functions
+    unfolded = state(t)
+    assert {r["url"]: (r["warc_ts"], r["text"])
+            for r in t.lookup(["u1", "u2"]).collect()} == unfolded
     t.compact(target_files_per_bucket=1, strategy="local")
     got = state(t)
+    assert got == unfolded
     assert got["u1"][1] == "a"      # INT96 instant beat the older micros row
     assert got["u2"][1] == "new"    # newer micros row beat the INT96 instant
     snap = t.snapshot()

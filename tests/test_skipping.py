@@ -1,8 +1,9 @@
-"""Data-skipping sidecars: per-file ts stats, bloom point lookups, pruned scans.
+"""Data-skipping sidecars: per-file ts stats, driver-side point lookups,
+pruned scans.
 
 Covers lake/skipping.py + the LakeTable lookup()/scan_ts_range() read paths:
 stats harvested on every write path, ts pruning only where LWW-safe (folded
-buckets), bloom pruning with zero false negatives, and sidecar GC."""
+buckets), exact lookups that submit no Spark job, and sidecar GC."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from pyspark.sql.types import (
 
 from datax_3_0_0_src_spark.lake import LakeTable
 from datax_3_0_0_src_spark.lake.skipping import STATS_NAME
+from datax_3_0_0_src_spark.lake.table import xxhash64
 
 TS = lambda s: dt.datetime.fromisoformat(s)  # noqa: E731
 
@@ -143,29 +145,26 @@ def test_lookup_without_blooms_exact(spark, tmp_table_dir):
     assert t.last_prune["candidate_files"] <= len(t.snapshot().all_deltas())
 
 
-def test_lookup_bloom_pruning_no_false_negatives(spark, tmp_table_dir):
+def test_lookup_exact_after_rewrite_fold(spark, tmp_table_dir):
     t = _fill(spark, make_table(spark, tmp_table_dir))
     t.compact(strategy="local", target_files_per_bucket=3)
-    covered = t.build_key_blooms()
-    assert sum(covered.values()) == len(t.snapshot().all_files())
+    snap = t.snapshot()
     full = state(t.read())
-    # every key must come back exactly (bloom has no false negatives)
-    for k in list(full)[:16]:
-        got = state(t.lookup([k]))
-        assert got == {k: full[k]}
-    # and a single-key lookup scans fewer files than its bucket holds
-    t.lookup([URLS_A[0]])
-    assert t.last_prune["bloom_skipped"] >= 0
-    assert t.last_prune["scanned_files"] <= t.last_prune["candidate_files"]
-    # missing key: bloom may prune EVERYTHING in the bucket
+    for k in full:
+        assert state(t.lookup([k])) == {k: full[k]}
+        # every file of the key's bucket is read, no other bucket's
+        b = xxhash64(k, StringType()) % snap.num_buckets
+        assert t.last_prune == {
+            "candidate_files": len(snap.bucket_files(b)), "bloom_skipped": 0,
+            "scanned_files": len(snap.bucket_files(b))}
+    assert state(t.lookup(list(full) + ["https://never.example/"])) == full
     assert state(t.lookup(["https://never.example/"])) == {}
 
 
-def test_lookup_sees_deltas_layered_after_bloom_build(spark, tmp_table_dir):
+def test_lookup_sees_deltas_layered_after_fold(spark, tmp_table_dir):
     t = _fill(spark, make_table(spark, tmp_table_dir))
     t.compact(strategy="local")
-    t.build_key_blooms()
-    # new delta AFTER the bloom build: updates + a fresh key
+    # new delta AFTER the fold: updates + a fresh key
     t.merge(batch(spark, [
         (URLS_A[0], "2024-01-09T00:00:00", 900, "U"),
         ("https://new.example/1", "2024-01-09T01:00:00", 901, "U"),
@@ -173,7 +172,7 @@ def test_lookup_sees_deltas_layered_after_bloom_build(spark, tmp_table_dir):
     got = state(t.lookup([URLS_A[0], "https://new.example/1"]))
     assert got[URLS_A[0]][0] == TS("2024-01-09T00:00:00")
     assert "https://new.example/1" in got
-    # tombstone after bloom build must hide the key
+    # a tombstone after the fold must hide the key
     t.merge(batch(spark, [(URLS_B[0], "2024-01-09T02:00:00", 902, "D")]),
             mode="mor")
     assert state(t.lookup([URLS_B[0]])) == {}
@@ -182,7 +181,6 @@ def test_lookup_sees_deltas_layered_after_bloom_build(spark, tmp_table_dir):
 def test_lookup_after_dv_fold(spark, tmp_table_dir):
     t = _fill(spark, make_table(spark, tmp_table_dir))
     t.compact(strategy="dv")  # minor fold: losers masked by delete vectors
-    t.build_key_blooms()
     full = state(t.read())
     for k in (URLS_A[0], URLS_A[15], URLS_B[3]):
         assert state(t.lookup([k])) == {k: full[k]}
@@ -223,10 +221,11 @@ def _jobs(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_lookup_runs_only_scan_and_resolve_jobs(spark, tmp_path):
+def test_lookup_submits_no_spark_job(spark, tmp_path):
     """A lookup over more than 32 files (Spark's default threshold for a
-    parallel listing job) submits only its scan and LWW-resolve jobs: keys
-    hash on the driver and the named files are stat'ed serially."""
+    parallel listing job) submits no Spark job: keys hash on the driver,
+    the files are read there with pyarrow and the result is a local
+    DataFrame."""
     t = make_table(spark, str(tmp_path / "t"), nb=2)
     urls = URLS_A[:8]
     for i in range(18):  # 18 MOR layers, each touching both buckets
@@ -240,7 +239,7 @@ def test_lookup_runs_only_scan_and_resolve_jobs(spark, tmp_path):
     rows, n_jobs = _jobs(spark, f"lookup-{tmp_path.name}",
                          lambda: t.lookup(keys).collect())
     assert t.last_prune["scanned_files"] > 32
-    assert n_jobs <= 2
+    assert n_jobs == 0
     assert {r["url"]: (r["warc_ts"], r["text"]) for r in rows} == want
     # the last layer (day 18) wins every key
     assert {v[1] for v in want.values()} == {
@@ -257,7 +256,7 @@ def test_dv_folded_read_builds_without_jobs(spark, tmp_table_dir):
     assert n_jobs == 0  # no path-hash job, no listing job
     assert state(df) == full
     lk, n_jobs = _jobs(spark, "dv-lookup", lambda: t.lookup(URLS_A[:3]).collect())
-    assert n_jobs <= 2
+    assert n_jobs == 0
     assert {r["url"]: (r["warc_ts"], r["text"]) for r in lk} == {
         k: full[k] for k in URLS_A[:3]}
 
